@@ -119,7 +119,7 @@ def suite_plan(args, cp, data, work, plan):
                                                             os.path.basename(data)))
     suite.prepare(names)
     # passes run until the window reaches --seconds; one pass takes longer
-    # than the benchmark's 15 s on a 4-core machine
+    # than the benchmark's 10 s on a 4-core machine
     plan["passes"] = workloads.suite_orders(names, args.seed, 3)
 
     def check(op):
