@@ -106,6 +106,9 @@ def run_engine(cp, plan, work, timeout):
     cmd = ["java"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", p + "=ALL-UNNAMED"]
+    # compiler and GC threads live for the whole run, so the traced run's
+    # per-thread CPU snapshots at the window's edges see all of their CPU
+    cmd += ["-XX:-UseDynamicNumberOfCompilerThreads", "-XX:-UseDynamicNumberOfGCThreads"]
     cmd += ["-Xmx3g", "-Djava.io.tmpdir=" + tmp, "-Dspark.ui.enabled=false",
             "-cp", cp, "perfbench.Main", plan_path, result_path]
     with open(os.path.join(work, "engine.log"), "w") as log:

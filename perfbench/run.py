@@ -39,8 +39,6 @@ END_TO_END = {
     "setup_s": "s", "op_mean_ms": "ms", "ops_per_s": "1/s", "cpu_ms_per_op": "ms",
     "space_amp": "ratio",
 }
-_FAMILIES = ("agg", "graph", "pipeline", "dedup", "ts", "tpch", "sim", "sample",
-             "join", "win", "text", "other")
 # per-layer metrics (--trace 1): (name, unit, better); "/op" = per operation
 PER_LAYER = (
     [("lat.op_p50_ms", "ms", "lower"), ("lat.op_tail_ms", "ms", "lower"),
@@ -48,7 +46,7 @@ PER_LAYER = (
      ("api.exec_ms_p50", "ms", "lower"), ("api.jobs_per_req", "count", "lower"),
      ("api.rows_read_per_row_out", "ratio", "lower"),
      ("ops.construct_s", "s", "lower"), ("ops.action_s", "s", "lower")]
-    + [(f"ops.cpu_s.{f}", "s", "lower") for f in _FAMILIES]
+    + [(f"ops.cpu_s.{f}", "s", "lower") for f in workloads.FAMILIES + ("other",)]
     + [("tables.load_s", "s", "lower"), ("shared.build_s", "s", "lower"),
        ("shared.build_wall_s", "s", "lower"), ("shared.cached_mb", "MB", "lower"),
        ("plan.analysis_s", "s/op", "lower"), ("plan.optimization_s", "s/op", "lower"),
@@ -82,6 +80,16 @@ PER_LAYER = (
 SETUP_REPS = 3
 # space_amp is read after this many writes of the window (insert, update)
 SPACE_WRITES = 2
+# A run's operations are sized from --seconds at a fixed rate, never by a
+# deadline, so the same arguments always send the same operations: one
+# pass of the suite sample per SUITE_PASS_S (at least one), one cycle of
+# the object-API mix per NAQED_CYCLE_S (at least NAQED_MIN_CYCLES, so
+# the window writes every kind once, and at least SPACE_WRITES times).
+SUITE_PASS_S = 30
+NAQED_CYCLE_S = 3
+NAQED_MIN_CYCLES = 3
+# the suite sample, drawn from a measured full pass by sample.py
+SAMPLE = os.path.join(HERE, "suite_sample.json")
 ENGINE_TIMEOUT = 170
 FIRST_RUN_TIMEOUT = 880
 OUT = os.path.join(HERE, "out")
@@ -114,13 +122,16 @@ def describe(cp, data, work):
 
 def suite_plan(args, cp, data, work, plan):
     desc = describe(cp, data, work)
-    names = workloads.suite_sample(desc["declared"])
+    with open(SAMPLE) as f:
+        names = json.load(f)["sample"]
+    missing = sorted(set(names) - set(desc["declared"]))
+    if missing:
+        raise RuntimeError(f"suite sample names undeclared queries {missing}; rerun sample.py")
     suite = oracle.SuiteOracle(desc["oracle"], os.path.join(engine.STATE, "expected",
                                                             os.path.basename(data)))
     suite.prepare(names)
-    # passes run until the window reaches --seconds; one pass takes longer
-    # than the benchmark's 10 s on a 4-core machine
-    plan["passes"] = workloads.suite_orders(names, args.seed, 3)
+    plan["passes"] = workloads.suite_orders(names, args.seed,
+                                            max(1, round(args.seconds / SUITE_PASS_S)))
 
     def check(op):
         return suite.check(op["query"], op["out"])
@@ -196,13 +207,13 @@ def naqed_plan(args, cp, data, work, plan):
         if r["kind"] not in {w["kind"] for w in warm_reads}:
             warm_reads.append(r)
     warm_writes, _ = workloads.write_ops(args.seed, 2, rows, doms["customer"], stream=6, prefix="warmw")
-    reads = workloads.read_requests(args.seed, 1000, doms)
-    writes, after = workloads.write_ops(args.seed, 200, rows, doms["customer"])
+    cycles = max(NAQED_MIN_CYCLES, SPACE_WRITES, round(args.seconds / NAQED_CYCLE_S))
+    reads = workloads.read_requests(args.seed, cycles * workloads.READS_PER_WRITE, doms)
+    writes, after = workloads.write_ops(args.seed, cycles, rows, doms["customer"])
     wire = lambda o: {k: o[k] for k in ("id", "kind", "mutation", "scan", "read")}
     plan["warmup"] = workloads.interleave(warm_reads, [wire(o) for o in warm_writes])
     plan["ops"] = workloads.interleave(reads, [wire(o) for o in writes])
     plan["space_writes"] = SPACE_WRITES
-    plan["cycle"] = workloads.READS_PER_WRITE + 1
     text_of = {r["id"]: r["json"] for r in reads}
     index = {o["id"]: i for i, o in enumerate(writes)}
     con = duckdb.connect()
@@ -277,8 +288,8 @@ def main():
     first_build = not os.path.exists(os.path.join(engine.STATE, "classpath.txt"))
     cp = engine.classpath(os.path.join(engine.STATE, "build.log"))
     data = data_dir(sf)
-    plan = {"workload": args.workload, "data": data, "work": work, "seconds": args.seconds,
-            "clients": clients, "setup_reps": SETUP_REPS, "trace": bool(args.trace)}
+    plan = {"workload": args.workload, "data": data, "work": work, "clients": clients,
+            "setup_reps": SETUP_REPS, "trace": bool(args.trace)}
     phases = {"build_s": time.time() - started}
     check = PLANS[args.workload](args, cp, data, work, plan)
     phases["plan_s"] = time.time() - started - sum(phases.values())
@@ -304,10 +315,18 @@ def main():
     metrics, tail = summarize(res, timed)
     # the median and tail of one window's operations are reported per
     # layer, not gated: the suite's 20 operations are 20 different queries,
-    # and over 10 seeds on a 4-core machine their median spread by 0.23
+    # and over 10 seeds on a 4-core machine their median spread by 0.27;
+    # a window of about 20 operations has no tail with 10 samples beyond
     latency = {"lat.op_p50_ms": workloads.median([o["ms"] for o in timed]),
                "lat.op_tail_ms": tail[1]}
     layers = dict(res.get("layers", {}), **latency)
+    # task and client-thread CPU of the suite's queries by family, per pass
+    # (traced runs record each operation's task CPU)
+    passes = max(1, len(res.get("passes", [])))
+    for f in workloads.FAMILIES + ("other",):
+        layers[f"ops.cpu_s.{f}"] = sum(
+            (o.get("task_cpu_ms", 0.0) + o.get("driver_cpu_ms", 0.0)) / 1e3 for o in timed
+            if o["kind"] == "query" and workloads.family(o["query"]) == f) / passes
     layers["setup.warmup_s"] = res["warmup_s"]
     layers["jvm.heap_peak_mb"] = res["heap_peak_mb"]
     layers["jvm.heap_live_mb"] = res["heap_live_mb"]

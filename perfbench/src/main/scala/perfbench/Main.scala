@@ -130,7 +130,6 @@ final class Bench(plan: JsonNode) {
   private val workload = plan.get("workload").asText()
   private val dataDir = plan.get("data").asText()
   private val work = Paths.get(plan.get("work").asText())
-  private val seconds = plan.get("seconds").asDouble()
   private val clients = plan.get("clients").asInt()
   private val setupReps = plan.get("setup_reps").asInt()
   private val tracer = new Tracer(plan.get("trace").asBoolean())
@@ -268,6 +267,10 @@ final class Bench(plan: JsonNode) {
     }
     val opList = ops.asScala.toSeq
     val heapPeak = Jvm.heapPeakMb
+    if (traced) {
+      org.apache.spark.BusDrain(sc)
+      opList.foreach(o => o.put("task_cpu_ms", execProbe.sum(_.taskCpuNs.get, _ == o.id) / 1e6))
+    }
     System.gc()
     val out = scala.collection.mutable.LinkedHashMap[String, Any](
       "workload" -> workload, "setup_s" -> setup, "warmup_s" -> warmup,
@@ -276,7 +279,6 @@ final class Bench(plan: JsonNode) {
       "ops" -> opList.map(_.fields))
     out ++= extra
     if (traced) {
-      org.apache.spark.BusDrain(sc)
       out("layers") = layers(opList, win, extra.toMap)
       out("thread_cpu_s") = win.threadCpu
       val spans = tracer.all.map(s => Map("name" -> s.name, "id" -> s.id, "parent" -> s.parent,
@@ -328,22 +330,19 @@ final class Bench(plan: JsonNode) {
       val s = fresh()
       timed(loadAll(s, names))._2
     }
-    // no warm-up: the first pass of the sampled queries is what is timed
-    val passWalls = scala.collection.mutable.ArrayBuffer[Double]()
-    val primeWalls = scala.collection.mutable.ArrayBuffer[Double]()
-    var i = 0
-    while (i < passes.size && (i == 0 || win.wallS < seconds)) {
+    // no warm-up: the first pass of the sampled queries is what is timed;
+    // the plan fixes the number of passes
+    val runs = passes.zipWithIndex.map { case (order, i) =>
       val s = fresh()
       win.open()
-      val (primeS, wall) = timed(suitePass(s, passes(i), s"p$i", ops))
+      val (primeS, wall) = timed(suitePass(s, order, s"p$i", ops))
       win.close()
-      passWalls += wall; primeWalls += primeS
       if (traced && i == 0) extra("shared_cached_mb") = sc.getRDDStorageInfo
         .map(r => r.memSize + r.diskSize).sum / 1048576.0
-      i += 1
+      (wall, primeS)
     }
-    extra("passes") = passWalls.toSeq
-    extra("prime_walls") = primeWalls.toSeq
+    extra("passes") = runs.map(_._1)
+    extra("prime_walls") = runs.map(_._2)
     (setup, 0.0)
   }
 
@@ -423,29 +422,21 @@ final class Bench(plan: JsonNode) {
       graft.Tables.mount(s, headDir, t, graft.Tables(s, dataDir, t)))
     val data = new graft.api.Naqed(s, dataDir)
     val head = new graft.api.Naqed(s, headDir)
-    // the window runs whole cycles of the operation mix, so every run sends
-    // the same mix however the deadline falls
-    val cycle = plan.get("cycle").asInt()
-    def runOps(list: Seq[JsonNode], root: Path, out: ConcurrentLinkedQueue[Op],
-        deadline: Long): Unit = onThreads("perfbench-client", 1) { _ =>
-      val it = list.iterator
-      var sent = 0
-      while (it.hasNext && (System.nanoTime() < deadline || sent % cycle != 0)) {
-        sent += 1
-        val o = it.next()
-        if (o.has("mutation")) write(s, data, head, root, schema, o, out)
-        else request(data, (o.get("id").asText(), o.get("kind").asText(), o.get("json").asText()), out)
+    // the plan fixes the window's operations, so every run sends the same mix
+    def runOps(list: Seq[JsonNode], root: Path, out: ConcurrentLinkedQueue[Op]): Unit =
+      onThreads("perfbench-client", 1) { _ =>
+        list.foreach { o =>
+          if (o.has("mutation")) write(s, data, head, root, schema, o, out)
+          else request(data, (o.get("id").asText(), o.get("kind").asText(), o.get("json").asText()), out)
+        }
       }
-    }
     val warmOps = new ConcurrentLinkedQueue[Op]()
-    val (_, warmS) = timed(runOps(list("warmup"), roots.head, warmOps, Long.MaxValue))
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
+    val (_, warmS) = timed(runOps(list("warmup"), roots.head, warmOps))
     win.open()
-    runOps(list("ops"), roots.last, ops, deadline)
+    runOps(list("ops"), roots.last, ops)
     win.close()
-    // space amplification at a fixed point of the write sequence (after
-    // its first `spaceWrites` commits), so it does not depend on how many
-    // writes the window happened to reach: data bytes of every version up
+    // space amplification after the window's first `space_writes` commits
+    // (the plan holds at least that many): data bytes of every version up
     // to there over the data bytes of that version
     val table = roots.last.resolve("orders").toString
     def files(v: Long) = graft.sources.VersionedTable.read(s, table, Some(v)).inputFiles.toSeq
@@ -558,12 +549,6 @@ final class Bench(plan: JsonNode) {
       // deserialization, result handling)
       "ledger.executor_other_frac" -> math.max(0.0, th("executor") - taskCpu))
     val passes = extra.get("passes").map(_.asInstanceOf[Seq[Double]].size).getOrElse(0)
-    val family = Seq("agg", "graph", "pipeline", "dedup", "ts", "tpch", "sim", "sample",
-      "join", "win", "text")
-    def familyOf(q: String): String = family.find(f => q.startsWith(f + "_")).getOrElse("other")
-    val famCpu = ops.filter(_.kind == "query").groupMapReduce(o =>
-      familyOf(String.valueOf(o.fields.get("query"))))(o =>
-      g.sum(_.taskCpuNs.get, _ == o.id) / 1e9 + num(o, "driver_cpu_ms").getOrElse(0.0) / 1e3)(_ + _)
     val reqs = ops.filter(_.fields.containsKey("compile_ms"))
     val writes = ops.filter(_.fields.containsKey("write_ms"))
     val buildNames = Set("Tables.edges", "Tables.bipartite", "ops.Pipelines.prime",
@@ -583,7 +568,6 @@ final class Bench(plan: JsonNode) {
         reqs.flatMap(num(_, "rows")).sum),
       "ops.construct_s" -> vals("construct_ms").sum / 1e3 / math.max(1, passes),
       "ops.action_s" -> vals("action_ms").sum / 1e3 / math.max(1, passes))
-    (family :+ "other").foreach(f => m(s"ops.cpu_s.$f") = famCpu.getOrElse(f, 0.0) / math.max(1, passes))
     m ++= Seq(
       "tables.load_s" -> spans.filter(s => s.name == "Tables.apply" && fromPasses(s))
         .map(_.seconds).sum / unit,

@@ -48,15 +48,42 @@ class Tail(unittest.TestCase):
         values = list(range(1, 101))  # 100 samples
         # p90 is the 90th value with 10 above it; p95 would leave only 5
         self.assertEqual(workloads.tail(values), (90, 90, 10))
+        # 1000 samples: p99 leaves 10 above it, p99.9 only 1
+        self.assertEqual(workloads.tail(list(range(1, 1001))), (99, 990, 10))
 
-    def test_small_sample_falls_back_to_median_rank(self):
-        self.assertEqual(workloads.tail(list(range(1, 21))), (50, 10, 10))
-        self.assertEqual(workloads.tail(list(range(1, 40))), (50, 20, 19))
-        self.assertEqual(workloads.tail(list(range(1, 100))), (50, 50, 49))
+    def test_short_window_reports_p90_not_the_median(self):
+        self.assertEqual(workloads.tail(list(range(1, 23))), (90, 20, 2))
+        self.assertEqual(workloads.tail(list(range(1, 100))), (90, 90, 9))
+        self.assertEqual(workloads.tail([]), (90, 0.0, 0))
 
-    def test_too_few_samples_report_the_lowest_percentile(self):
-        self.assertEqual(workloads.tail(list(range(1, 20))), (50, 10, 9))
-        self.assertEqual(workloads.tail([]), (50, 0.0, 0))
+
+class SuiteSample(unittest.TestCase):
+    def setUp(self):
+        with open(run.SAMPLE) as f:
+            self.file = json.load(f)
+
+    def test_covers_every_family(self):
+        sample = self.file["sample"]
+        self.assertEqual(len(sample), workloads.SUITE_SIZE)
+        self.assertEqual(len(set(sample)), len(sample))
+        self.assertEqual({workloads.family(q) for q in sample},
+                         set(workloads.FAMILIES) | {"other"})
+
+    def test_drawn_from_the_measured_pass(self):
+        cost = self.file["cost_s"]
+        self.assertEqual(len(cost), self.file["pass"]["queries"])
+        self.assertEqual(workloads.suite_sample(cost), self.file["sample"])
+        self.assertEqual(workloads.compare(cost, self.file["sample"]), self.file["comparison"])
+
+    def test_seats_follow_family_sizes(self):
+        self.assertEqual(workloads.allot({"a": 100, "b": 10, "c": 1}, 6), {"a": 4, "b": 1, "c": 1})
+        self.assertEqual(workloads.allot({"a": 3, "b": 3}, 4), {"a": 2, "b": 2})
+
+    def test_query_nearest_each_stratum_mean(self):
+        cost = {f"agg_{i}": float(i) for i in range(9)} | {"graph_x": 1.0}
+        self.assertEqual(workloads.suite_sample(cost, 4), ["agg_1", "agg_4", "agg_7", "graph_x"])
+        skewed = {"ts_a": 1.0, "ts_b": 2.0, "ts_c": 3.0, "ts_d": 4.0, "ts_e": 20.0}
+        self.assertEqual(workloads.suite_sample(skewed, 1), ["ts_d"])
 
 
 class WriteModel(unittest.TestCase):

@@ -12,20 +12,22 @@ import math
 
 import numpy as np
 
-# percentiles the tail metric may report, lowest first; the gap between
-# 50 and 90 keeps the reported percentile fixed while a window's sample
-# count moves between 20 and 99
-TAIL_PERCENTILES = (50, 90, 95, 99, 99.9)
-# every SUITE_STRIDE-th declared query forms the suite sample
-SUITE_STRIDE = 25
-# kinds of the object-API requests, in the order they repeat: half are
-# point lookups, so the session's median latency falls inside one kind
+# percentiles the tail metric may report, lowest first
+TAIL_PERCENTILES = (90, 95, 99, 99.9)
+# families of the declared queries (name prefix); the rest are "other"
+FAMILIES = ("agg", "graph", "pipeline", "dedup", "ts", "tpch", "sim", "sample",
+            "join", "win", "text")
+# queries in the suite sample
+SUITE_SIZE = 20
+# kinds of the object-API requests, in the order they repeat; half are
+# point lookups
 READ_PATTERN = ("point", "page", "point", "group", "point",
                 "one_many", "point", "page", "point", "reach")
-# kinds of the mutations, in the order they repeat
-WRITE_PATTERN = ("insert", "update", "insert", "delete", "insert")
+# kinds of the mutations, in the order they repeat; the first three
+# cover every kind
+WRITE_PATTERN = ("insert", "update", "delete", "insert", "insert")
 # object-API session: one mutation after every READS_PER_WRITE requests
-READS_PER_WRITE = 10
+READS_PER_WRITE = 7
 ZIPF_S = 1.1
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
@@ -33,8 +35,8 @@ PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 def tail(values):
     """(percentile, value, samples beyond) for the highest percentile in
     TAIL_PERCENTILES with at least 10 samples above its nearest-rank
-    position. With fewer than 20 samples no percentile qualifies and the
-    lowest one is reported, with the samples beyond it as they are."""
+    position. With fewer than 100 samples none qualifies and p90 is
+    reported, with the samples beyond it as they are."""
     s = sorted(values)
     n = len(s)
     if n == 0:
@@ -78,8 +80,53 @@ class Zipf:
 
 # ---- suite ----
 
-def suite_sample(declared):
-    return list(declared[::SUITE_STRIDE])
+def family(query):
+    return next((f for f in FAMILIES if query.startswith(f + "_")), "other")
+
+
+def allot(sizes, n):
+    """Seats of `n` per family: one each, the rest by highest averages
+    (Sainte-Lague) on the families' sizes."""
+    seats = {f: 1 for f in sizes}
+    while sum(seats.values()) < n:
+        f = max(sorted(sizes), key=lambda f: sizes[f] / (seats[f] + 0.5))
+        seats[f] += 1
+    return seats
+
+
+def suite_sample(cost, n=SUITE_SIZE):
+    """The suite sample, drawn from `cost` (every declared query's CPU
+    seconds in one measured full pass). Each family gets seats by its
+    number of queries; its queries ranked by cost are cut into as many
+    equal strata as it has seats, and from each stratum the query whose
+    cost is nearest the stratum's mean is taken. So every family is in
+    the sample, and the sample's cost mix follows the full pass's."""
+    by = {}
+    for q in sorted(cost):
+        by.setdefault(family(q), []).append(q)
+    seats = allot({f: len(qs) for f, qs in by.items()}, n)
+    out = []
+    for f in sorted(by):
+        ranked = sorted(by[f], key=lambda q: (cost[q], q))
+        k = seats[f]
+        for i in range(k):
+            stratum = ranked[i * len(ranked) // k:(i + 1) * len(ranked) // k]
+            mean = sum(cost[q] for q in stratum) / len(stratum)
+            out.append(min(stratum, key=lambda q: (abs(cost[q] - mean), q)))
+    return sorted(out)
+
+
+def compare(cost, sample):
+    """The sample against the full pass: per family its queries, seats
+    and share of CPU in each, and the mean CPU seconds per query."""
+    fams = sorted({family(q) for q in cost})
+    total, part = sum(cost.values()), sum(cost[q] for q in sample)
+    return {"families": {f: {"queries": sum(family(q) == f for q in cost),
+                             "seats": sum(family(q) == f for q in sample),
+                             "full_cpu_share": sum(c for q, c in cost.items() if family(q) == f) / total,
+                             "sample_cpu_share": sum(cost[q] for q in sample if family(q) == f) / part}
+                         for f in fams},
+            "mean_cpu_s": {"full": total / len(cost), "sample": part / len(sample)}}
 
 
 def suite_orders(names, seed, passes):
@@ -126,7 +173,7 @@ def read_requests(seed, n, domains, stream=2, prefix="r"):
 
 def interleave(reads, writes):
     """The session's operation order: cycles of READS_PER_WRITE reads with
-    a write after the second, so that even a short window writes twice."""
+    a write after the second."""
     out, w = [], iter(writes)
     for i, r in enumerate(reads):
         out.append(r)
