@@ -109,7 +109,7 @@ def run_engine(cp, plan, work, timeout):
     # compiler and GC threads live for the whole run, so the traced run's
     # per-thread CPU snapshots at the window's edges see all of their CPU
     cmd += ["-XX:-UseDynamicNumberOfCompilerThreads", "-XX:-UseDynamicNumberOfGCThreads"]
-    cmd += ["-Xmx3g", "-Djava.io.tmpdir=" + tmp, "-Dspark.ui.enabled=false",
+    cmd += ["-Xms3g", "-Xmx3g", "-Djava.io.tmpdir=" + tmp, "-Dspark.ui.enabled=false",
             "-cp", cp, "perfbench.Main", plan_path, result_path]
     with open(os.path.join(work, "engine.log"), "w") as log:
         proc = subprocess.Popen(cmd, cwd=work, stdout=log, stderr=subprocess.STDOUT)

@@ -31,17 +31,18 @@ import workloads  # noqa: E402
 
 WORKLOADS = {
     # name: (data scale, client threads)
-    "suite_sf0.01": (0.01, 4),
+    "suite_sf0.01": (0.01, 1),
     "naqed_sf0.01": (0.01, 1),
 }
+# Spark's local executor slots: half the cores of a 4-core machine, so the
+# JIT compiler and GC threads do not queue behind the tasks
+CORES = 2
 # end-to-end metrics (--trace 0): name -> unit
-END_TO_END = {
-    "setup_s": "s", "op_mean_ms": "ms", "ops_per_s": "1/s", "cpu_ms_per_op": "ms",
-    "space_amp": "ratio",
-}
+END_TO_END = {"setup_s": "s", "op_mean_ms": "ms", "cpu_ms_per_op": "ms", "space_amp": "ratio"}
 # per-layer metrics (--trace 1): (name, unit, better); "/op" = per operation
 PER_LAYER = (
     [("lat.op_p50_ms", "ms", "lower"), ("lat.op_tail_ms", "ms", "lower"),
+     ("lat.op_mean_wall_ms", "ms", "lower"), ("host.steal_frac", "ratio", "lower"),
      ("api.req_p50_ms", "ms", "lower"), ("api.compile_ms_p50", "ms", "lower"),
      ("api.exec_ms_p50", "ms", "lower"), ("api.jobs_per_req", "count", "lower"),
      ("api.rows_read_per_row_out", "ratio", "lower"),
@@ -60,8 +61,7 @@ PER_LAYER = (
        ("exec.stage_skew", "ratio", "lower"),
        ("driver.cpu_s", "s/op", "lower"), ("jvm.gc_s", "s/op", "lower"),
        ("jvm.jit_s", "s/op", "lower"), ("ledger.cpu_s", "s", "lower"),
-       ("ledger.task_frac", "ratio", "higher"), ("ledger.prime_task_frac", "ratio", "lower"),
-       ("ledger.driver_frac", "ratio", "lower"), ("ledger.prime_driver_frac", "ratio", "lower"),
+       ("ledger.task_frac", "ratio", "higher"), ("ledger.driver_frac", "ratio", "lower"),
        ("ledger.gc_frac", "ratio", "lower"), ("ledger.jit_frac", "ratio", "lower"),
        ("ledger.spark_threads_frac", "ratio", "lower"),
        ("ledger.executor_other_frac", "ratio", "lower"),
@@ -82,11 +82,12 @@ SETUP_REPS = 3
 SPACE_WRITES = 2
 # A run's operations are sized from --seconds at a fixed rate, never by a
 # deadline, so the same arguments always send the same operations: one
-# pass of the suite sample per SUITE_PASS_S (at least one), one cycle of
-# the object-API mix per NAQED_CYCLE_S (at least NAQED_MIN_CYCLES, so
-# the window writes every kind once, and at least SPACE_WRITES times).
+# pass of the suite sample per SUITE_PASS_S (at least one); one cycle of
+# the object-API mix per NAQED_CYCLE_S (at least NAQED_MIN_CYCLES, so the
+# window holds three requests of every kind and writes every kind once,
+# and at least SPACE_WRITES times).
 SUITE_PASS_S = 30
-NAQED_CYCLE_S = 3
+NAQED_CYCLE_S = 10
 NAQED_MIN_CYCLES = 3
 # the suite sample, drawn from a measured full pass by sample.py
 SAMPLE = os.path.join(HERE, "suite_sample.json")
@@ -134,8 +135,9 @@ def suite_plan(args, cp, data, work, plan):
                                             max(1, round(args.seconds / SUITE_PASS_S)))
 
     def check(op):
-        return suite.check(op["query"], op["out"])
-    return check
+        return suite.check(op["query"], op["rows"], op["digest"])
+    # op_mean_ms: each query at its median over the passes
+    return check, (lambda op: op["query"])
 
 
 # the strong co-purchase graph (parts co-ordered >= 2 times), both directions
@@ -200,7 +202,7 @@ READ_SQL = {
 def naqed_plan(args, cp, data, work, plan):
     doms = _read_domains(data)
     rows = pq.read_table(os.path.join(data, "orders.parquet")).to_pylist()
-    # warm-up: one request of each kind, and one write
+    # warm-up: one request of each kind, and two writes
     warm_reads = []
     for r in workloads.read_requests(args.seed, len(workloads.READ_PATTERN), doms,
                                      stream=5, prefix="warm"):
@@ -248,27 +250,33 @@ def naqed_plan(args, cp, data, work, plan):
         if (op["rows"], op["digest"]) != (n, d):
             return f"rows/digest engine=({op['rows']}, {op['digest']}) duckdb=({n}, {d})"
         return None
-    return check
+    # op_mean_ms: each kind of request or write at its median, weighted by its count
+    return check, (lambda op: op["kind"])
 
 
 PLANS = {"suite_sf0.01": suite_plan, "naqed_sf0.01": naqed_plan}
 
 
-def summarize(res, ops):
-    ms = [o["ms"] for o in ops]
-    tail = workloads.tail(ms)
+def unstolen(wall, steal):
+    """Wall time less the host's steal: `wall` scaled by the share of the
+    busy CPU time the host did not steal meanwhile."""
+    return wall * (1.0 - steal)
+
+
+def summarize(res, ops, group):
     n = max(1, len(ops))
     space = 1.0
     if "head_bytes" in res:
         space = res["table_bytes"] / max(1, res["head_bytes"])
+    loads = [unstolen(w, st) for w, st in zip(res["setup_s"], res["setup_steal"])]
     metrics = {
-        "setup_s": workloads.median(res["setup_s"]),
-        "op_mean_ms": sum(ms) / n,
-        "ops_per_s": len(ops) / max(res["window_s"], 1e-9),
+        # the median of the repeated table loads, plus the shared builds
+        "setup_s": workloads.median(loads) + unstolen(res["build_s"], res["build_steal"]),
+        "op_mean_ms": workloads.mix_mean([(group(o), unstolen(o["ms"], o["steal"])) for o in ops]),
         "cpu_ms_per_op": res["cpu_s"] * 1e3 / n,
         "space_amp": space,
     }
-    return metrics, tail
+    return metrics, workloads.tail([o["ms"] for o in ops])
 
 
 def main():
@@ -289,9 +297,9 @@ def main():
     cp = engine.classpath(os.path.join(engine.STATE, "build.log"))
     data = data_dir(sf)
     plan = {"workload": args.workload, "data": data, "work": work, "clients": clients,
-            "setup_reps": SETUP_REPS, "trace": bool(args.trace)}
+            "cores": CORES, "setup_reps": SETUP_REPS, "trace": bool(args.trace)}
     phases = {"build_s": time.time() - started}
-    check = PLANS[args.workload](args, cp, data, work, plan)
+    check, group = PLANS[args.workload](args, cp, data, work, plan)
     phases["plan_s"] = time.time() - started - sum(phases.values())
     budget = FIRST_RUN_TIMEOUT if first_build else ENGINE_TIMEOUT
     res = engine.run_engine(cp, plan, work, max(30, budget - (time.time() - started)))
@@ -312,13 +320,14 @@ def main():
             failures.append(op)
     phases["check_s"] = time.time() - started - sum(phases.values())
     timed = [o for o in ops if o["kind"] != "prime"]
-    metrics, tail = summarize(res, timed)
-    # the median and tail of one window's operations are reported per
-    # layer, not gated: the suite's 20 operations are 20 different queries,
-    # and over 10 seeds on a 4-core machine their median spread by 0.27;
-    # a window of about 20 operations has no tail with 10 samples beyond
+    metrics, tail = summarize(res, timed, group)
+    # per layer: the window's median and tail latency (a window of 20-24
+    # operations has no tail with 10 samples beyond it), op_mean_ms before
+    # the steal is taken out, and the window's steal share
     latency = {"lat.op_p50_ms": workloads.median([o["ms"] for o in timed]),
-               "lat.op_tail_ms": tail[1]}
+               "lat.op_tail_ms": tail[1],
+               "lat.op_mean_wall_ms": workloads.mix_mean([(group(o), o["ms"]) for o in timed]),
+               "host.steal_frac": res["window_steal"]}
     layers = dict(res.get("layers", {}), **latency)
     # task and client-thread CPU of the suite's queries by family, per pass
     # (traced runs record each operation's task CPU)
@@ -339,9 +348,9 @@ def main():
               "failures": [{k: o.get(k) for k in ("id", "kind", "query", "error", "message", "wrong")}
                            for o in failures],
               "phases": phases,
-              "run": {k: res[k] for k in ("setup_s", "warmup_s", "window_s", "cpu_s",
-                                          "passes", "prime_walls", "table_bytes", "head_bytes",
-                                          "thread_cpu_s")
+              "run": {k: res[k] for k in ("setup_s", "setup_steal", "build_s", "build_steal",
+                                          "warmup_s", "window_s", "window_steal", "cpu_s",
+                                          "passes", "table_bytes", "head_bytes", "thread_cpu_s")
                       if k in res},
               "ops": ops}
     with open(os.path.join(OUT, tag + ".json"), "w") as f:

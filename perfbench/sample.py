@@ -46,11 +46,13 @@ def main():
                                                             os.path.basename(data)))
     suite.prepare(names)
     plan = {"workload": "suite_sf0.01", "data": data, "work": work, "clients": CLIENTS,
-            "setup_reps": 1, "trace": True, "passes": workloads.suite_orders(names, args.seed, 1)}
+            "cores": CLIENTS, "setup_reps": 1, "trace": True,
+            "passes": workloads.suite_orders(names, args.seed, 1)}
     res = engine.run_engine(cp, plan, work, 1800)
     ops = [o for o in res["ops"] if o["kind"] == "query"]
     bad = [(o["id"], o.get("error"), o.get("message")) for o in res["ops"] if not o.get("ok")]
-    bad += [(o["id"], why) for o in ops if o.get("ok") and (why := suite.check(o["query"], o["out"]))]
+    bad += [(o["id"], why) for o in ops
+            if o.get("ok") and (why := suite.check(o["query"], o["rows"], o["digest"]))]
     shutil.rmtree(work, ignore_errors=True)
     if bad or len(ops) != len(names):
         raise SystemExit(f"full pass: {len(ops)} of {len(names)} queries ran; failures: {bad}")

@@ -57,7 +57,7 @@ def main():
     with open(os.path.join(HERE, "out", f"{args.workload}-seed{args.baseline}-trace1.json")) as f:
         traced = json.load(f)
     overhead = {k: traced["metrics"][k] / s[k]["median"] - 1.0
-                for k in ("op_mean_ms", "ops_per_s", "cpu_ms_per_op") if s[k]["median"]}
+                for k in ("op_mean_ms", "cpu_ms_per_op") if s[k]["median"]}
     base = {"workload": args.workload,
             "untraced": {"seeds": sorted(r["seed"] for r in runs), "metrics": s},
             "traced": {"seed": traced["seed"], "seconds": traced["seconds"],

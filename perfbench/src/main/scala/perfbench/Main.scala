@@ -45,6 +45,7 @@ object Main {
     val plan = mapper.readTree(Files.readString(Paths.get(args(0))))
     val bench = new Bench(plan)
     val result = try bench.run() finally bench.stop()
+    println("perfbench: stopped")
     Files.writeString(Paths.get(args(1)), mapper.writeValueAsString(Json.toJava(result)))
   }
 }
@@ -78,9 +79,9 @@ object Json {
 
 /** Order-insensitive digest of result rows: each row is rendered to a
   * canonical string (struct fields sorted by name, array elements
-  * sorted, doubles as IEEE bits, timestamps as epoch microseconds), and
-  * the first 8 bytes of each string's MD5 are summed mod 2^64. `run.py`
-  * renders DuckDB's answers the same way. */
+  * sorted, doubles as IEEE bits, timestamps and dates as epoch
+  * microseconds), and the first 8 bytes of each string's MD5 are summed
+  * mod 2^64. `oracle.py` renders DuckDB's answers the same way. */
 object Canon {
   def value(v: Any): String = v match {
     case null => "null"
@@ -94,7 +95,10 @@ object Canon {
     case x: Double => dbl(x)
     case t: java.sql.Timestamp =>
       "t:" + (Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000)
-    case d: java.sql.Date => "date:" + d.toLocalDate.toEpochDay
+    // a date reads as the timestamp of its midnight, so a date and a
+    // timestamp at midnight compare equal (engines differ on the type of
+    // date_trunc and the like)
+    case d: java.sql.Date => "t:" + d.toLocalDate.toEpochDay * 86400000000L
     case d: java.math.BigDecimal => "n:" + d.stripTrailingZeros.toPlainString
     case d: scala.math.BigDecimal => value(d.bigDecimal)
     case r: Row =>
@@ -131,12 +135,13 @@ final class Bench(plan: JsonNode) {
   private val dataDir = plan.get("data").asText()
   private val work = Paths.get(plan.get("work").asText())
   private val clients = plan.get("clients").asInt()
+  private val cores = plan.get("cores").asInt()
   private val setupReps = plan.get("setup_reps").asInt()
   private val tracer = new Tracer(plan.get("trace").asBoolean())
   private val traced = tracer.enabled
 
   private val root: SparkSession = SparkSession.builder()
-    .master("local[4]")
+    .master(s"local[$cores]")
     .appName("perfbench")
     .config("spark.ui.enabled", "false")
     .config("spark.scheduler.mode", "FAIR")
@@ -169,10 +174,23 @@ final class Bench(plan: JsonNode) {
     s
   }
 
+  private val started = System.nanoTime()
+  /** A progress line in the engine log, with seconds since start. */
+  private def note(msg: String): Unit =
+    println(f"perfbench: ${(System.nanoTime() - started) / 1e9}%.1f s: $msg")
+
   private def timed[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()
     val r = body
     (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Wall seconds of `body` and the share of the machine's busy CPU time
+    * the host stole meanwhile (see `Jvm.stealShare`). */
+  private def timedSteal(body: => Unit): (Double, Double) = {
+    val k0 = Jvm.cpuTicks
+    val (_, wall) = timed(body)
+    (wall, Jvm.stealShare(k0, Jvm.cpuTicks))
   }
 
   private def median(xs: Seq[Double]): Double =
@@ -182,12 +200,15 @@ final class Bench(plan: JsonNode) {
   private def load(s: SparkSession, dir: String, name: String, id: String): Unit =
     tracer.span("Tables.apply", id)(graft.Tables(s, dir, name).count())
 
-  /** Loads `tables` on the client threads, under job group "setup". */
-  private def loadAll(s: SparkSession, tables: Seq[String]): Unit =
-    onThreads("perfbench-client", clients) { c =>
-      tables.indices.filter(_ % clients == c).foreach(i =>
+  /** A fresh session with `tables` loaded on `cores` threads, under job
+    * group "setup"; returns the loads' wall seconds and steal share. */
+  private def loadAll(tables: Seq[String]): (Double, Double) = {
+    val s = fresh()
+    timedSteal(onThreads("perfbench-load", cores) { c =>
+      tables.indices.filter(_ % cores == c).foreach(i =>
         withGroup("setup")(load(s, dataDir, tables(i), "setup")))
-    }
+    })
+  }
 
   private def withGroup[T](id: String)(body: => T): T = {
     sc.setLocalProperty("spark.scheduler.pool", Thread.currentThread().getName)
@@ -211,8 +232,10 @@ final class Bench(plan: JsonNode) {
 
   private final class Window {
     private var cpu0 = 0.0; private var cg0 = 0L
+    private var ticks0 = (0L, 0L); private var busy = 0L; private var stolen = 0L
     private var threads0 = Map.empty[Long, (String, Double)]
     var wallS = 0.0; var cpuS = 0.0; var codegen = 0L
+    def stealShare: Double = Jvm.stealShare((0L, 0L), (busy, stolen))
     /** CPU seconds by thread class (see `threadClass`), traced runs only. */
     var threadCpu = Map.empty[String, Double]
     private var t0 = 0L
@@ -226,7 +249,7 @@ final class Bench(plan: JsonNode) {
         opened = true
       }
       threads0 = if (traced) Jvm.cpuByThread else Map.empty
-      cpu0 = Jvm.processCpuS; cg0 = Jvm.codegenCompiles
+      cpu0 = Jvm.processCpuS; cg0 = Jvm.codegenCompiles; ticks0 = Jvm.cpuTicks
       t0 = System.nanoTime()
     }
     /** Closes one timed stretch; stretches add up. */
@@ -234,6 +257,8 @@ final class Bench(plan: JsonNode) {
       wallS += (System.nanoTime() - t0) / 1e9
       cpuS += Jvm.processCpuS - cpu0
       codegen += Jvm.codegenCompiles - cg0
+      val ticks = Jvm.cpuTicks
+      busy += ticks._1 - ticks0._1; stolen += ticks._2 - ticks0._2
       if (traced) {
         val delta = Jvm.cpuByThread.toSeq.map { case (id, (name, c)) =>
           threadClass(name) -> (c - threads0.get(id).map(_._2).getOrElse(0.0)) }
@@ -245,12 +270,12 @@ final class Bench(plan: JsonNode) {
   private def threadClass(name: String): String =
     if (name.startsWith("Executor task")) "executor"
     else if (name.startsWith("perfbench-clie")) "client"
-    else if (name.startsWith("perfbench-prim")) "prime"
     else if (name.startsWith("C1 Compiler") || name.startsWith("C2 Compiler")) "jit"
     else if (name.startsWith("GC Thread") || name.startsWith("G1 ") || name == "VM Thread") "gc"
     else "other"
 
   def stop(): Unit = {
+    note("stopping")
     pools.values.foreach { p => p.shutdown(); p.awaitTermination(60, TimeUnit.SECONDS) }
     sc.setLogLevel("ERROR")
     root.stop()
@@ -265,6 +290,7 @@ final class Bench(plan: JsonNode) {
       case w if w.startsWith("naqed") => naqed(ops, win, extra)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
+    note("window closed")
     val opList = ops.asScala.toSeq
     val heapPeak = Jvm.heapPeakMb
     if (traced) {
@@ -273,8 +299,10 @@ final class Bench(plan: JsonNode) {
     }
     System.gc()
     val out = scala.collection.mutable.LinkedHashMap[String, Any](
-      "workload" -> workload, "setup_s" -> setup, "warmup_s" -> warmup,
-      "window_s" -> win.wallS, "cpu_s" -> win.cpuS, "heap_peak_mb" -> heapPeak,
+      "workload" -> workload, "setup_s" -> setup.map(_._1), "setup_steal" -> setup.map(_._2),
+      "warmup_s" -> warmup,
+      "window_s" -> win.wallS, "window_steal" -> win.stealShare, "cpu_s" -> win.cpuS,
+      "heap_peak_mb" -> heapPeak,
       "heap_live_mb" -> Jvm.heapUsedMb,
       "ops" -> opList.map(_.fields))
     out ++= extra
@@ -291,10 +319,12 @@ final class Bench(plan: JsonNode) {
   // ---- suite: the declared queries, concurrent, caches dropped per pass ----
 
   private val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.queries
+  private val suiteTables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "events", "documents", "embeddings")
 
   /** The shared-build prime step: independent chains of engine-level
     * materializations run concurrently under job group "prime". */
-  private def prime(s: SparkSession, ops: ConcurrentLinkedQueue[Op], tag: String): Double = {
+  private def prime(s: SparkSession, ops: ConcurrentLinkedQueue[Op], tag: String): Unit = {
     val d = dataDir
     val chains: Seq[(String, () => Unit)] = Seq(
       "facts" -> (() => { Seq("lineitem", "orders").foreach(load(s, d, _, "prime"))
@@ -310,50 +340,45 @@ final class Bench(plan: JsonNode) {
       "via" -> (() => Seq("supplier" -> "csv", "customer" -> "json", "orders" -> "orc",
         "documents" -> "text").foreach { case (t, f) =>
           tracer.span("sources.Sources.via", "prime")(graft.sources.Sources.via(s, d, t, f).count()) }))
-    val (_, wall) = timed {
-      onThreads("perfbench-prime", chains.size) { i =>
-        val (name, chain) = chains(i)
-        try withGroup("prime")(tracer.span("prime", "prime")(chain()))
-        catch { case t: Throwable =>
-          val op = new Op(s"prime.$tag.$name", "prime"); op.fail(t); ops.add(op) }
-      }
+    onThreads("perfbench-prime", chains.size) { i =>
+      val (name, chain) = chains(i)
+      try withGroup("prime")(tracer.span("prime", "prime")(chain()))
+      catch { case t: Throwable =>
+        val op = new Op(s"prime.$tag.$name", "prime"); op.fail(t); ops.add(op) }
     }
-    wall
   }
 
   private def suite(ops: ConcurrentLinkedQueue[Op], win: Window,
-      extra: scala.collection.mutable.Map[String, Any]): (Seq[Double], Double) = {
+      extra: scala.collection.mutable.Map[String, Any]): (Seq[(Double, Double)], Double) = {
+    // set-up: the tables loaded into a fresh session, repeated; then the
+    // prime step's shared builds, once
+    val setup = (1 to setupReps).map(_ => loadAll(suiteTables))
+    val s = session
+    val (primeS, primeSteal) = timedSteal(prime(s, ops, "setup"))
+    extra("build_s") = primeS
+    extra("build_steal") = primeSteal
+    note(f"set-up: ${setup.map(_._1).mkString(", ")}; prime step: $primeS%.2f s")
+    // no warm-up: the window is the first execution of the sampled
+    // queries; the plan fixes the number of passes
+    if (traced) extra("shared_cached_mb") = sc.getRDDStorageInfo
+      .map(r => r.memSize + r.diskSize).sum / 1048576.0
     val passes = list("passes").map(_.elements().asScala.map(_.asText()).toSeq)
-    val names = Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-    val setup = (1 to setupReps).map { _ =>
-      val s = fresh()
-      timed(loadAll(s, names))._2
-    }
-    // no warm-up: the first pass of the sampled queries is what is timed;
-    // the plan fixes the number of passes
-    val runs = passes.zipWithIndex.map { case (order, i) =>
-      val s = fresh()
+    val walls = passes.zipWithIndex.map { case (order, i) =>
       win.open()
-      val (primeS, wall) = timed(suitePass(s, order, s"p$i", ops))
+      val (_, wall) = timed(suitePass(s, order, s"p$i", ops))
       win.close()
-      if (traced && i == 0) extra("shared_cached_mb") = sc.getRDDStorageInfo
-        .map(r => r.memSize + r.diskSize).sum / 1048576.0
-      (wall, primeS)
+      note(f"pass $i: $wall%.2f s")
+      wall
     }
-    extra("passes") = runs.map(_._1)
-    extra("prime_walls") = runs.map(_._2)
+    extra("passes") = walls
     (setup, 0.0)
   }
 
-  /** One pass: prime, then every query of `order` on `clients` threads,
-    * each writing its result to parquet under the pass's output dir.
-    * Returns the prime step's wall seconds. */
+  /** One pass: every query of `order` on `clients` threads, each
+    * collecting its result and recording the result's digest. */
   private def suitePass(s: SparkSession, order: Seq[String], tag: String,
-      ops: ConcurrentLinkedQueue[Op]): Double = {
-    val primeS = prime(s, ops, tag)
+      ops: ConcurrentLinkedQueue[Op]): Unit = {
     val next = new AtomicInteger(0)
-    val outDir = work.resolve("out").resolve(tag)
     onThreads("perfbench-client", clients) { _ =>
       var k = next.getAndIncrement()
       while (k < order.size) {
@@ -361,24 +386,24 @@ final class Bench(plan: JsonNode) {
         val id = s"$tag.$name"
         val op = new Op(id, "query")
         op.put("query", name)
-        val c0 = Jvm.threadCpuS
+        val c0 = Jvm.threadCpuS; val k0 = Jvm.cpuTicks
         val t0 = System.nanoTime()
         try withGroup(id) {
           val df = tracer.span("SparkEntry.queries", id)(queries(name)(s, dataDir))
           val t1 = System.nanoTime()
-          val path = outDir.resolve(name).toString
-          tracer.span("action", id)(df.write.mode("overwrite").parquet(path))
+          val rows = tracer.span("action", id)(df.collect().toSeq)
           val t2 = System.nanoTime()
-          op.put("ok", true); op.put("out", path)
+          op.put("ok", true)
           op.put("construct_ms", (t1 - t0) / 1e6); op.put("action_ms", (t2 - t1) / 1e6)
+          op.put("rows", rows.size); op.put("digest", Canon.digest(rows))
         } catch { case t: Throwable => op.fail(t) }
         op.put("ms", (System.nanoTime() - t0) / 1e6)
         op.put("driver_cpu_ms", (Jvm.threadCpuS - c0) * 1e3)
+        op.put("steal", Jvm.stealShare(k0, Jvm.cpuTicks))
         ops.add(op)
         k = next.getAndIncrement()
       }
     }
-    primeS
   }
 
   // ---- naqed: one session of object-API requests and versioned writes ----
@@ -401,20 +426,22 @@ final class Bench(plan: JsonNode) {
     * requests over the cached base tables, and mutations of a versioned
     * orders table, each followed by a read of the new head. */
   private def naqed(ops: ConcurrentLinkedQueue[Op], win: Window,
-      extra: scala.collection.mutable.Map[String, Any]): (Seq[Double], Double) = {
-    val roots = (1 to setupReps).map(i => work.resolve("vt").resolve(s"rep$i"))
-    val setup = roots.map { r =>
-      val s = fresh()
-      timed(withGroup("setup") {
-        loadAll(s, naqedTables)
-        // the co-purchase graph behind `$depth` reach is a shared build
-        tracer.span("Tables.edges", "setup")(graft.Tables.edges(s, dataDir))
-        tracer.span("sources.VersionedTable.create", "setup")(
-          graft.sources.VersionedTable.create(s, r.resolve("orders").toString,
-            graft.Tables(s, dataDir, "orders")))
-      })._2
-    }
+      extra: scala.collection.mutable.Map[String, Any]): (Seq[(Double, Double)], Double) = {
+    // set-up: the tables loaded into a fresh session, repeated; then the
+    // shared builds once: the co-purchase graph behind `$depth` reach, and
+    // a versioned orders table for the warm-up's writes and one for the window's
+    val setup = (1 to setupReps).map(_ => loadAll(naqedTables))
     val s = session
+    val roots = Seq("warm", "window").map(r => work.resolve("vt").resolve(r))
+    val (buildS, buildSteal) = timedSteal(withGroup("setup") {
+      tracer.span("Tables.edges", "setup")(graft.Tables.edges(s, dataDir))
+      roots.foreach(r => tracer.span("sources.VersionedTable.create", "setup")(
+        graft.sources.VersionedTable.create(s, r.resolve("orders").toString,
+          graft.Tables(s, dataDir, "orders"))))
+    })
+    extra("build_s") = buildS
+    extra("build_steal") = buildSteal
+    note(f"set-up: ${setup.map(_._1).mkString(", ")}; builds: $buildS%.2f s")
     val schema = graft.Tables(s, dataDir, "orders").schema
     // the head reader sees the versioned orders plus the base tables the
     // built-in resolvers are declared on
@@ -432,9 +459,11 @@ final class Bench(plan: JsonNode) {
       }
     val warmOps = new ConcurrentLinkedQueue[Op]()
     val (_, warmS) = timed(runOps(list("warmup"), roots.head, warmOps))
+    note(f"warm-up: $warmS%.2f s")
     win.open()
     runOps(list("ops"), roots.last, ops)
     win.close()
+    note(f"window: ${win.wallS}%.2f s")
     // space amplification after the window's first `space_writes` commits
     // (the plan holds at least that many): data bytes of every version up
     // to there over the data bytes of that version
@@ -453,7 +482,7 @@ final class Bench(plan: JsonNode) {
       ops: ConcurrentLinkedQueue[Op]): Unit = {
     val (id, kind, json) = r
     val op = new Op(id, kind)
-    val c0 = Jvm.threadCpuS
+    val c0 = Jvm.threadCpuS; val k0 = Jvm.cpuTicks
     val t0 = System.nanoTime()
     try withGroup(id) {
       val df = tracer.span("api.Naqed#requestJson", id)(naqed.requestJson(json))
@@ -467,6 +496,7 @@ final class Bench(plan: JsonNode) {
     } catch { case t: Throwable => op.fail(t) }
     op.put("ms", (System.nanoTime() - t0) / 1e6)
     op.put("driver_cpu_ms", (Jvm.threadCpuS - c0) * 1e3)
+    op.put("steal", Jvm.stealShare(k0, Jvm.cpuTicks))
     ops.add(op)
   }
 
@@ -489,7 +519,7 @@ final class Bench(plan: JsonNode) {
     val op = new Op(id, w.get("kind").asText())
     val table = rootDir.resolve("orders").toString
     val mutation = typed(Json.fromJson(w.get("mutation")), schema).asInstanceOf[Map[String, Any]]
-    val c0 = Jvm.threadCpuS
+    val c0 = Jvm.threadCpuS; val k0 = Jvm.cpuTicks
     val t0 = System.nanoTime()
     try withGroup(id) {
       val before = if (traced) dirBytes(rootDir.resolve("orders").resolve("data")) else (0L, 0L)
@@ -521,14 +551,15 @@ final class Bench(plan: JsonNode) {
     } catch { case t: Throwable => op.fail(t) }
     op.put("ms", (System.nanoTime() - t0) / 1e6)
     op.put("driver_cpu_ms", (Jvm.threadCpuS - c0) * 1e3)
+    op.put("steal", Jvm.stealShare(k0, Jvm.cpuTicks))
     ops.add(op)
   }
 
   // ---- per-layer metrics of the traced run ----
 
   /** Per-layer metrics. Counts and times marked "per op" are divided by
-    * the window's operations (queries, requests and writes); the suite's
-    * build and load times are per pass. */
+    * the window's operations (queries, requests and writes); load times
+    * are per set-up repetition, build times those of the one build step. */
   private def layers(ops: Seq[Op], win: Window, extra: Map[String, Any]): Map[String, Double] = {
     def num(o: Op, k: String): Option[Double] = Option(o.fields.get(k)).collect {
       case d: Double => d; case i: Int => i.toDouble; case l: Long => l.toDouble }
@@ -539,10 +570,9 @@ final class Bench(plan: JsonNode) {
     val opIds = ops.map(_.id).toSet
     val taskCpu = g.sum(_.taskCpuNs.get) / 1e9
     val opTaskCpu = g.sum(_.taskCpuNs.get, opIds) / 1e9
-    val primeTaskCpu = g.sum(_.taskCpuNs.get, _ == "prime") / 1e9
     val th = win.threadCpu.withDefaultValue(0.0)
-    val parts = Seq("ledger.task_frac" -> opTaskCpu, "ledger.prime_task_frac" -> primeTaskCpu,
-      "ledger.driver_frac" -> th("client"), "ledger.prime_driver_frac" -> th("prime"),
+    // the prime step and other shared builds run in set-up, outside the window
+    val parts = Seq("ledger.task_frac" -> opTaskCpu, "ledger.driver_frac" -> th("client"),
       "ledger.gc_frac" -> th("gc"), "ledger.jit_frac" -> th("jit"),
       "ledger.spark_threads_frac" -> th("other"),
       // executor-thread CPU outside the tasks' own metrics (task set-up,
@@ -554,11 +584,6 @@ final class Bench(plan: JsonNode) {
     val buildNames = Set("Tables.edges", "Tables.bipartite", "ops.Pipelines.prime",
       "ops.TextSim.prime", "sources.Sources.via", "sources.VersionedTable.create")
     val spans = tracer.all
-    // the suite loads and builds inside each pass's prime step; the
-    // object-API workload once per set-up repetition
-    val unit = math.max(1, if (passes > 0) passes else setupReps).toDouble
-    val fromPasses = (s: Span) => passes == 0 || s.id == "prime"
-    val primeWalls = extra.get("prime_walls").map(_.asInstanceOf[Seq[Double]]).getOrElse(Nil)
     val m = scala.collection.mutable.LinkedHashMap[String, Double](
       "api.req_p50_ms" -> median(reqs.flatMap(num(_, "ms"))),
       "api.compile_ms_p50" -> median(reqs.flatMap(num(_, "compile_ms"))),
@@ -569,12 +594,10 @@ final class Bench(plan: JsonNode) {
       "ops.construct_s" -> vals("construct_ms").sum / 1e3 / math.max(1, passes),
       "ops.action_s" -> vals("action_ms").sum / 1e3 / math.max(1, passes))
     m ++= Seq(
-      "tables.load_s" -> spans.filter(s => s.name == "Tables.apply" && fromPasses(s))
-        .map(_.seconds).sum / unit,
-      "shared.build_s" -> spans.filter(s => buildNames(s.name) && fromPasses(s))
-        .map(_.seconds).sum / unit,
-      "shared.build_wall_s" -> (if (primeWalls.nonEmpty) primeWalls.sum / primeWalls.size
-        else median(spans.filter(s => s.id == "setup" && buildNames(s.name)).map(_.seconds))),
+      "tables.load_s" -> spans.filter(s => s.name == "Tables.apply" && s.id == "setup")
+        .map(_.seconds).sum / math.max(1, setupReps),
+      "shared.build_s" -> spans.filter(s => buildNames(s.name)).map(_.seconds).sum,
+      "shared.build_wall_s" -> extra("build_s").asInstanceOf[Double],
       "shared.cached_mb" -> extra.getOrElse("shared_cached_mb",
         sc.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum / 1048576.0).asInstanceOf[Double],
       "plan.analysis_s" -> planProbe.analysisS.sum / n,
@@ -599,9 +622,8 @@ final class Bench(plan: JsonNode) {
       "jvm.jit_s" -> th("jit") / n,
       "ledger.cpu_s" -> win.cpuS)
     parts.foreach { case (k, v) => m(k) = ratio(v, win.cpuS) }
-    m("ledger.other_task_frac") = ratio(taskCpu - opTaskCpu - primeTaskCpu, win.cpuS)
-    m("ledger.unattributed_frac") =
-      1.0 - ratio(parts.map(_._2).sum + taskCpu - opTaskCpu - primeTaskCpu, win.cpuS)
+    m("ledger.other_task_frac") = ratio(taskCpu - opTaskCpu, win.cpuS)
+    m("ledger.unattributed_frac") = 1.0 - ratio(parts.map(_._2).sum + taskCpu - opTaskCpu, win.cpuS)
     def commit(kind: String) = median(writes.filter(_.kind == kind).flatMap(num(_, "write_ms")))
     val rowsWritten = writes.flatMap(num(_, "count")).sum
     m ++= Seq(

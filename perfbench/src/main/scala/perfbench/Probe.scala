@@ -161,6 +161,23 @@ object Jvm {
   }
   private val ClockTicks = 100.0
 
+  /** Busy and stolen CPU ticks of the machine so far, summed over its
+    * CPUs (/proc/stat: user, nice, system, irq and softirq; steal).
+    * (0, 0) where /proc is not available. */
+  def cpuTicks: (Long, Long) =
+    try {
+      val v = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/proc/stat")))
+        .linesIterator.next().trim.split("\\s+").tail.map(_.toLong)
+      (v(0) + v(1) + v(2) + v(5) + v(6), v(7))
+    } catch { case _: java.io.IOException | _: NumberFormatException => (0L, 0L) }
+
+  /** The share of the CPU time the machine's busy CPUs wanted between two
+    * `cpuTicks` readings that the host gave to others (steal). */
+  def stealShare(from: (Long, Long), to: (Long, Long)): Double = {
+    val busy = to._1 - from._1; val steal = to._2 - from._2
+    if (busy + steal <= 0) 0.0 else steal.toDouble / (busy + steal)
+  }
+
   private def heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
     .filter(_.getType == java.lang.management.MemoryType.HEAP)
   def resetHeapPeak(): Unit = heapPools.foreach(_.resetPeakUsage())

@@ -37,7 +37,7 @@ class SeededInputs(unittest.TestCase):
             self.assertNotEqual(a, b)
 
     def test_mix_follows_patterns(self):
-        reqs = workloads.read_requests(3, 20, DOMAINS)
+        reqs = workloads.read_requests(3, 2 * len(workloads.READ_PATTERN), DOMAINS)
         self.assertEqual([r["kind"] for r in reqs], list(workloads.READ_PATTERN) * 2)
         writes, _ = workloads.write_ops(3, 10, ROWS, DOMAINS["customer"])
         self.assertEqual([w["kind"] for w in writes], list(workloads.WRITE_PATTERN) * 2)
@@ -55,6 +55,14 @@ class Tail(unittest.TestCase):
         self.assertEqual(workloads.tail(list(range(1, 23))), (90, 20, 2))
         self.assertEqual(workloads.tail(list(range(1, 100))), (90, 90, 9))
         self.assertEqual(workloads.tail([]), (90, 0.0, 0))
+
+
+class MixMean(unittest.TestCase):
+    def test_groups_weighted_by_count_at_their_median(self):
+        samples = [("a", 1.0), ("a", 2.0), ("a", 90.0), ("b", 10.0)]
+        # a: 3 samples at median 2; b: 1 at 10
+        self.assertEqual(workloads.mix_mean(samples), (3 * 2.0 + 10.0) / 4)
+        self.assertEqual(workloads.mix_mean([]), 0.0)
 
 
 class SuiteSample(unittest.TestCase):
@@ -109,6 +117,8 @@ class Digest(unittest.TestCase):
     def test_canonical_values(self):
         self.assertEqual(oracle.canon(1.0), "d:3ff0000000000000")
         self.assertEqual(oracle.canon(datetime.datetime(1970, 1, 1, 0, 0, 1)), "t:1000000")
+        self.assertEqual(oracle.canon(datetime.date(1970, 1, 2)),
+                         oracle.canon(datetime.datetime(1970, 1, 2)))
         self.assertEqual(oracle.canon({"b": "x,y", "a": True}), "{a=b:true,b=s:x\\,y}")
 
 

@@ -19,15 +19,15 @@ FAMILIES = ("agg", "graph", "pipeline", "dedup", "ts", "tpch", "sim", "sample",
             "join", "win", "text")
 # queries in the suite sample
 SUITE_SIZE = 20
-# kinds of the object-API requests, in the order they repeat; half are
+# kinds of the object-API requests, in the order they repeat: one cycle of
+# the session's reads, so every cycle holds every kind; three in seven are
 # point lookups
-READ_PATTERN = ("point", "page", "point", "group", "point",
-                "one_many", "point", "page", "point", "reach")
+READ_PATTERN = ("point", "page", "point", "group", "point", "one_many", "reach")
 # kinds of the mutations, in the order they repeat; the first three
 # cover every kind
 WRITE_PATTERN = ("insert", "update", "delete", "insert", "insert")
 # object-API session: one mutation after every READS_PER_WRITE requests
-READS_PER_WRITE = 7
+READS_PER_WRITE = len(READ_PATTERN)
 ZIPF_S = 1.1
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
@@ -47,6 +47,17 @@ def tail(values):
         if best is None or n - rank >= 10:
             best = (p, s[rank - 1], n - rank)
     return best
+
+
+def mix_mean(samples):
+    """Mean latency of a mix of operations, robust to stragglers: the
+    samples, (group, latency) pairs, are replaced by their group's median
+    and weighted by the group's share of the samples."""
+    by = {}
+    for g, v in samples:
+        by.setdefault(g, []).append(v)
+    n = sum(len(v) for v in by.values())
+    return sum(len(v) * median(v) for v in by.values()) / n if n else 0.0
 
 
 def median(values):
