@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.{Executors, TimeUnit}
 
 /** Driver-run benchmark on SPARK_GRAFT_SF_DIR (default sf0.1), one fresh
@@ -75,19 +74,14 @@ object Bench {
     // parallel enough while map-side outputs stay contiguous. On a real
     // cluster this knob is workload-sized (SCALING.md) — AQE coalesces
     // from a high initial value instead.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = Harness.session(cpus, "WARN",
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"),
       // FAIR arbitrates BETWEEN pools (each worker thread below names
       // its own pool via spark.scheduler.pool); with a single pool the
       // mode is a no-op since the auto-created default pool schedules
       // its own jobs FIFO. Per-thread pools keep the many small
       // queries flowing around the few multi-stage ones.
-      .config("spark.scheduler.mode", "FAIR")
+      "spark.scheduler.mode" -> "FAIR",
       // Round 9 re-measured the old "AQE only adds re-planning latency
       // locally" claim at the 293-query suite and it FLIPPED: aqe=true
       // 38.1 s wall / 252 CPU vs aqe=false 43.9 s / 281 CPU (converged
@@ -96,10 +90,7 @@ object Bench {
       // the re-planning cost at this query count and par=4 concurrency.
       // On by default, matching the cluster recommendation (SCALING.md:
       // AQE is the runtime skew/coalesce lever).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     val cpuListener = new QueryCpuListener
     spark.sparkContext.addSparkListener(cpuListener)
     val threadMx = java.lang.management.ManagementFactory.getThreadMXBean
@@ -122,7 +113,7 @@ object Bench {
       * so nothing escapes measurement — this just charges the shared
       * builds to an explicit step instead of whichever query touches
       * them first (which under concurrent submission would bill one
-      * query the build while the rest block on the cache lock). */
+      * query the build while the rest wait for it). */
     def prime(dir: String): Unit = {
       // round 17 (verdict item 7): the old 5-chain split left chain 0
       // (facts + EDGES + bipartite, ~6.7 s warm) the long pole while
@@ -138,7 +129,7 @@ object Bench {
         () => { Seq("lineitem", "orders").foreach(n => Tables(spark, dir, n).count())
                 Tables.edges(spark, dir); () },
         // the shared bipartite purchase-edge build (round 13; four
-        // consumers). Blocks briefly on chain 0's table-cache locks,
+        // consumers). Waits briefly for chain 0's table entries,
         // then builds concurrently with EDGES.
         () => { Tables.bipartite(spark, dir); () },
         () => { Tables(spark, dir, "documents").count(); ops.Pipelines.prime(spark, dir) },
@@ -172,21 +163,6 @@ object Bench {
         })
       }.foreach(_.get())
       primePool.shutdown()
-    }
-
-    /** Drop every cache tied to a previously-run sfDir so the next run
-      * starts from parquet: table/edge caches, pipeline + similarity
-      * shared builds, any persisted RDD remnants. */
-    def clearAll(): Unit = {
-      Tables.clear()
-      ops.Pipelines.clearCache()
-      ops.TextSim.clearCache()
-      ops.Relational.clearCache()
-      ops.TimeSeries.clearCache()
-      ops.Sampling.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(
-        rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      System.gc()
     }
 
     /** Run every query through a `par`-thread pool; returns
@@ -246,7 +222,7 @@ object Bench {
     // drop warmup caches (sf0.001 tables/EDGES/shingles/rankings) so the
     // timed run starts with a clean heap — the sf0.1 caches each timed
     // run builds are part of that run's measured work, exactly as before
-    clearAll()
+    SharedBuild.clearAll(spark)
 
     // At least nRuns identical timed runs (caches dropped between runs
     // so each rebuilds from parquet — same work => min is a fair pick),
@@ -280,7 +256,7 @@ object Bench {
     var runs = Vector.empty[Run]
     var i = 0
     while (i < nRuns || (i < maxRuns && !converged(runs))) {
-      if (i > 0) clearAll()
+      if (i > 0) SharedBuild.clearAll(spark)
       val cpu0 = processCpuSec()
       val (results, wall, primeSec, queryCpu) = runSuite(sfDir)
       runs :+= Run(results, wall, primeSec, processCpuSec() - cpu0, queryCpu)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection tool: prints the formatted physical plan of named
   * declared queries (all of them with no names given) against an
   * sfDir, with table caching off so scans show pushdown/pruning.
@@ -12,14 +10,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.cacheTables", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("4", "ERROR",
+      "spark.sql.shuffle.partitions" -> "8", "spark.graft.cacheTables" -> "false")
     names.foreach { n =>
       println(s"===== $n =====")
       SparkEntry.queries.get(n) match {

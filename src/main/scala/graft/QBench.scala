@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query A/B measurement tool (round 16, optimization rounds):
   * runs the NAMED declared queries with Bench's exact session config
   * and cost attribution (job-group executor-task CPU + driver-thread
@@ -10,59 +8,22 @@ import org.apache.spark.sql.SparkSession
   * with per-run wall and CPU. Sequential submission (no FAIR pool
   * contention) — the numbers are *marginal cost* comparisons between
   * two shapes of one query, NOT comparable with Bench's par=4 wall.
-  * Shared builds a query pulls from a SessionCache are billed to it
-  * on every run (caches are cleared between runs), so an A/B of a
-  * shared-build consumer must compare like against like.
-  * Usage: runMain graft.QBench [sfDir] name[,name...]
+  * Shared builds a query pulls are billed to it on every run, so an
+  * A/B of a shared-build consumer must compare like against like.
+  * Usage: runMain graft.QBench <sfDir> name[,name...]
   */
 object QBench {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // ADVICE r16: the first arg is ALWAYS consumed as sfDir, so
-    // `runMain graft.QBench q1,q2` would silently benchmark nothing —
-    // fail loudly when it is not an existing data directory
-    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sfDir)),
-      s"first arg must be an existing sfDir (got '$sfDir'); " +
-        "usage: runMain graft.QBench <sfDir> name[,name...]")
-    val names = args.drop(1).flatMap(_.split(",")).filter(_.nonEmpty).toSeq
-    require(names.nonEmpty,
-      "no query names given; usage: runMain graft.QBench <sfDir> name[,name...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val (sfDir, names) = Harness.sfDirAndNames("QBench", args)
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_QBENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "ERROR",
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"),
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     val cpuListener = new QueryCpuListener
     spark.sparkContext.addSparkListener(cpuListener)
     val threadMx = java.lang.management.ManagementFactory.getThreadMXBean
 
-    def clearAll(): Unit = {
-      Tables.clear()
-      ops.Pipelines.clearCache()
-      ops.TextSim.clearCache()
-      ops.Relational.clearCache()
-      ops.TimeSeries.clearCache()
-      ops.Sampling.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(
-        rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      System.gc()
-    }
-
-    // untimed JIT warmup on sf0.001 (the Bench discipline)
-    names.foreach { n =>
-      SparkEntry.queries.get(n).foreach(q =>
-        try q(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () })
-    }
-    clearAll()
+    Harness.warmUp(spark, names)
 
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
@@ -71,7 +32,7 @@ object QBench {
           val walls = Array.fill(nRuns)(0.0)
           val cpusS = Array.fill(nRuns)(0.0)
           (0 until nRuns).foreach { i =>
-            clearAll()
+            SharedBuild.clearAll(spark)
             cpuListener.reset()
             spark.sparkContext.setJobGroup(n, n)
             val c0 = threadMx.getCurrentThreadCpuTime

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-curve measurement for the dedup/ANN family (SCALING.md's
   * evidence): runs each operator on a list of document/embedding tiers
   * (default sf0.01 -> sf0.1 -> the generated 10x fixtures/sf1_docs,
@@ -30,14 +28,11 @@ object ScalingBench {
       new java.io.File("fixtures/sf10_docs").getAbsolutePath))
       .filter(d => new java.io.File(s"$d/documents.parquet").exists() &&
         new java.io.File(s"$d/embeddings.parquet").exists())
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"), "ERROR",
       // 10x the bench tier's data: keep shuffles parallel but not
       // scheduling-dominated (SCALING.md's knob discussion)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "16"))
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "16"),
       // the fixture tiers are single FILES: splits are row-group
       // aligned but sized by maxPartitionBytes, and the default 128m
       // would read the whole 100x tier as ONE partition — every
@@ -45,33 +40,13 @@ object ScalingBench {
       // a single thread of interpreted HOF eval). 8m gives the 107MB
       // tier ~14-way scan parallelism; irrelevant for the multi-file
       // driver testdata
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.files.maxPartitionBytes" ->
+        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
     // per-op executor CPU: the contention-immune cost measure the
     // exponents are fitted against when walls are host-noisy
     val cpuListener = new QueryCpuListener
     spark.sparkContext.addSparkListener(cpuListener)
-
-    def clearAll(): Unit = {
-      Tables.clear()
-      ops.Pipelines.clearCache()
-      ops.TextSim.clearCache()
-      // the memoized ECDF checkpoint must drop WITH its RDD: the global
-      // unpersist below destroys checkpoint blocks that a stale cache
-      // entry could no longer recompute (lineage truncated)
-      ops.Relational.clearCache()
-      ops.TimeSeries.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(
-        rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      System.gc()
-    }
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -341,12 +316,12 @@ object ScalingBench {
       var primeBest = Double.MaxValue
       var primeCpuBest = Double.MaxValue
       for (_ <- 1 to nRuns) {
-        clearAll()
+        SharedBuild.clearAll(spark)
         cpuListener.reset()
         Tables(spark, dir, "documents").count() // table cache outside the curve
         Tables(spark, dir, "embeddings").count()
         // KN LM re-trained + c12 re-materialized OUTSIDE the timed
-        // region on EVERY repetition (round-16 advice): clearAll()
+        // region on EVERY repetition (round-16 advice): clearAll
         // unpersists the memoized model's c12 cache, which also drops
         // the RDD's storage level — a bare count() would recompute
         // without re-caching, so the timed curation_lm_score closure
@@ -569,7 +544,7 @@ object ScalingBench {
       var primeBest = Double.MaxValue
       var primeCpuBest = Double.MaxValue
       for (_ <- 1 to nRuns) {
-        clearAll()
+        SharedBuild.clearAll(spark)
         cpuListener.reset()
         Tables(spark, dir, "events").count() // table cache outside the curve
         Tables(spark, dir, "lineitem").count()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Per-stage profiling tool (round 17): runs the NAMED declared queries
@@ -14,20 +13,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1).flatMap(_.split(",")).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (sfDir, names) = Harness.sfDirAndNames("StageProfile", args)
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "ERROR",
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"),
+      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
 
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -45,25 +34,7 @@ object StageProfile {
       }
     }
 
-    def clearAll(): Unit = {
-      Tables.clear()
-      ops.Pipelines.clearCache()
-      ops.TextSim.clearCache()
-      ops.Relational.clearCache()
-      ops.TimeSeries.clearCache()
-      ops.Sampling.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(
-        rdd => try rdd.unpersist(blocking = false) catch { case _: Throwable => () })
-      System.gc()
-    }
-
-    // untimed JIT warmup on sf0.001 (the Bench discipline)
-    names.foreach { n =>
-      SparkEntry.queries.get(n).foreach(q =>
-        try q(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () })
-    }
-    clearAll()
+    Harness.warmUp(spark, names)
     spark.sparkContext.addSparkListener(listener)
 
     names.foreach { n =>

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import scala.collection.mutable
 
 /** Per-sfDir table catalog with optional caching.
   *
@@ -18,12 +17,6 @@ import scala.collection.mutable
   * caching is off).
   */
 object Tables {
-  // weakly session-keyed (SessionCache): a restarted SparkSession is
-  // never handed DataFrames bound to its stopped predecessor, and a
-  // dropped session's entries become collectable
-  private val tableCache = new SessionCache[(String, String), DataFrame]
-  private val edgeCache = new SessionCache[String, (DataFrame, DataFrame)]
-
   /** The ten testdata base tables (TESTDATA.md / FIXTURES.md). */
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
@@ -33,11 +26,14 @@ object Tables {
 
   /** Base table by name, e.g. Tables(spark, sfDir, "lineitem"). */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    tableCache.getOrElseUpdate(spark, (sfDir, name)) {
+    tables(spark, (sfDir, name))
+
+  private val tables = SharedBuild[(String, String), DataFrame]("Tables.apply") {
+    case (spark, (sfDir, name)) =>
       val df = read(spark, s"$sfDir/$name.parquet")
       if (cachingEnabled(spark)) df.persist(StorageLevel.MEMORY_AND_DISK)
       else df
-    }
+  }
 
   /** Mount an arbitrary source DataFrame as table `name` under a
     * (possibly virtual) `sfDir` for this session: every declared query
@@ -45,7 +41,7 @@ object Tables {
     * suite executes over CSV/JSON/JDBC-backed tables (Sources.readCsv
     * + mount + any Q). */
   def mount(spark: SparkSession, sfDir: String, name: String, df: DataFrame): Unit =
-    tableCache.put(spark, (sfDir, name), df)
+    tables.put(spark, (sfDir, name), df)
 
   /** Names of TIMESTAMP(NANOS) primitive fields in the parquet footer at
     * `path` (file or directory of .parquet parts). Spark 4 rejects nanos
@@ -140,35 +136,34 @@ object Tables {
     * strong graph (~4k edges) is ever persisted or traversed.
     */
   def edges(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    {
-      edgeCache.getOrElseUpdate(spark, sfDir) {
-        val li = apply(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-        val e = li.groupBy(col("l_orderkey"))
-          .agg(collect_list(col("l_partkey")).as("ps"))
-          .select(explode(expr(
-            "flatten(transform(ps, x -> transform(filter(ps, y -> y > x), y -> struct(x AS s, y AS t))))"))
-            .as("p"))
-          .select(col("p.s").as("s"), col("p.t").as("t"))
-          .groupBy(col("s"), col("t"))
-          .agg(count(lit(1)).as("w"))
-          .filter(col("w") >= 2)
-        val ePersisted = e.persist(StorageLevel.MEMORY_AND_DISK)
-        val ud = ePersisted
-          .select(col("s"), col("t"))
-          .union(ePersisted.select(col("t").as("s"), col("s").as("t")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // materialize once so all six graph queries reuse it
-        ud.count()
-        (ePersisted, ud)
-      }
-    }
+    edgeBuild(spark, sfDir)
+
+  private val edgeBuild = SharedBuild[String, (DataFrame, DataFrame)]("Tables.edges") {
+    (spark, sfDir) =>
+      val li = apply(spark, sfDir, "lineitem")
+        .select(col("l_orderkey"), col("l_partkey"))
+      val e = li.groupBy(col("l_orderkey"))
+        .agg(collect_list(col("l_partkey")).as("ps"))
+        .select(explode(expr(
+          "flatten(transform(ps, x -> transform(filter(ps, y -> y > x), y -> struct(x AS s, y AS t))))"))
+          .as("p"))
+        .select(col("p.s").as("s"), col("p.t").as("t"))
+        .groupBy(col("s"), col("t"))
+        .agg(count(lit(1)).as("w"))
+        .filter(col("w") >= 2)
+      val ePersisted = e.persist(StorageLevel.MEMORY_AND_DISK)
+      val ud = ePersisted
+        .select(col("s"), col("t"))
+        .union(ePersisted.select(col("t").as("s"), col("s").as("t")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // materialize once so all six graph queries reuse it
+      ud.count()
+      (ePersisted, ud)
+  }
 
   /** Undirected edge view only. */
   def ud(spark: SparkSession, sfDir: String): DataFrame =
     edges(spark, sfDir)._2
-
-  private val bipartiteCache = new SessionCache[String, DataFrame]
 
   /** Bipartite purchase graph (§2.42/§2.47): DISTINCT (customer,
     * supplier) edges from orders⋈lineitem, built once per sfDir and
@@ -179,7 +174,10 @@ object Tables {
     * amortizes it). The build is ONE fact-sized equi-join + distinct;
     * every consumer then works at edge/node grain. */
   def bipartite(spark: SparkSession, sfDir: String): DataFrame =
-    bipartiteCache.getOrElseUpdate(spark, sfDir) {
+    bipartiteBuild(spark, sfDir)
+
+  private val bipartiteBuild = SharedBuild[String, DataFrame]("Tables.bipartite") {
+    (spark, sfDir) =>
       val e = apply(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(apply(spark, sfDir, "orders")
@@ -190,10 +188,7 @@ object Tables {
         .persist(StorageLevel.MEMORY_AND_DISK)
       e.count() // materialize once so all consumers reuse it
       e
-    }
-
-  private val bipartiteDegCache =
-    new SessionCache[String, (DataFrame, DataFrame)]
+  }
 
   /** Shared node-degree aggregates of the bipartite purchase graph
     * (round 17, the orderClose recipe): customer side (c, dc) and
@@ -203,13 +198,12 @@ object Tables {
     * feeds h₁ AND the final join), the degree profile histograms both
     * sides, assortativity joins both sides. Node-grain relations, so
     * the checkpoints are small at any SF. */
-  def bipartiteDegrees(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame) =
-    bipartiteDegCache.getOrElseUpdate(spark, sfDir) {
+  val bipartiteDegrees = SharedBuild[String, (DataFrame, DataFrame)]("Tables.bipartiteDegrees") {
+    (spark, sfDir) =>
       val e = bipartite(spark, sfDir)
       (e.groupBy(col("c")).agg(count(lit(1)).as("dc")).localCheckpoint(true),
         e.groupBy(col("sup")).agg(count(lit(1)).as("ds")).localCheckpoint(true))
-    }
+  }
 
   /** Register every base table as a temp view (plus the EDGES views
     * `edges`/`ud`) so the whole surface is reachable from spark.sql —
@@ -220,18 +214,5 @@ object Tables {
     val (e, u) = edges(spark, sfDir)
     e.createOrReplaceTempView("edges")
     u.createOrReplaceTempView("ud")
-  }
-
-  /** Test hook: drop all cached state (e.g. between suites). */
-  def clear(): Unit = {
-    tableCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    edgeCache.values.foreach { case (e, u) =>
-      try { e.unpersist(); u.unpersist() } catch { case _: Throwable => () }
-    }
-    bipartiteCache.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    tableCache.clear()
-    edgeCache.clear()
-    bipartiteCache.clear()
-    bipartiteDegCache.clear()
   }
 }

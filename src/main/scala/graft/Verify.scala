@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,12 @@ object Verify {
     val only: Set[String] = rest.headOption
       .map(_.split(",").toSet).getOrElse(Set.empty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val spark = Harness.session(cpus, "WARN",
+      "spark.sql.shuffle.partitions" -> cpus,
       // SPARK_GRAFT_CACHE=false runs the whole oracle suite with base
       // tables streaming straight from parquet (pushdown intact) —
       // proves the operators are cache-agnostic, not cache-dependent
-      .config("spark.graft.cacheTables",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.graft.cacheTables" -> sys.env.getOrElse("SPARK_GRAFT_CACHE", "true"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

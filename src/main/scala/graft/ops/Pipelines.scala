@@ -19,33 +19,11 @@ import graft.functions.CosineSimilarity.cosineSim
   */
 object Pipelines {
 
-  // weakly session-keyed (graft.SessionCache): see Tables
-  private val shingleCache = new graft.SessionCache[String, DataFrame]
-
-  /** Drop cached shingle/pair sets (bench warmup hygiene). The
-    * persisted shingle sets are unpersisted synchronously; the
-    * checkpointed pair sets (KB-scale) free via ContextCleaner once
-    * the reference drop + the caller's System.gc() collects their
-    * RDDs — unpersist() cannot release checkpoint blocks. */
-  def clearCache(): Unit = {
-    shingleCache.values
-      .foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    shingleCache.clear()
-    pairCache.clear()
-    spanCache.clear()
-    docShingleStatsCache.clear()
-    minhashWideCache.clear()
-    simhashFpCache.clear()
-    knLmCache.values
-      .foreach(lm => try lm.c12.unpersist() catch { case _: Throwable => () })
-    knLmCache.clear()
-  }
-
   /** Materialize the shared shingle + verified-LSH-pair sets for `d`.
     * Bench priming: charges the engine-level materializations to an
     * explicit prime step instead of whichever query touches them first
     * (under concurrent submission the first toucher would otherwise be
-    * billed the whole build while the rest block on the cache lock). */
+    * billed the whole build while the rest wait for it). */
   def prime(s: SparkSession, d: String): Unit = {
     shingles(s, d).count()
     dedupMinhashLsh(s, d) // localCheckpoint(eager) — materialized on return
@@ -96,14 +74,13 @@ object Pipelines {
       .distinct()
   }
 
-  private def shingles(s: SparkSession, d: String): DataFrame = {
-    shingleCache.getOrElseUpdate(s, d) {
+  private val shingles = graft.SharedBuild[String, DataFrame]("Pipelines.shingles") {
+    (s, d) =>
       shingleDocs(table(s, d, "documents"))
         // persist (columnar cache), NOT localCheckpoint: five
         // consumers scan this relation and the columnar batches beat
         // row-block checkpoint scans ~4x (measured on dedup_simhash)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
   }
 
   // ---- text analysis ----
@@ -425,13 +402,10 @@ object Pipelines {
   // sketch audit) — the audit used to re-run the whole 32-sum aggregate
   // over the shingle relation (~2.2 CPU-s at sf0.1). Checkpoint it once
   // per sfDir like minhashWide (|docs| rows × one BIGINT fp — KB–MB at
-  // any corpus); dropped between bench runs by clearCache.
-  private val simhashFpCache = new graft.SessionCache[String, DataFrame]
-
-  private def simhashFpShared(s: SparkSession, d: String): DataFrame =
-    simhashFpCache.getOrElseUpdate(s, d) {
-      simhashFp(s, d).localCheckpoint(true)
-    }
+  // any corpus).
+  private val simhashFpShared = graft.SharedBuild[String, DataFrame]("Pipelines.simhashFp") {
+    (s, d) => simhashFp(s, d).localCheckpoint(true)
+  }
 
   /** SimHash bit-balance audit (§2.20): the share of fingerprints with
     * each of the 32 bits set. A healthy SimHash has every bit near
@@ -491,15 +465,13 @@ object Pipelines {
     * columns in one pass, and each md5 yields FOUR independent 32-bit
     * hash values (8-hex-char substrings), so a row costs 4 md5 calls,
     * not 16. */
-  val dedupMinhashLsh: Q = (s, d) => {
-    // the verified pair result is shared with dedup_clusters — persist
-    // it once per sfDir (same policy as shingles/EDGES)
-    pairCache.getOrElseUpdate(s, d) {
-      // localCheckpoint (eager): materializes like persist+count AND
-      // truncates the 30-operator minhash lineage, so dedup_clusters'
-      // label-prop rounds plan against a leaf, not the full build
-      dedupMinhashLshBuild(s, d).localCheckpoint(true)
-    }
+  // the verified pair result is shared with dedup_clusters — built
+  // once per sfDir (same policy as shingles/EDGES). localCheckpoint
+  // (eager): materializes like persist+count AND truncates the
+  // 30-operator minhash lineage, so dedup_clusters' label-prop rounds
+  // plan against a leaf, not the full build
+  val dedupMinhashLsh: Q = graft.SharedBuild[String, DataFrame]("Pipelines.dedupMinhashLsh") {
+    (s, d) => dedupMinhashLshBuild(s, d).localCheckpoint(true)
   }
 
   /** 16-minhash signature table (doc_id, lang, m0..m15) over a shingle
@@ -519,14 +491,10 @@ object Pipelines {
   // to re-run the full 16-min signature aggregate (4 md5/shingle-row,
   // ~1.9 CPU-s at sf0.1). Checkpoint it once per sfDir like the pair
   // set (|docs| × 16 8-char strings — KB-to-MB scale at any corpus
-  // size that fits the cluster; freed by the bench's between-run sweep
-  // via clearCache + ContextCleaner).
-  private val minhashWideCache = new graft.SessionCache[String, DataFrame]
-
-  private def minhashWide(s: SparkSession, d: String): DataFrame =
-    minhashWideCache.getOrElseUpdate(s, d) {
-      minhashWideOf(shingles(s, d)).localCheckpoint(true)
-    }
+  // size that fits the cluster).
+  private val minhashWide = graft.SharedBuild[String, DataFrame]("Pipelines.minhashWide") {
+    (s, d) => minhashWideOf(shingles(s, d)).localCheckpoint(true)
+  }
 
   /** 2-band × 8-row LSH banding of a wide signature table:
     * (doc_id, lang, band, bkey) — the join key space for candidate
@@ -578,8 +546,6 @@ object Pipelines {
     * labels; output one row per cluster with its canonical (minimum)
     * doc and size. Docs not in any pair are singleton clusters and are
     * excluded here (size >= 2). */
-  private val pairCache = new graft.SessionCache[String, DataFrame]
-
   val dedupClusters: Q = (s, d) => {
     // dedupMinhashLsh returns the persisted pair result (the label-prop
     // loop below references it ~8x — SURVEY §4.2 lineage rule)
@@ -1111,8 +1077,6 @@ object Pipelines {
       .orderBy("cid")
   }
 
-  private val docShingleStatsCache = new graft.SessionCache[String, DataFrame]
-
   /** Per-doc shingle stats (doc_id, total, u): total distinct 3-gram
     * shingles and how many are corpus-UNIQUE (df == 1 — owned by
     * exactly this doc, the min(doc_id)-of-a-1-row-group trick).
@@ -1121,8 +1085,8 @@ object Pipelines {
     * checkpointed build (two map-combined aggregates over the shared
     * shingle relation + a doc-grain join) instead of two. Doc-grain,
     * so the checkpoint is |docs|-bounded at any SF. */
-  private def docShingleStats(s: SparkSession, d: String): DataFrame =
-    docShingleStatsCache.getOrElseUpdate(s, d) {
+  private val docShingleStats = graft.SharedBuild[String, DataFrame]("Pipelines.docShingleStats") {
+    (s, d) =>
       val sh = shingles(s, d).select(col("doc_id"), col("g"))
       val tot = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("total"))
       val uni = sh.groupBy(col("g"))
@@ -1133,7 +1097,7 @@ object Pipelines {
         .select(col("doc_id"), col("total"),
           coalesce(col("u"), lit(0L)).as("u"))
         .localCheckpoint(true)
-    }
+  }
 
   /** Per-doc duplicated-ngram coverage histogram (§2.21): the share of
     * each document's distinct 3-gram shingles that also appear in at
@@ -2499,14 +2463,14 @@ object Pipelines {
     * ≥ minTok tokens survive. Columns: d1, d2, s1, s2 (1-based span
     * starts), tok (span token length). */
   private[ops] def dupSpans(s: SparkSession, d: String, minTok: Int): DataFrame =
-    spanCache.getOrElseUpdate(s, (d, minTok)) {
-      // localCheckpoint (eager): four consumers (spans dedup, coverage,
-      // templates, excision) share one build; the checkpoint truncates
-      // the collect-over-collect lineage (the dedup_minhash_lsh policy)
-      dupSpansBuild(s, d, minTok).localCheckpoint(true)
-    }
+    spans(s, (d, minTok))
 
-  private val spanCache = new graft.SessionCache[(String, Int), DataFrame]
+  // localCheckpoint (eager): four consumers (spans dedup, coverage,
+  // templates, excision) share one build; the checkpoint truncates
+  // the collect-over-collect lineage (the dedup_minhash_lsh policy)
+  private val spans = graft.SharedBuild[(String, Int), DataFrame]("Pipelines.dupSpans") {
+    case (s, (d, minTok)) => dupSpansBuild(s, d, minTok).localCheckpoint(true)
+  }
 
   /** The LAZY span plan (exposed private[graft] so EngineSpec can pin
     * the pre-checkpoint shape). Round 17 (guide §2.4): the [2,20] df
@@ -2687,16 +2651,12 @@ object Pipelines {
     * IDENTICAL model (same md5 train bucket over the same corpus), so
     * the training pass — the corpus bigram explode + the vocab²
     * aggregate — materializes once (the minhashWide/simhashFp shared-
-    * build policy; c12 is persisted by knTrain, dropped by
-    * [[clearCache]] so nothing survives a bench run). Curation's
+    * build policy; c12 is persisted by knTrain). Curation's
     * SAMPLE-capped lmFilter model is a different estimate and keeps
     * its own build. */
-  private[graft] def knLmShared(s: SparkSession, d: String): KnLm =
-    knLmCache.getOrElseUpdate(s, d) {
-      knTrain(knBigrams(table(s, d, "documents")).filter(col("is_train")))
-    }
-
-  private val knLmCache = new graft.SessionCache[String, KnLm]
+  private[graft] val knLmShared = graft.SharedBuild[String, KnLm]("Pipelines.knLm") {
+    (s, d) => knTrain(knBigrams(table(s, d, "documents")).filter(col("is_train")))
+  }
 
   /** Score bigram rows against the LM: adds `kn_seen` and the exact
     * rational's floored −ln, `kn_lq` (see the op Scaladoc for the

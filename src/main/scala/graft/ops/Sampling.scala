@@ -498,23 +498,18 @@ object Sampling {
       .agg(floor(sum(col("cents")).cast(DoubleType) /
         count(lit(1)).cast(DoubleType)).cast(LongType).as("pred_cents"))
 
-  private val conformalCache = new graft.SessionCache[String, DataFrame]
-
-  /** Drop the per-sfDir shared builds (bench between-run sweep). */
-  def clearCache(): Unit = conformalCache.clear()
-
-  private def conformalBase(s: SparkSession, d: String): DataFrame =
-    // round 17 (the orderClose recipe): the conformal PAIR (interval +
-    // coverage) each re-derived this split+prediction relation and
-    // checkpointed its own copy — one shared checkpoint now serves
-    // both (|orders|-grain, same contract as their previous per-query
-    // checkpoints; cleared in every between-run sweep).
-    conformalCache.getOrElseUpdate(s, d) {
+  // round 17 (the orderClose recipe): the conformal PAIR (interval +
+  // coverage) each re-derived this split+prediction relation and
+  // checkpointed its own copy — one shared checkpoint now serves
+  // both (|orders|-grain, same contract as their previous per-query
+  // checkpoints).
+  private val conformalBase = graft.SharedBuild[String, DataFrame]("Sampling.conformalBase") {
+    (s, d) =>
       val o = conformalSplit(s, d)
       o.join(broadcast(conformalPred(o)), Seq("seg"))
         .withColumn("resid", abs(col("cents") - col("pred_cents")))
         .localCheckpoint(true)
-    }
+  }
 
   /** The ⌈(n+1)(1−α)⌉ calibration rank at α = 0.1, clamped to n —
     * shared by the §2.35 conformal pair (1-based within segment). */

@@ -15,24 +15,18 @@ import org.apache.spark.sql.types._
   * generate_series + last_value IGNORE NULLS. */
 object TimeSeries {
 
-  /** Drop the per-sfDir shared builds (bench between-run sweep: the
-    * next run must recompute from parquet). */
-  def clearCache(): Unit = { orderCloseCache.clear(); weekRanksCache.clear() }
-
   /** (l_orderkey, close_day): each order's last ship date — the
     * identical per-order fact aggregate ts_survival_km and
     * ts_order_backlog both open with, materialized once per sfDir
     * (round 16, the minhashWide shared-build policy; |orders|-grain,
     * localCheckpoint truncates the aggregate lineage). */
-  private def orderClose(s: SparkSession, d: String): DataFrame =
-    orderCloseCache.getOrElseUpdate(s, d) {
+  private val orderClose = graft.SharedBuild[String, DataFrame]("TimeSeries.orderClose") {
+    (s, d) =>
       table(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(max(to_date(col("l_shipdate"))).as("close_day"))
         .localCheckpoint(true)
-    }
-
-  private val orderCloseCache = new graft.SessionCache[String, DataFrame]
+  }
 
   /** Daily resample of per-user event values (users 0-4), forward-
     * filled across observation gaps; days before a user's first
@@ -2663,16 +2657,14 @@ object TimeSeries {
     * within its week uses AVERAGE ranks on ties as exact doubled
     * integers (2·avg = 2·less + ties_incl_self + 1 — the wilcoxon
     * recipe), so Σr2 = 56 per week by construction. The 7×7 in-week
-    * self-join is calendar-bounded. */
-  private val weekRanksCache = new graft.SessionCache[String, DataFrame]
-
-  // round 17 (the orderClose recipe): FOUR k-sample queries (friedman,
-  // page trend, kendall W, cochran Q) each rebuilt this daily
-  // aggregate + in-week rank self-join (and its eager inner
-  // checkpoint). weeks×7 rows — built once per sfDir, cleared in every
-  // between-run sweep.
-  private def weekRanks(s: SparkSession, d: String): DataFrame =
-    weekRanksCache.getOrElseUpdate(s, d) { weekRanksBuild(s, d) }
+    * self-join is calendar-bounded.
+    *
+    * Round 17 (the orderClose recipe): FOUR k-sample queries (friedman,
+    * page trend, kendall W, cochran Q) each rebuilt this daily
+    * aggregate + in-week rank self-join (and its eager inner
+    * checkpoint). weeks×7 rows — built once per sfDir. */
+  private val weekRanks =
+    graft.SharedBuild[String, DataFrame]("TimeSeries.weekRanks")(weekRanksBuild)
 
   private def weekRanksBuild(s: SparkSession, d: String): DataFrame = {
     val daily = table(s, d, "orders")

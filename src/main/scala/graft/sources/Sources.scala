@@ -43,8 +43,6 @@ object Sources {
   def readText(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
 
-  private val convCache = new graft.SessionCache[(String, String, String), DataFrame]
-
   /** A base table served through a BUCKETED managed table (§2.45):
     * written once per (session, sfDir, table) with `bucketBy(n, key)` +
     * `sortBy(key)` into the session warehouse, read back via
@@ -56,8 +54,12 @@ object Sources {
     * coexist in one warehouse. */
   def bucketed(spark: SparkSession, sfDir: String, name: String,
       keyCol: String, nBuckets: Int): DataFrame =
-    convCache.getOrElseUpdate(spark, (sfDir, name, s"bucketed$nBuckets")) {
-      // collision-resistant tier suffix: the session cache keys on the
+    bucketedBuild(spark, (sfDir, name, keyCol, nBuckets))
+
+  private val bucketedBuild =
+    graft.SharedBuild[(String, String, String, Int), DataFrame]("Sources.bucketed") {
+    case (spark, (sfDir, name, keyCol, nBuckets)) =>
+      // collision-resistant tier suffix: the shared build keys on the
       // full sfDir, so the table name must too — a hashCode collision
       // across tiers would silently serve the wrong tier's data (and
       // math.abs(Int.MinValue) stays negative)
@@ -114,7 +116,11 @@ object Sources {
     * shortest-repr text (reads back bit-exact). */
   def via(spark: SparkSession, sfDir: String, name: String,
       format: String): DataFrame =
-    convCache.getOrElseUpdate(spark, (sfDir, name, format)) {
+    conversions(spark, (sfDir, name, format))
+
+  private val conversions =
+    graft.SharedBuild[(String, String, String), DataFrame]("Sources.via") {
+    case (spark, (sfDir, name, format)) =>
       val base = graft.Tables(spark, sfDir, name)
       val dirPath = java.nio.file.Files
         .createTempDirectory(s"graft-$format-$name")

@@ -136,8 +136,8 @@ class EngineSpec extends AnyFunSuite {
     // scan a PRIVATE copy of the file: the SparkContext-wide
     // CacheManager substitutes InMemoryRelation by canonical plan (=
     // path), so reading the shared sf0.01 path would either hit
-    // another suite's cache or require Tables.clear() — which
-    // unpersists EVERY suite's table caches mid-run (the cross-suite
+    // another suite's cache or require SharedBuild.clearAll — which
+    // uncaches EVERY suite's tables mid-run (the cross-suite
     // interference class commit 54c3684 fixed)
     val dir = java.nio.file.Files.createTempDirectory("pushdown_probe")
     val copy = dir.resolve("lineitem.parquet")
@@ -162,26 +162,15 @@ class EngineSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // drop every cache family first so the parallel burst actually
-    // races getOrElseUpdate builds (a warm-cache run would test
-    // nothing); unpersist is correctness-neutral for any other suite
-    Tables.clear()
-    ops.Pipelines.clearCache()
-    ops.TextSim.clearCache()
-    val futures = (1 to 3).flatMap { _ =>
-      Seq(
-        Future(ops.GraphOps.graphDegree(spark, sf0001).count()),
-        Future(ops.Pipelines.pipelineFingerprint(spark, sf0001).count()),
-        Future(ops.TextSim.simCosineTopk(spark, sf0001).count()),
-        Future(ops.Relational.aggHashQ1(spark, sf0001).count()))
-    }
-    val results = Await.result(Future.sequence(futures), 180.seconds)
+    // drop every shared build first so the parallel burst actually
+    // races cold builds (a warm run would test nothing)
+    SharedBuild.clearAll(spark)
+    val qs: Seq[ops.Q] = Seq(ops.Pipelines.pipelineFingerprint,
+      ops.Relational.aggHashQ1) ++ SharedBuildSpec.touchEveryBuild
+    val futures = (1 to 3).flatMap(_ => qs.map(q => Future(q(spark, sf0001).count())))
+    val results = Await.result(Future.sequence(futures), 300.seconds)
     // compare the racing runs against the (now warm) serial answers
-    val serial = Seq(
-      ops.GraphOps.graphDegree(spark, sf0001).count(),
-      ops.Pipelines.pipelineFingerprint(spark, sf0001).count(),
-      ops.TextSim.simCosineTopk(spark, sf0001).count(),
-      ops.Relational.aggHashQ1(spark, sf0001).count())
+    val serial = qs.map(q => q(spark, sf0001).count())
     assert(results == (1 to 3).flatMap(_ => serial))
   }
 

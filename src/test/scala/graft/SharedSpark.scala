@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole test JVM. */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Harness.session("4", "WARN", "spark.sql.shuffle.partitions" -> "4")
   val sf0001 = "/root/testdata/sf0.001"
 }
