@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.{Executors, TimeUnit}
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark on SPARK_GRAFT_SF_DIR (default sf0.1), one fresh
   * JVM, session startup excluded — matching BASELINE.md's warm-process
@@ -165,12 +166,16 @@ object Bench {
       primePool.shutdown()
     }
 
+    /** "Class: first message line" of a query failure. */
+    def why(e: Throwable): String = e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+
     /** Run every query through a `par`-thread pool; returns
-      * (name, wallSeconds, driverCpuSeconds, ok) in declaration order
-      * plus section wall time (including the priming step when
+      * (name, wallSeconds, driverCpuSeconds, failure reason) in
+      * declaration order plus section wall time (including the priming step when
       * par > 1) and the per-query executor-CPU map from the listener
       * (this run only — the listener is reset on entry). */
-    def runSuite(dir: String): (Seq[(String, Double, Double, Boolean)],
+    def runSuite(dir: String): (Seq[(String, Double, Double, Option[String])],
                                 Double, Double, Map[String, Double]) = {
       cpuListener.reset()
       val pool = Executors.newFixedThreadPool(par)
@@ -180,8 +185,8 @@ object Bench {
       if (par > 1) prime(dir)
       val primeSec = (System.nanoTime() - t0) / 1e9
       val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
-        name -> pool.submit(new java.util.concurrent.Callable[(Double, Double, Boolean)] {
-          def call(): (Double, Double, Boolean) = {
+        name -> pool.submit(new java.util.concurrent.Callable[(Double, Double, Option[String])] {
+          def call(): (Double, Double, Option[String]) = {
             // one scheduler pool per worker thread (thread-local,
             // idempotent) — this is what makes FAIR mode real
             spark.sparkContext.setLocalProperty(
@@ -191,25 +196,25 @@ object Bench {
             spark.sparkContext.setJobGroup(name, name)
             val c0 = threadMx.getCurrentThreadCpuTime
             val q0 = System.nanoTime()
-            val ok = try { fn(spark, dir).count(); true }
-                     catch { case _: Throwable => false }
+            val err = try { fn(spark, dir).count(); None }
+                      catch { case NonFatal(e) => Some(why(e)) }
             val wall = (System.nanoTime() - q0) / 1e9
             val drvCpu = (threadMx.getCurrentThreadCpuTime - c0) / 1e9
             spark.sparkContext.clearJobGroup()
-            (wall, drvCpu, ok)
+            (wall, drvCpu, err)
           }
         })
       }
       val results = futures.map { case (name, f) =>
-        val (secs, drvCpu, ok) = f.get()
-        (name, secs, drvCpu, ok)
+        val (secs, drvCpu, err) = f.get()
+        (name, secs, drvCpu, err)
       }
       pool.shutdown()
       pool.awaitTermination(60, TimeUnit.SECONDS)
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async; give the bus a moment to drain the
-      // tail task-end events before snapshotting (outside the timed wall)
-      Thread.sleep(300)
+      // listener delivery is async: drain the tail task-end events
+      // before snapshotting (outside the timed wall)
+      Harness.drainListeners(spark)
       (results, wall, primeSec, cpuListener.snapshot())
     }
 
@@ -230,7 +235,7 @@ object Bench {
     // hit: a fixed-count best-of-N under sustained host load records
     // whatever the load allows (round 5), while "two independent
     // windows hit the same floor" is actual evidence of the floor.
-    case class Run(results: Seq[(String, Double, Double, Boolean)], wall: Double,
+    case class Run(results: Seq[(String, Double, Double, Option[String])], wall: Double,
                    primeSec: Double, cpuSec: Double, queryCpu: Map[String, Double])
     def converged(rs: Seq[Run]): Boolean = {
       val walls = rs.map(_.wall).sorted
@@ -264,8 +269,10 @@ object Bench {
     }
     val best = runs.minBy(_.wall)
     // a query failing in ANY run is a failure — don't let best-of-N
-    // hide flakiness
-    val failed = runs.flatMap(_.results).collect { case (n, _, _, false) => n }.distinct
+    // hide flakiness; its first recorded reason is kept
+    val failedWhy = runs.flatMap(_.results)
+      .collect { case (n, _, _, Some(why)) => n -> why }.distinctBy(_._1)
+    val failed = failedWhy.map(_._1)
 
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     val qs = best.results.map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
@@ -283,6 +290,9 @@ object Bench {
     val sumQ = best.results.map(_._2).sum
     val total = if (par == 1) sumQ else best.wall
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedWhyJson = failedWhy
+      .map { case (n, why) => Harness.jsonString(n) + ":" + Harness.jsonString(why) }
+      .mkString("{", ",", "}")
     val runsWall = runs.map(r => r3(r.wall)).mkString("[", ",", "]")
     val runsCpu = runs.map(r => r3(r.cpuSec)).mkString("[", ",", "]")
     // Stop Spark (at ERROR log level) BEFORE printing so no stray
@@ -299,7 +309,7 @@ object Bench {
     // the local twin keeps that claim measured, not assumed)
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
       .equalsIgnoreCase("true")
-    val detailLine = s"""{"metric":"detail","aqe":$aqe,"queries":$qs,"queries_cpu_sec":$qsCpu,"failed":$failedJson,"par":$par,"prime_sec":${r3(best.primeSec)},"runs_wall_sec":$runsWall,"runs_cpu_sec":$runsCpu,"sf":"$sfDir"}"""
+    val detailLine = s"""{"metric":"detail","aqe":$aqe,"queries":$qs,"queries_cpu_sec":$qsCpu,"failed":$failedJson,"failed_why":$failedWhyJson,"par":$par,"prime_sec":${r3(best.primeSec)},"runs_wall_sec":$runsWall,"runs_cpu_sec":$runsCpu,"sf":"$sfDir"}"""
     val totalLine = s"""{"metric":"total","aqe":$aqe,"value":${r3(total)},"unit":"sec","n":${best.results.size},"failed":${failed.size},"par":$par,"runs":${runs.size},"sum_query_sec":${r3(sumQ)},"wall_sec":${r3(best.wall)},"runs_wall_sec":$runsWall,"runs_cpu_sec":$runsCpu,"sf":"$sfDir"}"""
     // The driver's BENCH_r{N}.json artifact tail-keeps only the last
     // 2,000 stdout chars, which truncates queries_cpu_sec — the
@@ -311,7 +321,7 @@ object Bench {
         sys.env.getOrElse("GRAFT_DETAIL_OUT", "bench/bench_detail_latest.json"))
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.writeString(p, detailLine + "\n" + totalLine + "\n")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] detail file not written: $e") }
     println(detailLine)
     println(totalLine)
     System.out.flush()

@@ -35,6 +35,23 @@ object Harness {
     (sfDir, names)
   }
 
+  /** Blocks until every posted listener event is delivered, so a CPU
+    * snapshot taken next counts the query's last task-end events. */
+  def drainListeners(spark: SparkSession): Unit =
+    org.apache.spark.sql.classic.GraftBridge.drainListenerBus(spark)
+
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (<0x20) escaped, so one tab or CR cannot break a reader's parse. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Untimed JIT warm-up: each named query once on sf0.001, then every
     * shared build dropped so the measured runs start cold. */
   def warmUp(spark: SparkSession, names: Seq[String]): Unit = {

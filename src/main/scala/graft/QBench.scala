@@ -41,7 +41,7 @@ object QBench {
             walls(i) = (System.nanoTime() - t0) / 1e9
             val drv = (threadMx.getCurrentThreadCpuTime - c0) / 1e9
             spark.sparkContext.clearJobGroup()
-            Thread.sleep(200) // listener drain
+            Harness.drainListeners(spark)
             cpusS(i) = cpuListener.snapshot().getOrElse(n, 0.0) + drv
           }
           def r3(v: Double) = math.round(v * 1000) / 1000.0

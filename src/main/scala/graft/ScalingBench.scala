@@ -340,7 +340,7 @@ object ScalingBench {
           best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
         }
         spark.sparkContext.clearJobGroup()
-        Thread.sleep(300) // async listener bus drain
+        Harness.drainListeners(spark)
         val cpu = cpuListener.snapshot()
         primeCpuBest = math.min(primeCpuBest, cpu.getOrElse("shingle_prime", 0.0))
         for ((name, _) <- opsList)
@@ -497,7 +497,7 @@ object ScalingBench {
         // round-13 §2.47/§2.48: hits re-measured ON the shared
         // bipartite build (its first-toucher cost IS the build; the
         // profile/assortativity marginals prove the amortization),
-        // cosupply's in-row pair expansion (the EDGES recipe at
+        // cosupply's in-row pair expansion (graft.ops.Pairs at
         // supplier grain — α should track the per-order aggregate),
         // and the three day-grain complexity folds (CLAIM: ~flat past
         // the shared date aggregate; sample entropy is days², a
@@ -557,7 +557,7 @@ object ScalingBench {
           best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
         }
         spark.sparkContext.clearJobGroup()
-        Thread.sleep(300)
+        Harness.drainListeners(spark)
         val cpu = cpuListener.snapshot()
         primeCpuBest = math.min(primeCpuBest, cpu.getOrElse("edges_prime", 0.0))
         for ((name, _) <- opsList)

@@ -47,7 +47,7 @@ object StageProfile {
           val tPlan = (System.nanoTime() - t0) / 1e9
           df.count()
           val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // listener drain
+          Harness.drainListeners(spark)
           println(f"[query] $n construct=${tPlan}%.3f s wall=${wall}%.3f s")
       }
     }

@@ -126,31 +126,19 @@ object Tables {
     * ud = symmetrized undirected view. Built once per sfDir and persisted
     * — the single biggest bench lever (6.3 s/build at sf0.1).
     *
-    * Scale note: pairs are generated per order from the collected part
-    * list (ONE shuffle on l_orderkey; a self-join would shuffle both
-    * sides) — per-order line counts are bounded (max 17 -> <= 136
-    * pairs/order), so the in-row pair array is tiny and there is no
-    * skew blowup. Pair multiplicity matches the self-join formulation
-    * exactly (every occurrence × every greater occurrence). The >= 2
-    * filter is applied in the same aggregation so only the sparse
-    * strong graph (~4k edges) is ever persisted or traversed.
+    * Scale note: pairs are expanded in-row per order by
+    * [[graft.ops.Pairs.cooccurring]] (ONE shuffle on l_orderkey); group
+    * bound: ≤17 lines/order at sf0.1 (≤136 pairs/order). Only the
+    * sparse strong graph (~4k edges) is ever persisted or traversed.
     */
   def edges(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
     edgeBuild(spark, sfDir)
 
   private val edgeBuild = SharedBuild[String, (DataFrame, DataFrame)]("Tables.edges") {
     (spark, sfDir) =>
-      val li = apply(spark, sfDir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val e = li.groupBy(col("l_orderkey"))
-        .agg(collect_list(col("l_partkey")).as("ps"))
-        .select(explode(expr(
-          "flatten(transform(ps, x -> transform(filter(ps, y -> y > x), y -> struct(x AS s, y AS t))))"))
-          .as("p"))
-        .select(col("p.s").as("s"), col("p.t").as("t"))
-        .groupBy(col("s"), col("t"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= 2)
+      val orders = apply(spark, sfDir, "lineitem")
+        .groupBy(col("l_orderkey")).agg(collect_list(col("l_partkey")).as("ps"))
+      val e = graft.ops.Pairs.cooccurring(orders, col("ps"), 2).toDF("s", "t", "w")
       val ePersisted = e.persist(StorageLevel.MEMORY_AND_DISK)
       val ud = ePersisted
         .select(col("s"), col("t"))

@@ -553,18 +553,16 @@ object Crawl {
     // round 16: the per-hash doc list replaces the df-filter + h-keyed
     // self-join (which re-derived the sentence chain per join side —
     // the plan carried 8 scans of the regexp explode). ONE groupBy(h)
-    // collects the ≤20 doc ids (df cap [2,20] bounds every list), the
-    // C(≤20,2) pair expansion is in-row (the cosupply recipe), and the
-    // sentence chain is scanned exactly once. Same exact counts.
+    // collects the doc ids, [[Pairs.ordered]] expands them in-row
+    // carrying (h, tok); group bound: df∈[2,20].
     val ds = sentenceRows(s, d)
       .select(col("doc_id"), col("h"), col("tok")).distinct()
     val byH = ds.groupBy(col("h"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"),
         max(col("tok")).as("tok"), count(lit(1)).as("c"))
       .filter(col("c").between(2L, 20L))
-    byH.select(col("h"), col("tok"), explode(expr(
-        "flatten(transform(ids, x -> transform(filter(ids, y -> y > x), " +
-          "y -> struct(x AS d1, y AS d2))))")).as("p"))
+    byH.select(col("h"), col("tok"), explode(Pairs.ordered(col("ids"))(
+        (x, y) => struct(x.as("d1"), y.as("d2")))).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
         col("h"), col("tok"))
       .groupBy(col("d1"), col("d2"))

@@ -847,11 +847,11 @@ object GraphOps {
     * graph, the co-purchase analogue of Tables.edges at supplier
     * grain. Exactness: co-order and per-supplier order counts are
     * exact integers; cosine = co/√(n₁·n₂) is one double op floored
-    * 1e6; (q, s1, s2) is a total order. Scale: pair expansion is
-    * in-row per order (line counts bounded → ≤136 pairs/order, the
-    * Tables.edges recipe — NEVER a supplier×supplier join); the ≥2
-    * co-order floor keeps only the sparse strong pairs; top-20 is
-    * TakeOrdered. */
+    * 1e6; (q, s1, s2) is a total order. Scale: pairs are expanded
+    * in-row per order by [[Pairs.cooccurring]] — NEVER a
+    * supplier×supplier join; group bound: ≤17 lines/order at sf0.1.
+    * The ≥2 co-order floor keeps only the sparse strong pairs; top-20
+    * is TakeOrdered. */
   val graphCosupplySupplierSim: Q = (s, d) => {
     // ONE shuffle total on the fact: collect_set(map-side-combined)
     // replaces distinct+groupBy (the first bench cut paid two fact
@@ -863,13 +863,7 @@ object GraphOps {
       .groupBy(col("l_orderkey"))
       .agg(collect_set(col("l_suppkey")).as("ss"))
       .localCheckpoint(true) // two consumers: pair expansion + counts
-    val pairs = sets
-      .select(explode(expr(
-        "flatten(transform(ss, x -> transform(filter(ss, y -> y > x), y -> struct(x AS s1, y AS s2))))"))
-        .as("p"))
-      .select(col("p.s1").as("s1"), col("p.s2").as("s2"))
-      .groupBy(col("s1"), col("s2")).agg(count(lit(1)).as("co_orders"))
-      .filter(col("co_orders") >= 2)
+    val pairs = Pairs.cooccurring(sets, col("ss"), 2)
     // round 17 (guide §1.2 / measured from the plan dump): the
     // per-supplier order-count aggregate was re-executed for EACH of
     // the two join sides — two full explodes of the checkpointed sets.
@@ -879,11 +873,11 @@ object GraphOps {
       .groupBy(col("l_suppkey")).agg(count(lit(1)).as("n_ord"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     pairs
-      .join(n.toDF("k1", "n_orders1"), col("s1") === col("k1"))
-      .join(n.toDF("k2", "n_orders2"), col("s2") === col("k2"))
-      .select(col("s1"), col("s2"), col("co_orders"),
+      .join(n.toDF("k1", "n_orders1"), col("a") === col("k1"))
+      .join(n.toDF("k2", "n_orders2"), col("b") === col("k2"))
+      .select(col("a").as("s1"), col("b").as("s2"), col("n").as("co_orders"),
         col("n_orders1"), col("n_orders2"),
-        floor(col("co_orders").cast(DoubleType) /
+        floor(col("n").cast(DoubleType) /
           sqrt(col("n_orders1").cast(DoubleType) *
             col("n_orders2").cast(DoubleType)) * 1e6)
           .cast(LongType).as("cosine_q6"))

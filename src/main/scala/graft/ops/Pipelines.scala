@@ -2112,23 +2112,14 @@ object Pipelines {
       .select(col("doc_id"), explode(array_distinct(expr(
         "transform(sequence(4, size(hs)), " +
           "p -> array_min(slice(hs, int(p) - 3, 4)))"))).as("mh"))
-    // round 16: ONE groupBy(mh) collects the ≤10 doc ids per retained
-    // fingerprint (the df cap [2,10] bounds every list) and the
-    // C(≤10,2) pair expansion happens in-row — replacing the persisted
-    // fingerprint relation + df-filter + mh-keyed self-join (three
-    // consumers, two extra shuffles). Same exact shared-hash counts.
-    val pairs = fp.groupBy(col("mh"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"),
-        count(lit(1)).as("df"))
+    // round 16: ONE groupBy(mh) collects the doc ids per retained
+    // fingerprint and [[Pairs.cooccurring]] expands them in-row, in
+    // place of an mh-keyed self-join; group bound: df∈[2,10].
+    val byMh = fp.groupBy(col("mh"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids"), count(lit(1)).as("df"))
       .filter(col("df").between(2, 10))
-      .select(explode(expr(
-        "flatten(transform(ids, x -> transform(filter(ids, y -> y > x), " +
-          "y -> struct(x AS d1, y AS d2))))")).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= 3)
-    pairs.select(col("d1"), col("d2"), asLong(col("n_shared")).as("n_shared"))
+    Pairs.cooccurring(byMh, col("ids"), 3)
+      .select(col("a").as("d1"), col("b").as("d2"), asLong(col("n")).as("n_shared"))
       .orderBy("d1", "d2")
   }
 
@@ -2393,33 +2384,22 @@ object Pipelines {
   private def spanShingles(s: SparkSession, d: String): DataFrame =
     spanShingleDocs(table(s, d, "documents"))
 
-  /** In-row d1 < d2 pair expansion of per-hash occurrence groups
-    * (h, occ: array<struct<d,p>>) → (d1, d2, p1, df) — the winnowing
-    * recipe (round 17): each pair of cross-doc occurrences of one hash
-    * yields exactly one row, the same multiset the old h-keyed
-    * self-join produced, without shuffling the shingle relation twice
-    * more. Fan-out is pigeonhole-bounded by the [2,20] df cap every
-    * caller applies (≤ C(20,2) = 190 pairs/hash at ANY corpus size). */
-  private def spanPairsFromOcc(grouped: DataFrame): DataFrame =
-    grouped
-      .select(explode(expr(
-        "flatten(transform(occ, x -> transform(filter(occ, y -> y.d > x.d), " +
-          "y -> struct(x.d AS d1, y.d AS d2, x.p AS p1, x.p - y.p AS df))))"))
-        .as("pr"))
-      .select(col("pr.d1").as("d1"), col("pr.d2").as("d2"),
-        col("pr.p1").as("p1"), col("pr.df").as("df"))
+  /** Gram-match pair rows `pr` (d1 < d2, p1, pos-diff df) of a hash's
+    * occurrence list `occ: array<struct<d,p>>`, expanded in-row by
+    * [[Pairs.ordered]]; group bound: df∈[2,20] (≤190 pairs/hash). */
+  private def occPairs: Column =
+    explode(Pairs.ordered(col("occ"), _("d")) { (x, y) =>
+      struct(x("d").as("d1"), y("d").as("d2"), x("p").as("p1"), (x("p") - y("p")).as("df"))
+    }).as("pr")
 
   /** Gram-match pair rows (d1 < d2, p1, pos-diff) from a keep-filtered
-    * positioned-shingle relation (doc_id, pos, h) — the df-capped
-    * pairing at the heart of the span build, shared with
-    * [[IncrementalSpans]]. Round 17: ONE groupBy(h) collect + in-row
-    * expansion replaces the h-keyed self-join (same pair multiset —
-    * every cross-doc occurrence pair of a hash appears exactly once,
-    * oriented d1 < d2). */
+    * positioned-shingle relation (doc_id, pos, h), shared with
+    * [[IncrementalSpans]]: ONE groupBy(h) collect + [[occPairs]] in
+    * place of an h-keyed self-join. */
   private[ops] def spanGramPairs(fk: DataFrame): DataFrame =
-    spanPairsFromOcc(fk.groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id").as("d"), col("pos").as("p")))
-        .as("occ")))
+    fk.groupBy(col("h"))
+      .agg(collect_list(struct(col("doc_id").as("d"), col("pos").as("p"))).as("occ"))
+      .select(occPairs).select("pr.*")
 
   /** Gaps-and-islands over gram-match pair rows → maximal spans
     * (d1, d2, s1, s2, tok), ≥ minTok only — the second half of the
@@ -2484,10 +2464,9 @@ object Pipelines {
       : DataFrame = {
     val grouped = spanShingles(s, d)
       .groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id").as("d"), col("pos").as("p")))
-        .as("occ"))
+      .agg(collect_list(struct(col("doc_id").as("d"), col("pos").as("p"))).as("occ"))
       .filter(size(col("occ")).between(2, 20))
-    spansFromPairRows(spanPairsFromOcc(grouped), minTok)
+    spansFromPairRows(grouped.select(occPairs).select("pr.*"), minTok)
   }
 
   /** Substring-level duplicate-span dedup (§2.39, the round-12

@@ -1942,17 +1942,14 @@ object Relational {
   /** Brand co-occurrence within orders (§2.18c): market-basket pairs
     * with lift — the "bought together" read, bounded to the 25-brand
     * keyspace (≤300 pairs at any fact scale). Counts exact; lift is
-    * one double tree on identical operands. Scale: the distinct
-    * (order, brand) relation shuffles on l_orderkey once; the pair
-    * self-join is per-order bounded (≤25 brands/order); brand totals
+    * one double tree on identical operands. Scale: the per-order
+    * brand sets shuffle on l_orderkey once and [[Pairs.cooccurring]]
+    * expands them in-row; group bound: ≤25 brands/order. Brand totals
     * are a broadcast 25-row relation. */
   val aggBasketPairs: Q = (s, d) => {
-    // round 16: the graph_cosupply recipe — ONE fact shuffle total.
-    // collect_set(brand) per order (map-side combined) replaces the old
-    // distinct + two re-shuffles for the self-join; the ≤25-brand pair
-    // expansion happens in-row, and brand/order totals explode the SAME
-    // checkpointed per-order sets (lineitem is scanned exactly once;
-    // 5.5 → ~2.5 CPU-s at sf0.1, identical exact counts).
+    // round 16: ONE fact shuffle total — brand/order totals explode the
+    // SAME checkpointed per-order sets the pairs come from (lineitem is
+    // scanned exactly once; 5.5 → ~2.5 CPU-s at sf0.1).
     // round 17 (ADVICE): no broadcast() hint on part — the part table
     // scales linearly with SF (20M rows at sf100), so forcing the hint
     // overrides the planner at exactly the scale where it must not;
@@ -1973,19 +1970,12 @@ object Relational {
       .groupBy(col("b")).agg(count(lit(1)).as("nb"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = sets.agg(count(lit(1)).as("n_orders"))
-    sets
-      .select(explode(expr(
-        "flatten(transform(bs, x -> transform(filter(bs, y -> y > x), " +
-          "y -> struct(x AS b1, y AS b2))))")).as("p"))
-      .select(col("p.b1").as("b1"), col("p.b2").as("b2"))
-      .groupBy(col("b1"), col("b2"))
-      .agg(count(lit(1)).as("n_pair"))
-      .filter(col("n_pair") >= 5)
-      .join(broadcast(n.select(col("b").as("b1"), col("nb").as("n1"))), Seq("b1"))
-      .join(broadcast(n.select(col("b").as("b2"), col("nb").as("n2"))), Seq("b2"))
+    Pairs.cooccurring(sets, col("bs"), 5)
+      .join(broadcast(n.select(col("b").as("a"), col("nb").as("n1"))), Seq("a"))
+      .join(broadcast(n.select(col("b"), col("nb").as("n2"))), Seq("b"))
       .crossJoin(broadcast(tot))
-      .select(col("b1"), col("b2"), asLong(col("n_pair")).as("n_pair"),
-        round(col("n_pair").cast(DoubleType) * col("n_orders").cast(DoubleType) /
+      .select(col("a").as("b1"), col("b").as("b2"), asLong(col("n")).as("n_pair"),
+        round(col("n").cast(DoubleType) * col("n_orders").cast(DoubleType) /
           (col("n1").cast(DoubleType) * col("n2").cast(DoubleType)), 6).as("lift"))
       .orderBy("b1", "b2")
   }

@@ -27,9 +27,6 @@ object Sources {
       .option("mode", "FAILFAST")
       .json(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    graft.Tables.read(spark, path) // ns-timestamp tolerant
-
   /** ORC: the other columnar warehouse format (predicate pushdown and
     * column pruning work the same as parquet — Spark ships the reader).
     * Schema supplied for uniformity with the other readers; ORC files
