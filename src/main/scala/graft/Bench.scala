@@ -49,11 +49,11 @@ import scala.util.control.NonFatal
   *      par=4 wall clock: under concurrent FAIR submission a heavy
   *      window's wall bills co-scheduled work (round 5: simhash
   *      recorded "21 s" wall while its marginal cost was 2.0 s). Each
-  *      query runs under its own job group; a SparkListener sums
-  *      executor-task CPU per group (the distributed work), and the
-  *      worker callable adds its own driver-thread CPU (planning/
-  *      collect). `queries_cpu_sec` in the detail line is that sum —
-  *      queue latency cannot appear in it. The wall `queries` map is
+  *      query runs under its own job group; `Harness.Meter` sums
+  *      executor-task CPU per group (the distributed work) and the
+  *      worker thread's own driver CPU (planning/collect).
+  *      `queries_cpu_sec` in the detail line is that sum — queue
+  *      latency cannot appear in it. The wall `queries` map is
   *      kept for latency reading only.
   */
 object Bench {
@@ -92,9 +92,7 @@ object Bench {
       // On by default, matching the cluster recommendation (SCALING.md:
       // AQE is the runtime skew/coalesce lever).
       "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-    val cpuListener = new QueryCpuListener
-    spark.sparkContext.addSparkListener(cpuListener)
-    val threadMx = java.lang.management.ManagementFactory.getThreadMXBean
+    val meter = new Harness.Meter(spark)
 
     /** JVM-wide process CPU seconds (all threads). Delta across a run
       * window is the run's compute cost, immune to other processes on
@@ -114,8 +112,9 @@ object Bench {
       * so nothing escapes measurement — this just charges the shared
       * builds to an explicit step instead of whichever query touches
       * them first (which under concurrent submission would bill one
-      * query the build while the rest wait for it). */
-    def prime(dir: String): Unit = {
+      * query the build while the rest wait for it). Chain i is metered
+      * as `prime:<i>`; returns each chain's (wall, driver CPU). */
+    def prime(dir: String): Seq[(Double, Double)] = {
       // round 17 (verdict item 7): the old 5-chain split left chain 0
       // (facts + EDGES + bipartite, ~6.7 s warm) the long pole while
       // the other four finished in 1-4 s. The EDGES and bipartite
@@ -146,43 +145,38 @@ object Bench {
                 sources.Sources.via(spark, dir, "documents", "text").count(); () }
       )
       val primePool = Executors.newFixedThreadPool(chains.size)
-      chains.zipWithIndex.map { case (c, i) =>
-        primePool.submit(new java.util.concurrent.Callable[Unit] {
-          // A failed prime chain must be LOUD: its cost would otherwise
-          // silently shift into whichever query first touches the cache,
-          // corrupting per-query attribution (round-4 ADVICE).
-          def call(): Unit = try {
-            val t0 = System.nanoTime()
-            c()
-            // stderr diagnostics only (r16): chain balance read, not
-            // part of the JSON contract
-            System.err.println(f"[bench] prime chain $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          } catch {
-            case t: Throwable =>
-              System.err.println(s"[bench] prime chain $i FAILED: $t")
+      val chainCost = chains.zipWithIndex.map { case (c, i) =>
+        primePool.submit(new java.util.concurrent.Callable[(Double, Double)] {
+          def call(): (Double, Double) = {
+            val (_, wall, drv) = meter(s"prime:$i") {
+              // A failed prime chain must be LOUD: its cost would otherwise
+              // silently shift into whichever query first touches the cache,
+              // corrupting per-query attribution (round-4 ADVICE).
+              try c() catch {
+                case NonFatal(e) => System.err.println(s"[bench] prime chain $i FAILED: $e")
+              }
+            }
+            (wall, drv)
           }
         })
-      }.foreach(_.get())
+      }.map(_.get())
       primePool.shutdown()
+      chainCost
     }
-
-    /** "Class: first message line" of a query failure. */
-    def why(e: Throwable): String = e.getClass.getName + ": " +
-      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 
     /** Run every query through a `par`-thread pool; returns
       * (name, wallSeconds, driverCpuSeconds, failure reason) in
-      * declaration order plus section wall time (including the priming step when
-      * par > 1) and the per-query executor-CPU map from the listener
-      * (this run only — the listener is reset on entry). */
+      * declaration order, section wall time (including the priming step when
+      * par > 1), prime wall and CPU, and the per-name executor cost
+      * from the meter (this run only — the meter is reset on entry). */
     def runSuite(dir: String): (Seq[(String, Double, Double, Option[String])],
-                                Double, Double, Map[String, Double]) = {
-      cpuListener.reset()
+                                Double, Double, Double, Map[String, Harness.Cost]) = {
+      meter.reset()
       val pool = Executors.newFixedThreadPool(par)
       val t0 = System.nanoTime()
       // par == 1 keeps the strict legacy methodology: sequential, no
       // prime step, shared builds billed to the first-touching query.
-      if (par > 1) prime(dir)
+      val chainCost = if (par > 1) prime(dir) else Seq.empty
       val primeSec = (System.nanoTime() - t0) / 1e9
       val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
         name -> pool.submit(new java.util.concurrent.Callable[(Double, Double, Option[String])] {
@@ -191,16 +185,12 @@ object Bench {
             // idempotent) — this is what makes FAIR mode real
             spark.sparkContext.setLocalProperty(
               "spark.scheduler.pool", Thread.currentThread().getName)
-            // job group = query name: the listener attributes every
-            // stage this thread launches to this query
-            spark.sparkContext.setJobGroup(name, name)
-            val c0 = threadMx.getCurrentThreadCpuTime
-            val q0 = System.nanoTime()
-            val err = try { fn(spark, dir).count(); None }
-                      catch { case NonFatal(e) => Some(why(e)) }
-            val wall = (System.nanoTime() - q0) / 1e9
-            val drvCpu = (threadMx.getCurrentThreadCpuTime - c0) / 1e9
-            spark.sparkContext.clearJobGroup()
+            // metered as the query name: every stage this thread
+            // launches is billed to this query
+            val (err, wall, drvCpu) = meter(name) {
+              try { fn(spark, dir).count(); None }
+              catch { case NonFatal(e) => Some(Harness.why(e)) }
+            }
             (wall, drvCpu, err)
           }
         })
@@ -212,10 +202,16 @@ object Bench {
       pool.shutdown()
       pool.awaitTermination(60, TimeUnit.SECONDS)
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async: drain the tail task-end events
-      // before snapshotting (outside the timed wall)
-      Harness.drainListeners(spark)
-      (results, wall, primeSec, cpuListener.snapshot())
+      // read outside the timed wall: costs() drains the listener bus
+      val cost = meter.costs()
+      val primeCpu = chainCost.zipWithIndex.map { case ((chainWall, drv), i) =>
+        val cpu = cost(s"prime:$i").cpu + drv
+        // stderr diagnostics only (r16): chain balance read, not
+        // part of the JSON contract
+        System.err.println(f"[bench] prime chain $i: $chainWall%.2f s, cpu $cpu%.2f s")
+        cpu
+      }.sum
+      (results, wall, primeSec, primeCpu, cost)
     }
 
     // Untimed JIT/codegen warmup: run the whole suite once on sf0.001
@@ -236,7 +232,8 @@ object Bench {
     // whatever the load allows (round 5), while "two independent
     // windows hit the same floor" is actual evidence of the floor.
     case class Run(results: Seq[(String, Double, Double, Option[String])], wall: Double,
-                   primeSec: Double, cpuSec: Double, queryCpu: Map[String, Double])
+                   primeSec: Double, primeCpu: Double, cpuSec: Double,
+                   cost: Map[String, Harness.Cost])
     def converged(rs: Seq[Run]): Boolean = {
       val walls = rs.map(_.wall).sorted
       val wallsAgree = walls.size >= 2 && walls(1) <= walls(0) * 1.10
@@ -263,8 +260,8 @@ object Bench {
     while (i < nRuns || (i < maxRuns && !converged(runs))) {
       if (i > 0) SharedBuild.clearAll(spark)
       val cpu0 = processCpuSec()
-      val (results, wall, primeSec, queryCpu) = runSuite(sfDir)
-      runs :+= Run(results, wall, primeSec, processCpuSec() - cpu0, queryCpu)
+      val (results, wall, primeSec, primeCpu, cost) = runSuite(sfDir)
+      runs :+= Run(results, wall, primeSec, primeCpu, processCpuSec() - cpu0, cost)
       i += 1
     }
     val best = runs.minBy(_.wall)
@@ -274,16 +271,16 @@ object Bench {
       .collect { case (n, _, _, Some(why)) => n -> why }.distinctBy(_._1)
     val failed = failedWhy.map(_._1)
 
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    import Harness.r3
     val qs = best.results.map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    // per-query COST = executor-task CPU (listener, this query's job
+    // per-query COST = executor-task CPU (meter, this query's job
     // group) + driver-thread CPU (planning, collect); min across runs
     // per query — a cost measure is a floor, and any single run's value
     // can only be inflated by contention, never deflated
     val qsCpu = best.results.map { case (k, _, _, _) =>
       val v = runs.map(r =>
-        r.queryCpu.getOrElse(k, 0.0) +
+        r.cost(k).cpu +
           r.results.collectFirst { case (`k`, _, d, _) => d }.getOrElse(0.0)).min
       s"\"" + k + "\":" + r3(v)
     }.mkString("{", ",", "}")
@@ -309,7 +306,7 @@ object Bench {
     // the local twin keeps that claim measured, not assumed)
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
       .equalsIgnoreCase("true")
-    val detailLine = s"""{"metric":"detail","aqe":$aqe,"queries":$qs,"queries_cpu_sec":$qsCpu,"failed":$failedJson,"failed_why":$failedWhyJson,"par":$par,"prime_sec":${r3(best.primeSec)},"runs_wall_sec":$runsWall,"runs_cpu_sec":$runsCpu,"sf":"$sfDir"}"""
+    val detailLine = s"""{"metric":"detail","aqe":$aqe,"queries":$qs,"queries_cpu_sec":$qsCpu,"failed":$failedJson,"failed_why":$failedWhyJson,"par":$par,"prime_sec":${r3(best.primeSec)},"prime_cpu_sec":${r3(best.primeCpu)},"runs_wall_sec":$runsWall,"runs_cpu_sec":$runsCpu,"sf":"$sfDir"}"""
     val totalLine = s"""{"metric":"total","aqe":$aqe,"value":${r3(total)},"unit":"sec","n":${best.results.size},"failed":${failed.size},"par":$par,"runs":${runs.size},"sum_query_sec":${r3(sumQ)},"wall_sec":${r3(best.wall)},"runs_wall_sec":$runsWall,"runs_cpu_sec":$runsCpu,"sf":"$sfDir"}"""
     // The driver's BENCH_r{N}.json artifact tail-keeps only the last
     // 2,000 stdout chars, which truncates queries_cpu_sec — the

@@ -37,10 +37,8 @@ object IncDedupBench {
         sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
       "spark.sql.adaptive.enabled" -> "false")
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    val meter = new Harness.Meter(spark)
+    import Harness.r3
 
     val tmpRoot = java.nio.file.Files.createTempDirectory("incdedup_bench")
 
@@ -81,23 +79,21 @@ object IncDedupBench {
       val root = s"$tmpRoot/corpus_${nDocs}"
       VersionedTable.create(spark, root, docs)
       val v1 = VersionedTable.versions(spark, root).last
-      var state: IncrementalDedup.State = null
-      val tBuild = timed {
-        state = IncrementalDedup.build(VersionedTable.read(spark, root, Some(v1)))
-        state.pairs.count(); ()
+      val (built, tBuild, _) = meter("dedup:build") {
+        val st = IncrementalDedup.build(VersionedTable.read(spark, root, Some(v1)))
+        st.pairs.count(); st
       }
+      var state = built
       val parts = scala.collection.mutable.ArrayBuffer[String]()
       for ((dn, i) <- deltas.zipWithIndex) {
         val (fromV, toV) = commitDelta(root, VersionedTable.read(spark, root), dn, i)
-        var s2: IncrementalDedup.State = null
-        val tAdv = timed {
-          s2 = IncrementalDedup.advance(spark, root, fromV, toV, state)
-          s2.pairs.count(); ()
+        val (s2, tAdv, _) = meter("dedup:advance") {
+          val st = IncrementalDedup.advance(spark, root, fromV, toV, state)
+          st.pairs.count(); st
         }
         // the comparison rebuild on the SAME post-delta snapshot
-        val tRebuild = timed {
-          IncrementalDedup.build(VersionedTable.read(spark, root, Some(toV)))
-            .pairs.count(); ()
+        val (_, tRebuild, _) = meter("dedup:rebuild") {
+          IncrementalDedup.build(VersionedTable.read(spark, root, Some(toV))).pairs.count()
         }
         state = s2
         parts += s"""{"delta":$dn,"advance":${r3(tAdv)},"full_rebuild":${r3(tRebuild)}}"""
@@ -115,23 +111,21 @@ object IncDedupBench {
       val root = s"$tmpRoot/spans_corpus_${nDocs}"
       VersionedTable.create(spark, root, docs)
       val v1 = VersionedTable.versions(spark, root).last
-      var state: graft.ops.IncrementalSpans.State = null
-      val tBuild = timed {
-        state = graft.ops.IncrementalSpans.build(
-          VersionedTable.read(spark, root, Some(v1)))
-        state.spans.count(); ()
+      val (built, tBuild, _) = meter("spans:build") {
+        val st = graft.ops.IncrementalSpans.build(VersionedTable.read(spark, root, Some(v1)))
+        st.spans.count(); st
       }
+      var state = built
       val parts = scala.collection.mutable.ArrayBuffer[String]()
       for ((dn, i) <- deltas.zipWithIndex) {
         val (fromV, toV) = commitDelta(root, VersionedTable.read(spark, root), dn, i)
-        var s2: graft.ops.IncrementalSpans.State = null
-        val tAdv = timed {
-          s2 = graft.ops.IncrementalSpans.advance(spark, root, fromV, toV, state)
-          s2.spans.count(); ()
+        val (s2, tAdv, _) = meter("spans:advance") {
+          val st = graft.ops.IncrementalSpans.advance(spark, root, fromV, toV, state)
+          st.spans.count(); st
         }
-        val tRebuild = timed {
+        val (_, tRebuild, _) = meter("spans:rebuild") {
           graft.ops.IncrementalSpans.build(
-            VersionedTable.read(spark, root, Some(toV))).spans.count(); ()
+            VersionedTable.read(spark, root, Some(toV))).spans.count()
         }
         state = s2
         // the STORED face on a fresh delta: the deployment path whose
@@ -146,8 +140,8 @@ object IncDedupBench {
           VersionedTable.read(spark, root, Some(postV)),
           s"$stRoot/sh", s"$stRoot/df", s"$stRoot/sp")
         val (f2, t2) = commitDelta(root, VersionedTable.read(spark, root), dn, 100 + i)
-        val tAdvStored = timed {
-          graft.ops.IncrementalSpans.advanceStored(spark, root, f2, t2, stored); ()
+        val (_, tAdvStored, _) = meter("spans:advance_stored") {
+          graft.ops.IncrementalSpans.advanceStored(spark, root, f2, t2, stored)
         }
         parts += s"""{"delta":$dn,"advance":${r3(tAdv)},"advance_stored":${r3(tAdvStored)},"full_rebuild":${r3(tRebuild)}}"""
       }
@@ -173,11 +167,9 @@ object IncDedupBench {
       val root = s"$tmpRoot/url_corpus_${nDocs}"
       VersionedTable.create(spark, root, docs)
       val v1 = VersionedTable.versions(spark, root).last
-      var state: graft.ops.IncrementalUrlDedup.State = null
-      val tBuild = timed {
-        state = graft.ops.IncrementalUrlDedup.build(
-          VersionedTable.read(spark, root, Some(v1)))
-        state.keys.count(); ()
+      val (state, tBuild, _) = meter("url:build") {
+        val st = graft.ops.IncrementalUrlDedup.build(VersionedTable.read(spark, root, Some(v1)))
+        st.keys.count(); st
       }
       def urlDelta(salt: Int): (Long, Long) = {
         val fromV = VersionedTable.versions(spark, root).last
@@ -206,14 +198,12 @@ object IncDedupBench {
         (fromV, VersionedTable.versions(spark, root).last)
       }
       val (fromV, toV) = urlDelta(0)
-      var s2: graft.ops.IncrementalUrlDedup.State = null
-      val tAdv = timed {
-        s2 = graft.ops.IncrementalUrlDedup.advance(spark, root, fromV, toV, state)
-        s2.keys.count(); ()
+      val (_, tAdv, _) = meter("url:advance") {
+        graft.ops.IncrementalUrlDedup.advance(spark, root, fromV, toV, state).keys.count()
       }
-      val tRebuild = timed {
+      val (_, tRebuild, _) = meter("url:rebuild") {
         graft.ops.IncrementalUrlDedup.build(
-          VersionedTable.read(spark, root, Some(toV))).keys.count(); ()
+          VersionedTable.read(spark, root, Some(toV))).keys.count()
       }
       // stored face on a fresh delta — the daily-loop number
       val postV = VersionedTable.versions(spark, root).last
@@ -221,8 +211,8 @@ object IncDedupBench {
         VersionedTable.read(spark, root, Some(postV)),
         s"$tmpRoot/url_state_${nDocs}")
       val (f2, t2) = urlDelta(1)
-      val tAdvStored = timed {
-        graft.ops.IncrementalUrlDedup.advanceStored(spark, root, f2, t2, stored); ()
+      val (_, tAdvStored, _) = meter("url:advance_stored") {
+        graft.ops.IncrementalUrlDedup.advanceStored(spark, root, f2, t2, stored)
       }
       println(s"""{"family":"inc_url","dir":"$dir","n_docs":$nDocs,"initial_build":${r3(tBuild)},"steps":[{"delta":$n,"advance":${r3(tAdv)},"advance_stored":${r3(tAdvStored)},"full_rebuild":${r3(tRebuild)}}]}""")
       System.out.flush()
@@ -244,52 +234,33 @@ object IncDedupBench {
         .limit(n).agg(min(col("doc_id"))).head().getLong(0)
       val base = docs.filter(col("doc_id") < cut)
       val out = s"$tmpRoot/export_${nDocs}"
-      val tBuild = timed {
-        graft.ops.Export.exportShards(base, out, budget).count(); ()
+      val (_, tBuild, _) = meter("export:build") {
+        graft.ops.Export.exportShards(base, out, budget).count()
       }
-      val tAdv = timed {
-        graft.ops.Export.advanceShards(spark, out, docs, budget).count(); ()
+      val (_, tAdv, _) = meter("export:advance") {
+        graft.ops.Export.advanceShards(spark, out, docs, budget).count()
       }
-      val tRebuild = timed {
-        graft.ops.Export.exportShards(docs, s"${out}_rb", budget).count(); ()
+      val (_, tRebuild, _) = meter("export:rebuild") {
+        graft.ops.Export.exportShards(docs, s"${out}_rb", budget).count()
       }
       println(s"""{"family":"inc_export","dir":"$dir","n_docs":$nDocs,"initial_build":${r3(tBuild)},"steps":[{"delta":$n,"advance":${r3(tAdv)},"full_rebuild":${r3(tRebuild)}}]}""")
       System.out.flush()
     }
 
     val mode = sys.env.getOrElse("SPARK_GRAFT_INCDEDUP_MODE", "all")
+    // the corpus decades every fixed-delta sweep runs across
+    val docTiers = Seq("/root/testdata/sf0.1",
+      new java.io.File("fixtures/sf1_docs").getAbsolutePath,
+      new java.io.File("fixtures/sf10_docs").getAbsolutePath)
+      .filter(d => new java.io.File(s"$d/documents.parquet").exists())
     // export-advance sweep (round 16): fixed 200-doc entering slice
-    if (mode == "all" || mode == "export") {
-      Seq("/root/testdata/sf0.1",
-        new java.io.File("fixtures/sf1_docs").getAbsolutePath,
-        new java.io.File("fixtures/sf10_docs").getAbsolutePath)
-        .filter(d => new java.io.File(s"$d/documents.parquet").exists())
-        .foreach(d => measureTierExport(d, 200))
-    }
+    if (mode == "all" || mode == "export") docTiers.foreach(d => measureTierExport(d, 200))
     // url-key sweep (round 15): fixed 200-doc delta across the decades
-    if (mode == "all" || mode == "url") {
-      Seq("/root/testdata/sf0.1",
-        new java.io.File("fixtures/sf1_docs").getAbsolutePath,
-        new java.io.File("fixtures/sf10_docs").getAbsolutePath)
-        .filter(d => new java.io.File(s"$d/documents.parquet").exists())
-        .foreach(d => measureTierUrl(d, 200))
-    }
+    if (mode == "all" || mode == "url") docTiers.foreach(d => measureTierUrl(d, 200))
     // spans sweep (round 13): fixed 200-doc delta across three decades
-    if (mode == "all" || mode == "spans") {
-      Seq("/root/testdata/sf0.1",
-        new java.io.File("fixtures/sf1_docs").getAbsolutePath,
-        new java.io.File("fixtures/sf10_docs").getAbsolutePath)
-        .filter(d => new java.io.File(s"$d/documents.parquet").exists())
-        .foreach(d => measureTierSpans(d, Seq(200)))
-    }
+    if (mode == "all" || mode == "spans") docTiers.foreach(d => measureTierSpans(d, Seq(200)))
     // corpus sweep: fixed 200-doc delta across three decades
-    if (mode == "all" || mode == "corpus") {
-      Seq("/root/testdata/sf0.1",
-        new java.io.File("fixtures/sf1_docs").getAbsolutePath,
-        new java.io.File("fixtures/sf10_docs").getAbsolutePath)
-        .filter(d => new java.io.File(s"$d/documents.parquet").exists())
-        .foreach(d => measureTier(d, Seq(200)))
-    }
+    if (mode == "all" || mode == "corpus") docTiers.foreach(d => measureTier(d, Seq(200)))
     // delta sweep: one corpus, two decades of delta size
     if (mode == "all" || mode == "delta") {
       val d = new java.io.File("fixtures/sf1_docs").getAbsolutePath

@@ -19,9 +19,7 @@ object QBench {
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "ERROR",
       "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"),
       "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-    val cpuListener = new QueryCpuListener
-    spark.sparkContext.addSparkListener(cpuListener)
-    val threadMx = java.lang.management.ManagementFactory.getThreadMXBean
+    val meter = new Harness.Meter(spark)
 
     Harness.warmUp(spark, names)
 
@@ -29,22 +27,13 @@ object QBench {
       SparkEntry.queries.get(n) match {
         case None => println(s"""{"query": "$n", "error": "unknown"}""")
         case Some(q) =>
-          val walls = Array.fill(nRuns)(0.0)
-          val cpusS = Array.fill(nRuns)(0.0)
-          (0 until nRuns).foreach { i =>
+          val (walls, cpusS) = (0 until nRuns).map { _ =>
             SharedBuild.clearAll(spark)
-            cpuListener.reset()
-            spark.sparkContext.setJobGroup(n, n)
-            val c0 = threadMx.getCurrentThreadCpuTime
-            val t0 = System.nanoTime()
-            q(spark, sfDir).count()
-            walls(i) = (System.nanoTime() - t0) / 1e9
-            val drv = (threadMx.getCurrentThreadCpuTime - c0) / 1e9
-            spark.sparkContext.clearJobGroup()
-            Harness.drainListeners(spark)
-            cpusS(i) = cpuListener.snapshot().getOrElse(n, 0.0) + drv
-          }
-          def r3(v: Double) = math.round(v * 1000) / 1000.0
+            meter.reset()
+            val (_, wall, drv) = meter(n)(q(spark, sfDir).count())
+            (wall, meter.costs()(n).cpu + drv)
+          }.unzip
+          import Harness.r3
           println(s"""{"query": "$n", "wall_min": ${r3(walls.min)}, """ +
             s""""cpu_min": ${r3(cpusS.min)}, """ +
             s""""walls": [${walls.map(r3).mkString(",")}], """ +

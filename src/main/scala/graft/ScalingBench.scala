@@ -45,13 +45,32 @@ object ScalingBench {
       "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
     // per-op executor CPU: the contention-immune cost measure the
     // exponents are fitted against when walls are host-noisy
-    val cpuListener = new QueryCpuListener
-    spark.sparkContext.addSparkListener(cpuListener)
+    val meter = new Harness.Meter(spark)
+    import Harness.r3
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    /** Best-of-nRuns wall and executor CPU per entry. Each run drops
+      * the shared builds, runs `setUp` unmetered (table caches and
+      * models stay off the curve), then meters each entry under its own
+      * name in order — the prime first, so the ops after it are
+      * marginal costs. Min per entry: a cost measure is a floor, and
+      * contention only ever inflates it. */
+    def bestOf(setUp: () => Unit, entries: Seq[(String, () => Unit)])
+        : (Map[String, Double], Map[String, Double]) = {
+      val runs = (1 to nRuns).map { _ =>
+        SharedBuild.clearAll(spark)
+        meter.reset()
+        setUp()
+        val walls = entries.map { case (name, f) => name -> meter(name)(f())._2 }
+        val cost = meter.costs()
+        (walls, entries.map { case (name, _) => name -> cost(name).cpu })
+      }
+      def min(per: Seq[Seq[(String, Double)]]) =
+        per.flatten.groupMapReduce(_._1)(_._2)(math.min)
+      (min(runs.map(_._1)), min(runs.map(_._2)))
     }
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    /** `{"op":seconds,...}` in the entries' order. */
+    def opsJson(opsList: Seq[(String, () => Unit)], v: Map[String, Double]): String =
+      opsList.map { case (k, _) => s"\"$k\":${r3(v(k))}" }.mkString("{", ",", "}")
 
     // one BPE model per tier (deterministic 512-doc sample train —
     // constant cost by design, so it sits outside every timed region)
@@ -308,16 +327,7 @@ object ScalingBench {
         "pipeline_ppl_tier_mix" -> (() =>
           { ops.Pipelines.pipelinePplTierMix(spark, dir).collect(); () }))
       )
-      // run r: clear -> timed shingle build -> each op timed under its
-      // own job group; keep min wall and min CPU per op (a cost
-      // measure is a floor — contention only ever inflates it)
-      val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-      val bestCpu = scala.collection.mutable.LinkedHashMap[String, Double]()
-      var primeBest = Double.MaxValue
-      var primeCpuBest = Double.MaxValue
-      for (_ <- 1 to nRuns) {
-        SharedBuild.clearAll(spark)
-        cpuListener.reset()
+      val (best, bestCpu) = bestOf(() => {
         Tables(spark, dir, "documents").count() // table cache outside the curve
         Tables(spark, dir, "embeddings").count()
         // KN LM re-trained + c12 re-materialized OUTSIDE the timed
@@ -332,29 +342,13 @@ object ScalingBench {
           knModels.remove(dir)
           knModel(dir).c12.count()
         }
-        spark.sparkContext.setJobGroup("shingle_prime", "shingle_prime")
-        primeBest = math.min(primeBest, timed(ops.Pipelines.primeShingles(spark, dir)))
-        for ((name, f) <- opsList) {
-          spark.sparkContext.setJobGroup(name, name)
-          val t = timed(f())
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-        }
-        spark.sparkContext.clearJobGroup()
-        Harness.drainListeners(spark)
-        val cpu = cpuListener.snapshot()
-        primeCpuBest = math.min(primeCpuBest, cpu.getOrElse("shingle_prime", 0.0))
-        for ((name, _) <- opsList)
-          bestCpu(name) = math.min(bestCpu.getOrElse(name, Double.MaxValue),
-            cpu.getOrElse(name, 0.0))
-      }
-      val opsJson = best.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
-      val cpuJson = bestCpu.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
+      }, ("shingle_prime" -> (() => ops.Pipelines.primeShingles(spark, dir))) +: opsList)
       val excl = (if (exactOk) Seq.empty[String] else Seq(
         "sim_cosine_neardup_exact (designed O(n^2) exactness baseline, excluded above 50k vectors)")) ++
         (if (dfBucketOk) Seq.empty[String] else Seq(
           "dedup_near_jaccard+dedup_containment (df-bucketed candidates are Theta(n^2/V) under the fixture's bounded 27k-shingle space; measured disk-fill at 500k docs. LSH is the measured 100x near-dup path)"))
       val excluded = excl.map(s => s"\"$s\"").mkString("[", ",", "]")
-      println(s"""{"family":"docs","dir":"$dir","n_docs":$nDocs,"n_vecs":$nVecs,"n_cells":$nCells,"runs":$nRuns,"excluded":$excluded,"shingle_prime":${r3(primeBest)},"shingle_prime_cpu":${r3(primeCpuBest)},"ops":$opsJson,"ops_cpu":$cpuJson}""")
+      println(s"""{"family":"docs","dir":"$dir","n_docs":$nDocs,"n_vecs":$nVecs,"n_cells":$nCells,"runs":$nRuns,"excluded":$excluded,"shingle_prime":${r3(best("shingle_prime"))},"shingle_prime_cpu":${r3(bestCpu("shingle_prime"))},"ops":${opsJson(opsList, best)},"ops_cpu":${opsJson(opsList, bestCpu)}}""")
       System.out.flush()
     }
 
@@ -539,34 +533,12 @@ object ScalingBench {
         // (one value-grain aggregate + one range shuffle, same as
         // ks/mood/wasserstein) — its marginal is a bounded fold
         "agg_cvm_test" -> (() => { ops.Relational.aggCvmTest(spark, dir).collect(); () })))
-      val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-      val bestCpu = scala.collection.mutable.LinkedHashMap[String, Double]()
-      var primeBest = Double.MaxValue
-      var primeCpuBest = Double.MaxValue
-      for (_ <- 1 to nRuns) {
-        SharedBuild.clearAll(spark)
-        cpuListener.reset()
+      val (best, bestCpu) = bestOf(() => {
         Tables(spark, dir, "events").count() // table cache outside the curve
         Tables(spark, dir, "lineitem").count()
         Tables(spark, dir, "orders").count() // round-11 ops scan orders
-        spark.sparkContext.setJobGroup("edges_prime", "edges_prime")
-        primeBest = math.min(primeBest, timed { Tables.edges(spark, dir); () })
-        for ((name, f) <- opsList) {
-          spark.sparkContext.setJobGroup(name, name)
-          val t = timed(f())
-          best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-        }
-        spark.sparkContext.clearJobGroup()
-        Harness.drainListeners(spark)
-        val cpu = cpuListener.snapshot()
-        primeCpuBest = math.min(primeCpuBest, cpu.getOrElse("edges_prime", 0.0))
-        for ((name, _) <- opsList)
-          bestCpu(name) = math.min(bestCpu.getOrElse(name, Double.MaxValue),
-            cpu.getOrElse(name, 0.0))
-      }
-      val opsJson = best.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
-      val cpuJson = bestCpu.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
-      println(s"""{"family":"facts","dir":"$dir","n_events":$nEvents,"n_lines":$nLines,"runs":$nRuns,"edges_prime":${r3(primeBest)},"edges_prime_cpu":${r3(primeCpuBest)},"ops":$opsJson,"ops_cpu":$cpuJson}""")
+      }, ("edges_prime" -> (() => { Tables.edges(spark, dir); () })) +: opsList)
+      println(s"""{"family":"facts","dir":"$dir","n_events":$nEvents,"n_lines":$nLines,"runs":$nRuns,"edges_prime":${r3(best("edges_prime"))},"edges_prime_cpu":${r3(bestCpu("edges_prime"))},"ops":${opsJson(opsList, best)},"ops_cpu":${opsJson(opsList, bestCpu)}}""")
       System.out.flush()
     }
     spark.stop()

@@ -43,26 +43,9 @@ object SkewBench {
       "spark.sql.adaptive.enabled" -> "false")
     import spark.implicits._
 
-    // straggler probe: max task duration per job group (runs are
-    // sequential and collect() blocks, so attributing by the current
-    // group is race-free here)
-    val currentGroup = new java.util.concurrent.atomic.AtomicReference[String]("")
-    val maxTask = scala.collection.concurrent.TrieMap[String, Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val g = currentGroup.get()
-          if (g.nonEmpty && e.taskInfo != null) {
-            val d = e.taskInfo.duration
-            maxTask.updateWith(g)(v => Some(math.max(v.getOrElse(0L), d)))
-          }
-        }
-      })
-
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    // straggler probe: the meter's max task duration per run
+    val meter = new Harness.Meter(spark)
+    import Harness.r3
 
     def aqe(on: Boolean): Unit = {
       spark.conf.set("spark.sql.adaptive.enabled", on.toString)
@@ -129,10 +112,9 @@ object SkewBench {
         var best = Double.MaxValue; var bestTask = Double.MaxValue
         for (_ <- 1 to nRuns) {
           val g = s"$name@$dir"
-          currentGroup.set(g); maxTask.remove(g)
-          spark.sparkContext.setJobGroup(g, g)
-          val t = timed(f())
-          if (t < best) { best = t; bestTask = maxTask.getOrElse(g, 0L) / 1000.0 }
+          meter.reset()
+          val (_, t, _) = meter(g)(f())
+          if (t < best) { best = t; bestTask = meter.costs()(g).maxTask }
         }
         (best, bestTask)
       }

@@ -53,12 +53,28 @@ object GraphOps {
   }
 
   /** One min-label-propagation round over the self-looped edge set
-    * (shared with Pipelines.dedupClusters — one implementation of the
-    * step, two label-prop users). */
-  private[ops] def ccStep(ud2: DataFrame)(l: DataFrame): DataFrame =
+    * (shared by the co-purchase graph and pairComponents — one
+    * implementation of the step). */
+  private def ccStep(ud2: DataFrame)(l: DataFrame): DataFrame =
     ud2.as("e").join(l.as("l"), col("l.v") === col("e.t"))
       .groupBy(col("e.s").as("v"))
       .agg(min(col("l.lbl")).as("lbl"))
+
+  /** Connected-component labels of an undirected pair relation (its
+    * two columns, in any names): 4 rounds of min-label propagation over
+    * the symmetrized, self-looped pairs through Iterate.fixed, the
+    * oracle-fixed partial fixpoint of graph_cc_labelprop. The node set
+    * is persisted because every round references it. Returns (v, lbl)
+    * for every node that is in a pair. */
+  private[ops] def pairComponents(pairs: DataFrame): DataFrame = {
+    val Array(a, b) = pairs.columns
+    val ud = pairs.select(col(a).as("s"), col(b).as("t"))
+      .unionAll(pairs.select(col(b).as("s"), col(a).as("t")))
+    val n0 = ud.select(col("s").as("v")).distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ud2 = ud.unionAll(n0.select(col("v").as("s"), col("v").as("t")))
+    Iterate.fixed(n0.select(col("v"), col("v").as("lbl")), 4)(ccStep(ud2))
+  }
 
   /** Self-looped undirected edges + persisted node set (the self-loop
     * keeps a node's own label in the min). n0 is a distinct shuffle

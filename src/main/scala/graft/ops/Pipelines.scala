@@ -548,14 +548,8 @@ object Pipelines {
     * excluded here (size >= 2). */
   val dedupClusters: Q = (s, d) => {
     // dedupMinhashLsh returns the persisted pair result (the label-prop
-    // loop below references it ~8x — SURVEY §4.2 lineage rule)
-    val pairs = dedupMinhashLsh(s, d).select(col("d1"), col("d2"))
-    val ud = pairs.unionAll(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-    val n0 = ud.select(col("d1").as("v")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ud2 = ud.select(col("d1").as("s"), col("d2").as("t"))
-      .unionAll(n0.select(col("v").as("s"), col("v").as("t")))
-    Iterate.fixed(n0.select(col("v"), col("v").as("lbl")), 4)(GraphOps.ccStep(ud2))
+    // loop in pairComponents references it ~8x — SURVEY §4.2 lineage rule)
+    GraphOps.pairComponents(dedupMinhashLsh(s, d).select(col("d1"), col("d2")))
       .groupBy(col("lbl").as("canonical_id"))
       .agg(count(lit(1)).as("cluster_size"))
       .orderBy("canonical_id")
@@ -677,13 +671,7 @@ object Pipelines {
     * the PAIR relation, which is sparse at any threshold worth
     * deduping at. */
   val dedupSemanticClusters: Q = (s, d) => {
-    val pairs = simCosineNeardup(s, d).select(col("v1"), col("v2"))
-    val ud = pairs.unionAll(pairs.select(col("v2").as("v1"), col("v1").as("v2")))
-    val n0 = ud.select(col("v1").as("v")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ud2 = ud.select(col("v1").as("s"), col("v2").as("t"))
-      .unionAll(n0.select(col("v").as("s"), col("v").as("t")))
-    Iterate.fixed(n0.select(col("v"), col("v").as("lbl")), 4)(GraphOps.ccStep(ud2))
+    GraphOps.pairComponents(simCosineNeardup(s, d).select(col("v1"), col("v2")))
       .groupBy(col("lbl").as("canonical_id"))
       .agg(count(lit(1)).as("cluster_size"))
       .select(asLong(col("canonical_id")).as("canonical_id"),
@@ -1146,14 +1134,8 @@ object Pipelines {
     * map-combined pass over documents left-joined to the (tiny)
     * member relation. */
   val pipelineDedupKeepPolicy: Q = (s, d) => {
-    val pairs = dedupMinhashLsh(s, d).select(col("d1"), col("d2"))
-    val ud = pairs.unionAll(pairs.select(col("d2").as("d1"), col("d1").as("d2")))
-    val n0 = ud.select(col("d1").as("v")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ud2 = ud.select(col("d1").as("s"), col("d2").as("t"))
-      .unionAll(n0.select(col("v").as("s"), col("v").as("t")))
     val membership =
-      Iterate.fixed(n0.select(col("v"), col("v").as("lbl")), 4)(GraphOps.ccStep(ud2))
+      GraphOps.pairComponents(dedupMinhashLsh(s, d).select(col("d1"), col("d2")))
     val docs = table(s, d, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val wk = Window.partitionBy(col("lbl"))
