@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.VersionedTable
+import graft.sources.{StateTables, VersionedTable}
 
 /** Incremental MinHash-LSH dedup maintenance over a versioned corpus
   * (round 11, VERDICT item 4): the operation a 100-TB curation loop
@@ -93,12 +93,6 @@ object IncrementalDedup {
       VersionedTable.changeFeed(spark, root, fromV, toV, Seq("doc_id")),
       VersionedTable.read(spark, root, Some(toV)), state)
 
-  /** The core increment, decoupled from WHERE the change feed comes
-    * from: `feed` must be ONE version range's row-level changes
-    * (insert / delete / update_pre/postimage over doc_id) and
-    * `snapshot` the post-range corpus — the batch [[advance]] passes
-    * `changeFeed` + `read(toV)`, the streaming [[maintainStream]]
-    * passes each micro-batch version's stamped feed slice. */
   /** One delta's computed patch: the ids leaving the state, and the
     * band/pair rows entering it — everything an in-memory union OR a
     * stored-table MERGE needs. */
@@ -159,6 +153,12 @@ object IncrementalDedup {
       Seq(cf, newSh, newBands, cand))
   }
 
+  /** The core increment, decoupled from WHERE the change feed comes
+    * from: `feed` must be ONE version range's row-level changes
+    * (insert / delete / update_pre/postimage over doc_id) and
+    * `snapshot` the post-range corpus — the batch [[advance]] passes
+    * `changeFeed` + `read(toV)`, the streaming [[maintainStream]]
+    * passes each micro-batch version's stamped feed slice. */
   def advanceWithFeed(spark: SparkSession, feed: DataFrame,
       snapshot: DataFrame, state: State): State = {
     val p = computePatch(spark, feed, snapshot, state.bands)
@@ -193,150 +193,65 @@ object IncrementalDedup {
     * with any LSM-ish table. */
   case class StoredState(bandsRoot: String, pairsRoot: String)
 
+  private def roots(st: StoredState) = Seq(st.bandsRoot, st.pairsRoot)
+
   /** Bootstrap the stored state from a corpus snapshot: full build,
-    * written range-clustered ([[StoredState]] doc). */
+    * written range-clustered ([[StoredState]] doc) and fenced
+    * ([[StateTables]]). Also the one recovery from a torn state: into
+    * fresh roots. */
   def bootstrapStored(spark: SparkSession, docs: DataFrame,
       bandsRoot: String, pairsRoot: String, files: Int = 8): StoredState = {
     val st = build(docs)
-    VersionedTable.create(spark, bandsRoot,
-      st.bands.repartitionByRange(files, col("doc_id")))
-    VersionedTable.create(spark, pairsRoot,
-      st.pairs.repartitionByRange(files, col("d1")))
-    val stored = StoredState(bandsRoot, pairsRoot)
-    writeSync(spark, stored)
-    stored
+    StateTables.create(spark, files,
+      (bandsRoot, st.bands, "doc_id"), (pairsRoot, st.pairs, "d1"))
+    StoredState(bandsRoot, pairsRoot)
   }
 
-  /** IN-list chunk size for the stored-state DELETE predicates: keeps
-    * each parsed predicate ~100 KB even for very large deltas (the
-    * parser chokes on multi-megabyte IN lists long before the
-    * pigeonhole bound on |delta| does). */
-  private val InChunk = 10000
-
   /** Advance the STORED state across a corpus version range: compute
-    * the patch, then lower it to table operations — predicate DELETEs
-    * (file-pruned by the id list's min/max check) + one append per
-    * state table. Returns (bandsFilesRewritten, bandsFilesKept) from
-    * the bands DELETE so callers/specs can observe the pruning (for a
-    * multi-chunk delta the counts are summed/min'd across the chunk
-    * commits). The changed-id list is |delta|-bounded by construction
-    * (the same bound that makes the broadcast anti-join safe), so
-    * collecting it is driver-safe; the predicates are CHUNKED at
-    * [[InChunk]] ids so no single SQL string grows past what
-    * parseExpression handles comfortably.
+    * the patch, then lower it to table operations — chunked predicate
+    * DELETEs (file-pruned by the id list's min/max check) + one append
+    * per state table. Returns (bandsFilesRewritten, bandsFilesKept)
+    * from the bands DELETE so callers/specs can observe the pruning.
     *
-    * Atomicity: the DELETE and the append are separate commits per
-    * state table (VersionedTable has no multi-table transaction), so a
-    * crash mid-patch can leave the state torn. The final [[writeSync]]
-    * records the post-patch head versions of BOTH tables;
-    * [[readStored]] refuses a state whose heads don't match the
-    * marker, so a torn patch is detected instead of silently read. */
+    * Atomicity: the DELETEs and appends are separate commits per state
+    * table, so the patch runs inside [[StateTables.patch]]: a state
+    * torn by an earlier cut-off advance is refused (an empty feed
+    * included) before anything is computed. */
   def advanceStored(spark: SparkSession, corpusRoot: String, fromV: Long,
-      toV: Long, st: StoredState): (Int, Int) = {
-    val feed =
-      VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
-    if (feed.isEmpty) {
+      toV: Long, st: StoredState): (Int, Int) =
+    StateTables.patch(spark, roots(st)) {
+      val feed =
+        VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
       // a version range CAN legitimately carry zero row changes
       // (compaction/cluster commits, merges rewriting identical rows,
       // zero-row appends) — match advanceWithFeed's no-op semantics
-      // instead of crashing; re-stamp the sync marker so the cursor
-      // still records this range as applied
-      val kept = VersionedTable.history(spark, st.bandsRoot)
-        .orderBy(col("version").desc).select("n_files")
-        .head().getLong(0).toInt
-      writeSync(spark, st)
-      return (0, kept)
+      if (feed.isEmpty) (0, StateTables.filesKept(spark, st.bandsRoot))
+      else {
+        val p = computePatch(spark, feed,
+          VersionedTable.read(spark, corpusRoot, Some(toV)),
+          VersionedTable.read(spark, st.bandsRoot))
+        val ids = StateTables.inLists(p.changedIds)
+        val pruned = StateTables.deleteWhere(spark, st.bandsRoot,
+          ids.map(l => s"doc_id IN ($l)"))
+        StateTables.deleteWhere(spark, st.pairsRoot,
+          ids.map(l => s"d1 IN ($l) OR d2 IN ($l)"))
+        StateTables.append(spark, st.bandsRoot, p.newBands)
+        StateTables.append(spark, st.pairsRoot, p.newPairs)
+        p.release()
+        pruned
+      }
     }
-    val p = computePatch(spark, feed,
-      VersionedTable.read(spark, corpusRoot, Some(toV)),
-      VersionedTable.read(spark, st.bandsRoot))
-    val ids = p.changedIds.collect().map(_.getLong(0))
-    var touched = 0
-    var kept = Int.MaxValue
-    ids.grouped(InChunk).foreach { chunk =>
-      val idList = chunk.mkString(",")
-      val (_, t, k) =
-        VersionedTable.deleteWhere(spark, st.bandsRoot, s"doc_id IN ($idList)")
-      touched += t; kept = math.min(kept, k)
-      VersionedTable.deleteWhere(spark, st.pairsRoot,
-        s"d1 IN ($idList) OR d2 IN ($idList)")
-    }
-    // delete-only deltas produce empty patch relations — skip the
-    // append rather than committing empty parquet files
-    if (p.newBands.take(1).nonEmpty)
-      VersionedTable.append(spark, st.bandsRoot, p.newBands)
-    if (p.newPairs.take(1).nonEmpty)
-      VersionedTable.append(spark, st.pairsRoot, p.newPairs)
-    writeSync(spark, st)
-    p.release()
-    (touched, kept)
-  }
-
-  /** The sync marker that makes a torn advanceStored detectable: the
-    * head versions of both state tables recorded AFTER a complete
-    * patch, stored as a tiny JSON beside the bands table (tmp-write +
-    * rename, the manifest publish discipline). */
-  private def syncPath(st: StoredState) =
-    new org.apache.hadoop.fs.Path(st.bandsRoot, "_dedup_sync.json")
-
-  private def writeSync(spark: SparkSession, st: StoredState): Unit = {
-    val bandsV = VersionedTable.versions(spark, st.bandsRoot).last
-    val pairsV = VersionedTable.versions(spark, st.pairsRoot).last
-    val path = syncPath(st)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      st.bandsRoot, s"_dedup_sync.json.tmp-$bandsV-$pairsV")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"bands_version":$bandsV,"pairs_version":$pairsV}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    fs.rename(tmp, path)
-  }
-
-  private def readSync(spark: SparkSession, st: StoredState)
-      : Option[(Long, Long)] = {
-    val path = syncPath(st)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val m = """"bands_version":(\d+),"pairs_version":(\d+)""".r
-        .findFirstMatchIn(txt)
-      m.map(g => (g.group(1).toLong, g.group(2).toLong))
-    }
-  }
 
   /** The stored state read back as a [[State]] (for equality checks
     * and for feeding [[advanceWithFeed]]-based consumers). Refuses a
-    * TORN state: if the sync marker's recorded head versions don't
-    * match the tables' actual heads, a crash interrupted an
-    * [[advanceStored]] between its commits — re-run the advance (the
-    * chunked DELETEs and the append are idempotent under re-execution
-    * of the same patch) or restore both tables to the marker's
-    * versions. */
+    * TORN state ([[StateTables.check]]): a crash interrupted an
+    * [[advanceStored]] between its commits, and the one recovery is
+    * [[bootstrapStored]] into fresh roots from the corpus snapshot. */
   def readStored(spark: SparkSession, st: StoredState): State = {
-    readSync(spark, st).foreach { case (bv, pv) =>
-      val bHead = VersionedTable.versions(spark, st.bandsRoot).last
-      val pHead = VersionedTable.versions(spark, st.pairsRoot).last
-      require(bHead == bv && pHead == pv,
-        s"torn dedup state: sync marker records bands=$bv pairs=$pv but " +
-          s"heads are bands=$bHead pairs=$pHead — an advanceStored was " +
-          "interrupted mid-patch; re-run it or restore to the marker")
-    }
+    StateTables.check(spark, roots(st))
     State(VersionedTable.read(spark, st.bandsRoot),
       VersionedTable.read(spark, st.pairsRoot))
   }
-
-  /** Materialize + truncate lineage: state relations are consumed by
-    * the NEXT advance too, and without a cut each version would replan
-    * the whole history (the Iterate/label-prop discipline). In a real
-    * deployment this is the write-back to the state tables. */
-  private def stabilize(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** The zero state a stream bootstraps from: version 1's change feed
     * is the created snapshot tagged insert, so `advanceWithFeed(empty,

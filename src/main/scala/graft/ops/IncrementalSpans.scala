@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.VersionedTable
+import graft.sources.{StateTables, VersionedTable}
 
 /** Incremental substring-span dedup maintenance over a versioned
   * corpus (round 13, verdict item 3): [[IncrementalDedup]]'s pattern
@@ -54,8 +54,6 @@ object IncrementalSpans {
   /** Persistent span-dedup state between corpus versions. */
   case class State(shingles: DataFrame, dfCounts: DataFrame, spans: DataFrame)
 
-  private def stabilize(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   private val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   private def keepFilter(dfc: DataFrame): DataFrame =
@@ -83,16 +81,22 @@ object IncrementalSpans {
       VersionedTable.changeFeed(spark, root, fromV, toV, Seq("doc_id")),
       state, minTok)
 
-  /** The core increment, decoupled from where the feed comes from —
-    * note NO corpus snapshot parameter: unlike MinHash verification
-    * (which re-shingles candidate partners), every relation the span
-    * patch needs lives in the state itself. */
-  def advanceWithFeed(spark: SparkSession, feed: DataFrame, state: State,
-      minTok: Int = 12): State = {
-    // a version range CAN carry zero row changes (compaction/cluster
-    // commits) — no-op instead of rewriting three checkpoints (the
-    // IncrementalDedup empty-feed precedent)
-    if (feed.isEmpty) return state
+  /** One delta's patch over `cur`, shared by both faces: the changed
+    * ids, the re-shingled entering docs, the arithmetic df-count delta
+    * and its patched rows, the patched shingle/df relations (`fix`ed —
+    * the in-memory face checkpoints them as its new state, the stored
+    * face leaves them logical over its unpatched tables), the affected
+    * pairs and docs, and the gram pair rows among the affected docs
+    * under the new keep-set. */
+  private case class Patch(changedIds: DataFrame, newSh: DataFrame,
+      deltaCnt: DataFrame, dfChanged: DataFrame, sh2: DataFrame,
+      dfc2: DataFrame, pAff: DataFrame, pAffDocs: DataFrame,
+      pairRows: DataFrame, scratch: Seq[DataFrame]) {
+    def release(): Unit = scratch.foreach(_.unpersist(false))
+  }
+
+  private def patchOf(feed: DataFrame, cur: State,
+      fix: DataFrame => DataFrame): Patch = {
     val cf = feed.select(col("doc_id"), col("text"), col("_change_type"))
       .persist(lvl)
     val changedIds = cf.select(col("doc_id")).distinct()
@@ -102,7 +106,7 @@ object IncrementalSpans {
       .select(col("doc_id"), col("text"))
 
     val newSh = Pipelines.spanShingleDocs(entering).persist(lvl)
-    val oldShChanged = state.shingles
+    val oldShChanged = cur.shingles
       .join(broadcast(changedIds), Seq("doc_id"), "left_semi")
       .persist(lvl)
 
@@ -119,22 +123,20 @@ object IncrementalSpans {
     val deltaB = broadcast(deltaCnt)
     // state patch in broadcast pieces: kept (hash untouched) /
     // updated (count adjusted, survivors only) / fresh (never seen)
-    val kept = state.dfCounts.join(deltaB, Seq("h"), "left_anti")
-    val updated = state.dfCounts
+    val updated = cur.dfCounts
       .join(deltaB.withColumnRenamed("dc", "dc2"), Seq("h"))
       .select(col("h"), (col("c") + col("dc2")).as("c"))
       .filter(col("c") > 0L)
-    val seenKeys = state.dfCounts
+    val seenKeys = cur.dfCounts
       .join(deltaB, Seq("h"), "left_semi").select(col("h"))
       .localCheckpoint(true) // |delta|-bounded
     val fresh = deltaCnt.join(broadcast(seenKeys), Seq("h"), "left_anti")
       .filter(col("dc") > 0L)
       .select(col("h"), col("dc").as("c"))
-    val dfc2 = stabilize(kept.unionByName(updated).unionByName(fresh))
-
-    // patched shingle state — checkpointed ONCE, read by every
-    // downstream consumer (pair probe, restricted rebuild, the state)
-    val sh2 = stabilize(state.shingles
+    val dfChanged = stabilize(updated.unionByName(fresh)) // |delta|-bounded
+    val dfc2 = fix(cur.dfCounts.join(deltaB, Seq("h"), "left_anti")
+      .unionByName(dfChanged))
+    val sh2 = fix(cur.shingles
       .join(broadcast(changedIds), Seq("doc_id"), "left_anti")
       .unionByName(newSh))
 
@@ -157,15 +159,14 @@ object IncrementalSpans {
       val occ = sh.join(broadcast(affKeep), Seq("h"), "left_semi")
       Pipelines.spanGramPairs(occ).select(col("d1"), col("d2")).distinct()
     }
-    val pAff = stabilize(pairsVia(state.shingles, state.dfCounts)
+    val pAff = stabilize(pairsVia(cur.shingles, cur.dfCounts)
       .unionAll(pairsVia(sh2, dfc2))
       .distinct())
 
-    // recompute spans for exactly the affected pairs, from the patched
-    // state: restrict the shingle state to affected docs (broadcast
-    // semi), keep-filter THAT small slice (its distinct hashes
-    // broadcast into one dfc2 scan), regenerate pair rows, keep only
-    // affected pairs
+    // gram pair rows among the affected docs, from the patched state:
+    // restrict the shingle state to affected docs (broadcast semi),
+    // keep-filter THAT small slice (its distinct hashes broadcast into
+    // one dfc2 scan), regenerate pair rows
     val pAffDocs = pAff.select(col("d1").as("doc_id"))
       .unionAll(pAff.select(col("d2").as("doc_id"))).distinct()
       .localCheckpoint(true)
@@ -177,17 +178,33 @@ object IncrementalSpans {
         "left_semi"))
       .localCheckpoint(true)
     val fkR = restricted.join(broadcast(keepSmall), Seq("h"), "left_semi")
-    val pairRowsR = Pipelines.spanGramPairs(fkR)
-      .join(broadcast(pAff), Seq("d1", "d2"), "left_semi")
-    val spansR = Pipelines.spansFromPairRows(pairRowsR, minTok)
+    Patch(changedIds, newSh, deltaCnt, dfChanged, sh2, dfc2, pAff, pAffDocs,
+      Pipelines.spanGramPairs(fkR), Seq(cf, newSh, oldShChanged))
+  }
 
-    // patch: retire every affected pair's spans, add the rebuilt ones
+  /** The core increment, decoupled from where the feed comes from —
+    * note NO corpus snapshot parameter: unlike MinHash verification
+    * (which re-shingles candidate partners), every relation the span
+    * patch needs lives in the state itself. */
+  def advanceWithFeed(spark: SparkSession, feed: DataFrame, state: State,
+      minTok: Int = 12): State = {
+    // a version range CAN carry zero row changes (compaction/cluster
+    // commits) — no-op instead of rewriting three checkpoints (the
+    // IncrementalDedup empty-feed precedent)
+    if (feed.isEmpty) return state
+    // the patched shingle/df relations are checkpointed ONCE, read by
+    // every downstream consumer (pair probe, restricted rebuild, the
+    // state)
+    val p = patchOf(feed, state, stabilize)
+    // recompute spans for exactly the affected pairs, then patch:
+    // retire every affected pair's spans, add the rebuilt ones
+    val spansR = Pipelines.spansFromPairRows(
+      p.pairRows.join(broadcast(p.pAff), Seq("d1", "d2"), "left_semi"), minTok)
     val spans2 = state.spans
-      .join(broadcast(pAff), Seq("d1", "d2"), "left_anti")
+      .join(broadcast(p.pAff), Seq("d1", "d2"), "left_anti")
       .unionByName(spansR)
-
-    val st = State(sh2, dfc2, stabilize(spans2))
-    Seq(cf, newSh, oldShChanged).foreach(_.unpersist(false))
+    val st = State(p.sh2, p.dfc2, stabilize(spans2))
+    p.release()
     st
   }
 
@@ -202,182 +219,82 @@ object IncrementalSpans {
   case class StoredSpans(shinglesRoot: String, dfRoot: String,
       spansRoot: String)
 
-  /** Bootstrap the stored state from a corpus snapshot. */
+  private def roots(st: StoredSpans) =
+    Seq(st.shinglesRoot, st.dfRoot, st.spansRoot)
+
+  /** Bootstrap the stored state from a corpus snapshot, range-clustered
+    * and fenced ([[StateTables]]); also the one recovery from a torn
+    * state, into fresh roots. */
   def bootstrapStored(spark: SparkSession, docs: DataFrame,
       shinglesRoot: String, dfRoot: String, spansRoot: String,
       minTok: Int = 12, files: Int = 8): StoredSpans = {
-    // bootstrap is the documented recovery from a torn advance: clear
-    // any stale fence marker so the rebuilt state is trusted again
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(spansRoot + ".advance_inprogress"))
     val st = build(docs, minTok)
-    VersionedTable.create(spark, shinglesRoot,
-      st.shingles.repartitionByRange(files, col("doc_id")))
-    VersionedTable.create(spark, dfRoot,
-      st.dfCounts.repartitionByRange(files, col("h")))
-    VersionedTable.create(spark, spansRoot,
-      st.spans.repartitionByRange(files, col("d1")))
+    StateTables.create(spark, files, (shinglesRoot, st.shingles, "doc_id"),
+      (dfRoot, st.dfCounts, "h"), (spansRoot, st.spans, "d1"))
     StoredSpans(shinglesRoot, dfRoot, spansRoot)
   }
 
-  /** The stored state read back as a [[State]]. */
-  def readStored(spark: SparkSession, st: StoredSpans): State =
+  /** The stored state read back as a [[State]]; refuses a torn state
+    * ([[StateTables.check]]). */
+  def readStored(spark: SparkSession, st: StoredSpans): State = {
+    StateTables.check(spark, roots(st))
     State(VersionedTable.read(spark, st.shinglesRoot),
       VersionedTable.read(spark, st.dfRoot),
       VersionedTable.read(spark, st.spansRoot))
-
-  private val InChunk = 10000
+  }
 
   /** Advance the STORED state across a corpus version range: the same
-    * increment as [[advanceWithFeed]], lowered to table operations —
-    * predicate DELETEs (file-pruned via the clustered layout) + one
-    * append per state table. The span retire/rebuild set is widened
-    * from the exact affected-PAIR set to ALL pairs among the affected
-    * DOCS (both sets are |delta|-bounded): a pair predicate would need
-    * |pairs| conjunctions, while the doc widening is two IN-lists —
-    * and the widened pairs' spans are recomputed byte-identically
-    * (their gram evidence is unchanged), so delete+reappend is a
-    * no-op for them and the resulting table still equals the full
-    * rebuild (spec-pinned). Returns (shingleFilesRewritten,
-    * shingleFilesKept) so callers/specs observe the file pruning.
+    * patch as [[advanceWithFeed]], lowered to table operations —
+    * chunked predicate DELETEs (file-pruned via the clustered layout)
+    * + one append per state table. The span retire/rebuild set is
+    * widened from the exact affected-PAIR set to ALL pairs among the
+    * affected DOCS (both sets are |delta|-bounded): a pair predicate
+    * would need |pairs| conjunctions, while the doc widening is two
+    * IN-lists — and the widened pairs' spans are recomputed
+    * byte-identically (their gram evidence is unchanged), so
+    * delete+reappend is a no-op for them and the resulting table still
+    * equals the full rebuild (spec-pinned). Returns
+    * (shingleFilesRewritten, shingleFilesKept) so callers/specs observe
+    * the file pruning.
     *
     * NOT atomic across the three state tables: the patch lowers to
-    * several independent commits (chunked DELETEs + appends), so a
-    * concurrent reader — or a crash mid-advance — can observe a state
-    * that equals neither the pre- nor the post-advance rebuild. The
-    * window is fenced by a marker file (`<spansRoot>.advance_inprogress`)
-    * written before the first DELETE and removed after the last
-    * append: readers that see the marker must not trust the stored
-    * state, and recovery is re-[[bootstrapStored]] from the corpus
-    * version recorded in the marker (the in-memory [[advance]] face
-    * swaps atomically and has no such window). */
+    * several independent commits, so a concurrent reader — or a crash
+    * mid-advance — can observe a state that equals neither the pre-
+    * nor the post-advance rebuild. The patch runs inside
+    * [[StateTables.patch]], whose marker is stamped only after the last
+    * append: [[readStored]] and the next advance refuse a state the
+    * marker does not record, and the one recovery is [[bootstrapStored]]
+    * into fresh roots from the corpus snapshot (the in-memory
+    * [[advance]] face swaps atomically and has no such window). */
   def advanceStored(spark: SparkSession, corpusRoot: String, fromV: Long,
-      toV: Long, st: StoredSpans, minTok: Int = 12): (Int, Int) = {
-    // a surviving marker means a prior advance died mid-commit: the
-    // stored tables may be torn (this retry would only delete+reappend
-    // docs in ITS OWN window, never repairing the earlier partial
-    // commit) — fail fast; recovery is re-bootstrapStored
-    val marker = java.nio.file.Paths.get(st.spansRoot + ".advance_inprogress")
-    if (java.nio.file.Files.exists(marker))
-      throw new IllegalStateException(
-        s"previous advanceStored aborted mid-commit ($marker: " +
-          s"${java.nio.file.Files.readString(marker)}); stored state may " +
-          "be torn - re-run bootstrapStored from the corpus snapshot")
-    val feed =
-      VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
-    if (feed.isEmpty) {
-      val kept = VersionedTable.history(spark, st.shinglesRoot)
-        .orderBy(col("version").desc).select("n_files")
-        .head().getLong(0).toInt
-      return (0, kept)
+      toV: Long, st: StoredSpans, minTok: Int = 12): (Int, Int) =
+    StateTables.patch(spark, roots(st)) {
+      val feed =
+        VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
+      if (feed.isEmpty) (0, StateTables.filesKept(spark, st.shinglesRoot))
+      else {
+        // the patched relations stay logical over the stored tables;
+        // everything an append reads is materialized before the first
+        // DELETE
+        val p = patchOf(feed, readStored(spark, st), identity)
+        val spansAppend =
+          stabilize(Pipelines.spansFromPairRows(p.pairRows, minTok))
+        val pruned = StateTables.deleteWhere(spark, st.shinglesRoot,
+          StateTables.inLists(p.changedIds).map(l => s"doc_id IN ($l)"))
+        StateTables.deleteWhere(spark, st.dfRoot,
+          StateTables.inLists(p.deltaCnt.select("h")).map(l => s"h IN ($l)"))
+        // chunk-PAIR coverage: a span's endpoints can land in different
+        // id chunks, so every (chunk_i, chunk_j) combination must be
+        // deleted — quadratic in chunks, but deltas are |delta|-bounded
+        // and almost always one chunk
+        val docs = StateTables.inLists(p.pAffDocs)
+        StateTables.deleteWhere(spark, st.spansRoot,
+          for (a <- docs; b <- docs) yield s"d1 IN ($a) AND d2 IN ($b)")
+        StateTables.append(spark, st.shinglesRoot, p.newSh)
+        StateTables.append(spark, st.dfRoot, p.dfChanged)
+        StateTables.append(spark, st.spansRoot, spansAppend)
+        p.release()
+        pruned
+      }
     }
-    val cur = readStored(spark, st)
-    val cf = feed.select(col("doc_id"), col("text"), col("_change_type"))
-      .persist(lvl)
-    val changedIds = cf.select(col("doc_id")).distinct()
-      .localCheckpoint(true)
-    val entering = cf
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .select(col("doc_id"), col("text"))
-    val newSh = Pipelines.spanShingleDocs(entering).persist(lvl)
-    val oldShChanged = cur.shingles
-      .join(broadcast(changedIds), Seq("doc_id"), "left_semi")
-      .persist(lvl)
-
-    val oldCnt = oldShChanged.groupBy(col("h")).agg(count(lit(1)).as("c_old"))
-    val newCnt = newSh.groupBy(col("h")).agg(count(lit(1)).as("c_new"))
-    val deltaCnt = oldCnt.join(newCnt, Seq("h"), "full_outer")
-      .select(col("h"),
-        (coalesce(col("c_new"), lit(0L)) - coalesce(col("c_old"), lit(0L)))
-          .as("dc"))
-      .localCheckpoint(true)
-    // replacement counts for every touched hash (survivors only)
-    val replaced = cur.dfCounts
-      .join(broadcast(deltaCnt).withColumnRenamed("dc", "dc2"), Seq("h"))
-      .select(col("h"), (col("c") + col("dc2")).as("c"))
-      .filter(col("c") > 0L)
-    val seenKeys = cur.dfCounts
-      .join(broadcast(deltaCnt), Seq("h"), "left_semi").select(col("h"))
-      .localCheckpoint(true)
-    val freshCnt = deltaCnt.join(broadcast(seenKeys), Seq("h"), "left_anti")
-      .filter(col("dc") > 0L).select(col("h"), col("dc").as("c"))
-    val dfAppend = stabilize(replaced.unionByName(freshCnt))
-
-    // affected pairs from BOTH keep-set sides (old = stored tables,
-    // new = stored-minus-delta plus the computed patches, expressed
-    // logically before any write)
-    val sh2Logical = cur.shingles
-      .join(broadcast(changedIds), Seq("doc_id"), "left_anti")
-      .unionByName(newSh)
-    val dfc2Logical = cur.dfCounts
-      .join(broadcast(deltaCnt), Seq("h"), "left_anti")
-      .unionByName(dfAppend)
-    val affH = oldShChanged.select(col("h"))
-      .unionAll(newSh.select(col("h"))).distinct()
-      .localCheckpoint(true)
-    def pairsVia(sh: DataFrame, dfc: DataFrame): DataFrame = {
-      val affKeep = keepFilter(
-        dfc.join(broadcast(affH), Seq("h"), "left_semi"))
-        .localCheckpoint(true)
-      val occ = sh.join(broadcast(affKeep), Seq("h"), "left_semi")
-      Pipelines.spanGramPairs(occ).select(col("d1"), col("d2")).distinct()
-    }
-    val pAff = stabilize(pairsVia(cur.shingles, cur.dfCounts)
-      .unionAll(pairsVia(sh2Logical, dfc2Logical))
-      .distinct())
-    val pAffDocs = pAff.select(col("d1").as("doc_id"))
-      .unionAll(pAff.select(col("d2").as("doc_id"))).distinct()
-      .localCheckpoint(true)
-    // widened rebuild: ALL ≥minTok spans among the affected docs under
-    // the new state (see doc above — unchanged pairs re-emit
-    // byte-identical rows)
-    val restricted = sh2Logical
-      .join(broadcast(pAffDocs), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
-    val keepSmall = keepFilter(dfc2Logical.join(
-        broadcast(restricted.select(col("h")).distinct()), Seq("h"),
-        "left_semi"))
-      .localCheckpoint(true)
-    val fkR = restricted.join(broadcast(keepSmall), Seq("h"), "left_semi")
-    val spansAppend =
-      stabilize(Pipelines.spansFromPairRows(Pipelines.spanGramPairs(fkR),
-        minTok))
-
-    // lower to table ops: chunked predicate DELETEs + appends — fenced
-    // by the in-progress marker (see Scaladoc: readers seeing it must
-    // re-bootstrap from the recorded corpus version, not trust state)
-    java.nio.file.Files.writeString(marker, s"fromV=$fromV toV=$toV")
-    val docIds = changedIds.collect().map(_.getLong(0))
-    var touched = 0
-    var keptFiles = Int.MaxValue
-    docIds.grouped(InChunk).foreach { chunk =>
-      val (_, t, k) = VersionedTable.deleteWhere(spark, st.shinglesRoot,
-        s"doc_id IN (${chunk.mkString(",")})")
-      touched += t; keptFiles = math.min(keptFiles, k)
-    }
-    val hashes = deltaCnt.select("h").collect().map(_.getString(0))
-    hashes.grouped(InChunk).foreach { chunk =>
-      VersionedTable.deleteWhere(spark, st.dfRoot,
-        s"h IN (${chunk.mkString("'", "','", "'")})")
-    }
-    // chunk-PAIR coverage: a span's endpoints can land in different
-    // id chunks, so every (chunk_i, chunk_j) combination must be
-    // deleted — quadratic in chunks, but deltas are |delta|-bounded
-    // and almost always one chunk
-    val affDocIds = pAffDocs.collect().map(_.getLong(0))
-    val docChunks = affDocIds.grouped(InChunk).toSeq
-    for (ci <- docChunks; cj <- docChunks) {
-      VersionedTable.deleteWhere(spark, st.spansRoot,
-        s"d1 IN (${ci.mkString(",")}) AND d2 IN (${cj.mkString(",")})")
-    }
-    if (newSh.take(1).nonEmpty)
-      VersionedTable.append(spark, st.shinglesRoot, newSh)
-    if (dfAppend.take(1).nonEmpty)
-      VersionedTable.append(spark, st.dfRoot, dfAppend)
-    if (spansAppend.take(1).nonEmpty)
-      VersionedTable.append(spark, st.spansRoot, spansAppend)
-    java.nio.file.Files.deleteIfExists(marker)
-    Seq(cf, newSh, oldShChanged).foreach(_.unpersist(false))
-    (touched, if (keptFiles == Int.MaxValue) 0 else keptFiles)
-  }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.VersionedTable
+import graft.sources.{StateTables, VersionedTable}
 
 /** Incremental URL-keyed exact-dedup maintenance over a versioned
   * corpus (round 15, VERDICT item 4): the cheapest, most-used crawl
@@ -101,99 +101,45 @@ object IncrementalUrlDedup {
     * touched id ranges (spec-asserted: untouched files > 0). */
   case class StoredState(keysRoot: String)
 
+  /** Bootstrap the stored state, range-clustered and fenced
+    * ([[StateTables]]); also the one recovery from a torn state, into a
+    * fresh root. */
   def bootstrapStored(spark: SparkSession, docs: DataFrame,
       keysRoot: String, textCol: String = "text",
       files: Int = 8): StoredState = {
-    VersionedTable.create(spark, keysRoot,
-      build(docs, textCol).keys.repartitionByRange(files, col("doc_id")))
-    val st = StoredState(keysRoot)
-    writeSync(spark, st)
-    st
+    StateTables.create(spark, files,
+      (keysRoot, build(docs, textCol).keys, "doc_id"))
+    StoredState(keysRoot)
   }
-
-  private val InChunk = 10000
 
   /** Advance the STORED state: chunked file-pruned DELETE of the
     * changed ids + one append of the entering key rows. Returns
     * (filesRewritten, filesKept) so callers/specs observe the pruning.
-    * The DELETE and append are separate commits; the sync marker
-    * (written only after a complete patch) makes a torn state
-    * detectable — [[readStored]] refuses a head-version mismatch. */
+    * The DELETE and append are separate commits, so the patch runs
+    * inside [[StateTables.patch]]: a torn state is refused before
+    * anything is computed, an empty feed included. */
   def advanceStored(spark: SparkSession, corpusRoot: String, fromV: Long,
-      toV: Long, st: StoredState, textCol: String = "text"): (Int, Int) = {
-    val feed =
-      VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
-    if (feed.isEmpty) {
-      val kept = VersionedTable.history(spark, st.keysRoot)
-        .orderBy(col("version").desc).select("n_files")
-        .head().getLong(0).toInt
-      writeSync(spark, st)
-      return (0, kept)
+      toV: Long, st: StoredState, textCol: String = "text"): (Int, Int) =
+    StateTables.patch(spark, Seq(st.keysRoot)) {
+      val feed =
+        VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
+      if (feed.isEmpty) (0, StateTables.filesKept(spark, st.keysRoot))
+      else {
+        val (changedIds, entering) = patchOf(feed, textCol)
+        val pruned = StateTables.deleteWhere(spark, st.keysRoot,
+          StateTables.inLists(changedIds).map(l => s"doc_id IN ($l)"))
+        StateTables.append(spark, st.keysRoot, entering)
+        changedIds.unpersist(false)
+        pruned
+      }
     }
-    val (changedIds, entering) = patchOf(feed, textCol)
-    val ids = changedIds.collect().map(_.getLong(0))
-    var touched = 0
-    var kept = Int.MaxValue
-    ids.grouped(InChunk).foreach { chunk =>
-      val (_, t, k) = VersionedTable.deleteWhere(spark, st.keysRoot,
-        s"doc_id IN (${chunk.mkString(",")})")
-      touched += t; kept = math.min(kept, k)
-    }
-    if (entering.take(1).nonEmpty)
-      VersionedTable.append(spark, st.keysRoot, entering)
-    writeSync(spark, st)
-    changedIds.unpersist(false)
-    (touched, if (kept == Int.MaxValue) 0 else kept)
-  }
 
-  /** Read back, refusing a TORN state (sync marker's recorded head !=
-    * the table's actual head means an advanceStored crashed between
-    * its DELETE and append commits). */
+  /** Read back, refusing a TORN state ([[StateTables.check]]: an
+    * advanceStored crashed between its DELETE and append commits). */
   def readStored(spark: SparkSession, st: StoredState): State = {
-    readSync(spark, st).foreach { v =>
-      val head = VersionedTable.versions(spark, st.keysRoot).last
-      // IllegalStateException, matching the IncrementalSpans torn-state
-      // fence (round-16 advice): this is corrupted STATE, not a bad
-      // argument
-      if (head != v) throw new IllegalStateException(
-        s"torn url-dedup state: sync marker records version $v but head " +
-          s"is $head — an advanceStored was interrupted mid-patch; re-run " +
-          "it or restore to the marker")
-    }
+    StateTables.check(spark, Seq(st.keysRoot))
     State(VersionedTable.read(spark, st.keysRoot))
   }
-
-  private def syncPath(st: StoredState) =
-    new org.apache.hadoop.fs.Path(st.keysRoot, "_urldedup_sync.json")
-
-  private def writeSync(spark: SparkSession, st: StoredState): Unit = {
-    val v = VersionedTable.versions(spark, st.keysRoot).last
-    val path = syncPath(st)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      st.keysRoot, s"_urldedup_sync.json.tmp-$v")
-    val out = fs.create(tmp, true)
-    try out.write(s"""{"keys_version":$v}""".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    fs.rename(tmp, path)
-  }
-
-  private def readSync(spark: SparkSession, st: StoredState): Option[Long] = {
-    val path = syncPath(st)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      """"keys_version":(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong)
-    }
-  }
-
-  private def stabilize(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** The zero state ([[advanceWithFeed]] of v1's all-insert feed over
     * it equals `build(v1 snapshot)` by construction). */

@@ -34,6 +34,13 @@ package object ops {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     Tables(spark, sfDir, name)
 
+  /** Materialize + truncate lineage: incremental operator state is
+    * consumed by the NEXT advance too, and without a cut each version
+    * would replan the whole history (the Iterate/label-prop
+    * discipline). In a stored deployment this is the write-back to the
+    * state tables. */
+  private[ops] def stabilize(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
   /** A query program: (session, sfDir) => result DataFrame. */
   type Q = (SparkSession, String) => DataFrame
 }
