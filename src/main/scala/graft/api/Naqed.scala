@@ -529,10 +529,15 @@ class Naqed(spark: SparkSession, sfDir: String) {
     *     the same `$`-argument convention as queries selects the rows
     *     (`$min_x`, `$max_x`, `$like_x`, `$x`), `$set` assigns typed
     *     values via the declared-schema coercion used for inserts;
-    *     lowered to `VersionedTable.merge` keyed by the table's keys,
-    *     so readers see old or new snapshot, never a torn write;
+    *     lowered to `VersionedTable.merge` keyed by the table's keys
+    *     (merge-on-read: the matched rows' old copies are marked in
+    *     their files' deletion vectors and the updated rows land as one
+    *     new file), so readers see old or new snapshot, never a torn
+    *     write;
     *   - `Map("$delete" -> true, <arg filters>)` — DELETE: lowered to
-    *     `VersionedTable.deleteWhere` (min/max-pruned file rewrite).
+    *     `VersionedTable.deleteWhere` (min/max-pruned probe; the
+    *     matching rows join their files' deletion vectors, no data
+    *     file is written).
     *     A filter is REQUIRED — an unfiltered delete needs an explicit
     *     `"$where" -> "true"`. `$where` accepts a raw SQL predicate
     *     AND-ed with the arg filters in both update and delete.

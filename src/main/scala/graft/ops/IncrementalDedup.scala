@@ -185,7 +185,7 @@ object IncrementalDedup {
     * deployment shape (the in-memory [[State]]'s localCheckpoint
     * stands in for this write-back at bench scale). The bands table
     * is written range-clustered on doc_id so the per-delta DELETE's
-    * file-level min/max pruning rewrites only the files whose id
+    * file-level min/max pruning probes only the files whose id
     * range the delta touches — the "keyed MERGE into stored state
     * tables, file-pruned" claim in SCALING.md made real and asserted
     * (IncrementalDedupSpec checks untouched > 0). Appends land as new
@@ -210,7 +210,7 @@ object IncrementalDedup {
   /** Advance the STORED state across a corpus version range: compute
     * the patch, then lower it to table operations — chunked predicate
     * DELETEs (file-pruned by the id list's min/max check) + one append
-    * per state table. Returns (bandsFilesRewritten, bandsFilesKept)
+    * per state table. Returns (bandsFilesTouched, bandsFilesKept)
     * from the bands DELETE so callers/specs can observe the pruning.
     *
     * Atomicity: the DELETEs and appends are separate commits per state

@@ -254,7 +254,7 @@ object IncrementalSpans {
     * byte-identically (their gram evidence is unchanged), so
     * delete+reappend is a no-op for them and the resulting table still
     * equals the full rebuild (spec-pinned). Returns
-    * (shingleFilesRewritten, shingleFilesKept) so callers/specs observe
+    * (shingleFilesTouched, shingleFilesKept) so callers/specs observe
     * the file pruning.
     *
     * NOT atomic across the three state tables: the patch lowers to

@@ -114,24 +114,28 @@ object IncrementalUrlDedup {
 
   /** Advance the STORED state: chunked file-pruned DELETE of the
     * changed ids + one append of the entering key rows. Returns
-    * (filesRewritten, filesKept) so callers/specs observe the pruning.
+    * (filesTouched, filesKept) so callers/specs observe the pruning.
     * The DELETE and append are separate commits, so the patch runs
     * inside [[StateTables.patch]]: a torn state is refused before
     * anything is computed, an empty feed included. */
   def advanceStored(spark: SparkSession, corpusRoot: String, fromV: Long,
       toV: Long, st: StoredState, textCol: String = "text"): (Int, Int) =
     StateTables.patch(spark, Seq(st.keysRoot)) {
-      val feed =
-        VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
-      if (feed.isEmpty) (0, StateTables.filesKept(spark, st.keysRoot))
-      else {
-        val (changedIds, entering) = patchOf(feed, textCol)
-        val pruned = StateTables.deleteWhere(spark, st.keysRoot,
-          StateTables.inLists(changedIds).map(l => s"doc_id IN ($l)"))
-        StateTables.append(spark, st.keysRoot, entering)
-        changedIds.unpersist(false)
-        pruned
-      }
+      // four consumers (the empty check, the changed ids, the append's
+      // row probe and its write): the feed is computed once
+      val feed = VersionedTable.changeFeed(spark, corpusRoot, fromV, toV, Seq("doc_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (feed.isEmpty) (0, StateTables.filesKept(spark, st.keysRoot))
+        else {
+          val (changedIds, entering) = patchOf(feed, textCol)
+          val pruned = StateTables.deleteWhere(spark, st.keysRoot,
+            StateTables.inLists(changedIds).map(l => s"doc_id IN ($l)"))
+          StateTables.append(spark, st.keysRoot, entering)
+          changedIds.unpersist(false)
+          pruned
+        }
+      } finally feed.unpersist(false)
     }
 
   /** Read back, refusing a TORN state ([[StateTables.check]]: an

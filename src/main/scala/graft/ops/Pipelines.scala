@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.types._
 import graft.functions.CosineSimilarity.cosineSim
 
@@ -2374,14 +2375,52 @@ object Pipelines {
       struct(x("d").as("d1"), y("d").as("d2"), x("p").as("p1"), (x("p") - y("p")).as("df"))
     }).as("pr")
 
-  /** Gram-match pair rows (d1 < d2, p1, pos-diff) from a keep-filtered
+  /** Gram-match pair rows (d1 < d2, p1, pos-diff) from a
     * positioned-shingle relation (doc_id, pos, h), shared with
-    * [[IncrementalSpans]]: ONE groupBy(h) collect + [[occPairs]] in
-    * place of an h-keyed self-join. */
-  private[ops] def spanGramPairs(fk: DataFrame): DataFrame =
-    fk.groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id").as("d"), col("pos").as("p"))).as("occ"))
+    * [[IncrementalSpans]] (whose relations are already keep-filtered,
+    * so the cap never fires there): ONE groupBy(h) [[CappedOcc]]
+    * collect + [[occPairs]] in place of an h-keyed self-join. Only
+    * hashes with df in [2, [[SpanDfCap]]] pair. */
+  private[graft] def spanGramPairs(sh: DataFrame): DataFrame =
+    sh.groupBy(col("h"))
+      .agg(udaf(CappedOcc, Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))(
+        col("doc_id").cast(LongType), col("pos").cast(LongType)).as("occ"))
+      .filter(size(col("occ")) >= 2)
       .select(occPairs).select("pr.*")
+
+  /** The span builds' df cap: a gram hash occurring more often is
+    * boilerplate and pairs with nothing. */
+  private val SpanDfCap = 20
+
+  /** One (doc, position) occurrence of a span gram hash. */
+  private[graft] case class Occ(d: Long, p: Long)
+
+  /** `collect_list(struct(d, p))` bounded BEFORE it materializes: a
+    * buffer stops growing at [[SpanDfCap]] + 1 occurrences (enough to
+    * know the group is over the cap, so a merge of partial buffers
+    * truncates to it too), and an over-cap group finishes as an empty
+    * list. No group ever holds more than 21 occurrences, however hot
+    * its hash. The buffer is (d, p) interleaved in one long array. */
+  private[graft] object CappedOcc extends Aggregator[(Long, Long), Array[Long], Seq[Occ]] {
+    private val Full = 2 * (SpanDfCap + 1)
+    def zero: Array[Long] = Array.emptyLongArray
+    def reduce(b: Array[Long], o: (Long, Long)): Array[Long] =
+      if (b.length >= Full) b
+      else {
+        val n = java.util.Arrays.copyOf(b, b.length + 2)
+        n(b.length) = o._1; n(b.length + 1) = o._2
+        n
+      }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] =
+      if (a.length >= Full || b.isEmpty) a
+      else if (a.isEmpty) b
+      else (a ++ b).take(Full)
+    def finish(b: Array[Long]): Seq[Occ] =
+      if (b.length >= Full) Seq.empty
+      else b.grouped(2).map(x => Occ(x(0), x(1))).toSeq
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Seq[Occ]] = ExpressionEncoder[Seq[Occ]]()
+  }
 
   /** Gaps-and-islands over gram-match pair rows → maximal spans
     * (d1, d2, s1, s2, tok), ≥ minTok only — the second half of the
@@ -2435,21 +2474,16 @@ object Pipelines {
   }
 
   /** The LAZY span plan (exposed private[graft] so EngineSpec can pin
-    * the pre-checkpoint shape). Round 17 (guide §2.4): the [2,20] df
-    * cap folds INTO the one groupBy(h) collect — size(occ) over the
-    * per-hash occurrence group IS the old keep-relation's count, so
-    * the count aggregate, the keep join and the pair self-join (and
-    * the shingle persist they forced — the relation is now scanned
-    * exactly once) all collapse into a single shuffle, followed only
-    * by the island groupBy. Two exchanges total, down from five. */
+    * the pre-checkpoint shape). The [2,20] df cap folds INTO the one
+    * groupBy(h) capped collect of [[spanGramPairs]] — the per-hash
+    * occurrence group IS the old keep-relation's count, so the count
+    * aggregate, the keep join and the pair self-join (and the shingle
+    * persist they forced — the relation is scanned exactly once) all
+    * collapse into a single shuffle, followed only by the island
+    * groupBy. Two exchanges total. */
   private[graft] def dupSpansBuild(s: SparkSession, d: String, minTok: Int)
-      : DataFrame = {
-    val grouped = spanShingles(s, d)
-      .groupBy(col("h"))
-      .agg(collect_list(struct(col("doc_id").as("d"), col("pos").as("p"))).as("occ"))
-      .filter(size(col("occ")).between(2, 20))
-    spansFromPairRows(grouped.select(occPairs).select("pr.*"), minTok)
-  }
+      : DataFrame =
+    spansFromPairRows(spanGramPairs(spanShingles(s, d)), minTok)
 
   /** Substring-level duplicate-span dedup (§2.39, the round-12
     * headline): pairs of documents sharing a VERBATIM run of ≥ 12

@@ -17,9 +17,11 @@ import scala.jdk.CollectionConverters._
   * what makes the fold correct (avg = sum/count at read time; sum is
   * accepted over integral/decimal only — FP addition is not
   * associative, see [[validateIncremental]]). Any
-  * non-append base change (overwrite, delete, compact rewrote files)
-  * falls back to a full recompute — detected structurally, because
-  * manifests name every live file.
+  * non-append base change (overwrite, a merge or delete that grew a
+  * deletion vector, compact rewrote files) falls back to a full
+  * recompute — detected structurally
+  * ([[VersionedTable.appendedSince]]), because manifests name every
+  * live file and its deletion vector.
   *
   * Round 9: views created WITH the base's key columns additionally
   * maintain through updates and deletes via the row-level
@@ -194,80 +196,76 @@ object MaterializedView {
     val (baseRoot, lastBaseV, groupCols, aggs, keys) = parseDef(defStr)
     val baseV = VersionedTable.versions(spark, baseRoot).last
     if (baseV == lastBaseV) return (viewV, 0, "noop")
-    def filesAt(v: Long): Seq[String] =
+    def filesAt(v: Long) =
       VersionedTable.manifestFiles(VersionedTable.readManifest(spark, baseRoot, v))
-        .map(_.get("path").asInstanceOf[String])
     // the reflected base manifest may have been vacuumed away — the
     // diff is then unknowable, which is just the full-recompute case
-    val oldFiles = try filesAt(lastBaseV) catch { case _: java.io.IOException => null }
+    val oldFiles = try Some(filesAt(lastBaseV)) catch { case _: java.io.IOException => None }
     val newFiles = filesAt(baseV)
-    val appended =
-      if (oldFiles == null) newFiles else newFiles.filterNot(oldFiles.toSet)
-    val appendOnly = oldFiles != null && oldFiles.toSet.subsetOf(newFiles.toSet)
     val baseSchema = VersionedTable.manifestSchema(
       VersionedTable.readManifest(spark, baseRoot, baseV))
-    if (appendOnly) {
-      if (appended.isEmpty) {
-        // metadata-only base commit: advance the cursor by carrying the
-        // view's existing file entries forward — O(1), no state rewrite
-        val v = VersionedTable.commit(spark, viewRoot,
-          Map[String, Object](DefKey -> defJson(baseRoot, baseV, groupCols, aggs, keys)),
-          Some(viewV)) { _ =>
-          ("refresh_cursor", VersionedTable.manifestSchema(viewMan),
-            VersionedTable.manifestFiles(viewMan).map(fm =>
-              (fm.get("path").asInstanceOf[String], fm)))
-        }
-        return (v, 0, "incremental")
-      }
-      val delta = aggregate(
-        spark.read.schema(baseSchema).parquet(appended: _*), groupCols, aggs)
-      val folded = combine(read(spark, viewRoot).unionByName(delta), groupCols, aggs)
-      // writeState's data write executes eagerly while the view's old
-      // files still exist (commits never delete data files — vacuum
-      // does), so the lazy self-read is safe
-      val v = writeState(spark, viewRoot, folded,
-        baseRoot, baseV, groupCols, aggs, keys, "refresh_incremental", Some(viewV))
-      (v, appended.size, "incremental")
-    } else {
-      // round 9: a non-append change with declared keys and an
-      // invertible spec maintains through the row-level change feed
-      // instead of rescanning the base (see object scaladoc)
-      val invertible = aggs.forall(a => a.fn == "count" || a.fn == "sum") &&
-        aggs.exists(a => a.fn == "count" && a.col == "*")
-      if (keys.nonEmpty && invertible && oldFiles != null) {
-        import org.apache.spark.sql.functions.when
-        val feed = VersionedTable.changeFeed(spark, baseRoot, lastBaseV, baseV, keys)
-        val sign = when(
-          col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L)
-        val state = read(spark, viewRoot)
-        // signed partial aggregates, anchored to the stored state's
-        // column types (same schema-parity rationale as combineColumn)
-        val deltaCols = aggs.map { a =>
-          val term = a.fn match {
-            case "count" if a.col == "*" => sum(sign)
-            case "count" => sum(when(col(a.col).isNotNull, sign).otherwise(0L))
-            case "sum" => sum(when(col(a.col).isNotNull,
-              col(a.col).cast(state.schema(a.as).dataType) * sign).otherwise(lit(null)))
+    oldFiles.flatMap(VersionedTable.appendedSince(_, newFiles)) match {
+      case Some(appended) =>
+        if (appended.isEmpty) {
+          // metadata-only base commit: advance the cursor by carrying the
+          // view's existing file entries forward — O(1), no state rewrite
+          val v = VersionedTable.commit(spark, viewRoot,
+            Map[String, Object](DefKey -> defJson(baseRoot, baseV, groupCols, aggs, keys)),
+            Some(viewV)) { _ =>
+            ("refresh_cursor", VersionedTable.manifestSchema(viewMan),
+              VersionedTable.carried(VersionedTable.manifestFiles(viewMan)))
           }
-          term.cast(state.schema(a.as).dataType).as(a.as)
+          return (v, 0, "incremental")
         }
-        val delta = feed.groupBy(groupCols.map(col): _*)
-          .agg(deltaCols.head, deltaCols.tail: _*)
-        val liveness = aggs.find(a => a.fn == "count" && a.col == "*").get.as
-        val folded = combine(state.unionByName(delta), groupCols, aggs)
-          // a group whose row count reached zero no longer exists —
-          // exactly what a full recompute would (not) materialize
-          .filter(col(liveness) =!= 0L)
+        val delta = aggregate(
+          VersionedTable.readFiles(spark, baseSchema, appended), groupCols, aggs)
+        val folded = combine(read(spark, viewRoot).unionByName(delta), groupCols, aggs)
+        // writeState's data write executes eagerly while the view's old
+        // files still exist (commits never delete data files — vacuum
+        // does), so the lazy self-read is safe
         val v = writeState(spark, viewRoot, folded,
-          baseRoot, baseV, groupCols, aggs, keys, "refresh_delta", Some(viewV))
-        return (v, newFiles.size, "delta")
-      }
-      val state = aggregate(
-        VersionedTable.read(spark, baseRoot, Some(baseV)), groupCols, aggs)
-      val v = writeState(spark, viewRoot, state,
-        baseRoot, baseV, groupCols, aggs, keys, "refresh_full", Some(viewV))
-      (v, newFiles.size, "full")
+          baseRoot, baseV, groupCols, aggs, keys, "refresh_incremental", Some(viewV))
+        (v, appended.size, "incremental")
+      case None =>
+        // round 9: a non-append change with declared keys and an
+        // invertible spec maintains through the row-level change feed
+        // instead of rescanning the base (see object scaladoc)
+        val invertible = aggs.forall(a => a.fn == "count" || a.fn == "sum") &&
+          aggs.exists(a => a.fn == "count" && a.col == "*")
+        if (keys.nonEmpty && invertible && oldFiles.isDefined) {
+          import org.apache.spark.sql.functions.when
+          val feed = VersionedTable.changeFeed(spark, baseRoot, lastBaseV, baseV, keys)
+          val sign = when(
+            col("_change_type").isin("insert", "update_postimage"), 1L)
+            .otherwise(-1L)
+          val state = read(spark, viewRoot)
+          // signed partial aggregates, anchored to the stored state's
+          // column types (same schema-parity rationale as combineColumn)
+          val deltaCols = aggs.map { a =>
+            val term = a.fn match {
+              case "count" if a.col == "*" => sum(sign)
+              case "count" => sum(when(col(a.col).isNotNull, sign).otherwise(0L))
+              case "sum" => sum(when(col(a.col).isNotNull,
+                col(a.col).cast(state.schema(a.as).dataType) * sign).otherwise(lit(null)))
+            }
+            term.cast(state.schema(a.as).dataType).as(a.as)
+          }
+          val delta = feed.groupBy(groupCols.map(col): _*)
+            .agg(deltaCols.head, deltaCols.tail: _*)
+          val liveness = aggs.find(a => a.fn == "count" && a.col == "*").get.as
+          val folded = combine(state.unionByName(delta), groupCols, aggs)
+            // a group whose row count reached zero no longer exists —
+            // exactly what a full recompute would (not) materialize
+            .filter(col(liveness) =!= 0L)
+          val v = writeState(spark, viewRoot, folded,
+            baseRoot, baseV, groupCols, aggs, keys, "refresh_delta", Some(viewV))
+          return (v, newFiles.size, "delta")
+        }
+        val state = aggregate(
+          VersionedTable.read(spark, baseRoot, Some(baseV)), groupCols, aggs)
+        val v = writeState(spark, viewRoot, state,
+          baseRoot, baseV, groupCols, aggs, keys, "refresh_full", Some(viewV))
+        (v, newFiles.size, "full")
     }
   }
 }

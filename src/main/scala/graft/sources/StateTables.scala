@@ -105,13 +105,13 @@ object StateTables {
     }).grouped(InChunk).map(_.mkString(",")).toSeq
 
   /** One [[VersionedTable.deleteWhere]] per predicate. Returns
-    * (filesRewritten summed, filesKept min'd) over the commits — 0 kept
+    * (filesTouched summed, filesKept min'd) over the commits — 0 kept
     * when no predicate ran — so callers can observe the pruning. */
   def deleteWhere(spark: SparkSession, root: String,
       predicates: Seq[String]): (Int, Int) = {
     val counts = predicates.map { p =>
-      val (_, rewritten, kept) = VersionedTable.deleteWhere(spark, root, p)
-      (rewritten, kept)
+      val (_, touched, kept) = VersionedTable.deleteWhere(spark, root, p)
+      (touched, kept)
     }
     (counts.map(_._1).sum, if (counts.isEmpty) 0 else counts.map(_._2).min)
   }

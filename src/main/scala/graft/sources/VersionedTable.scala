@@ -2,11 +2,13 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions.{coalesce, col, count, floor, input_file_name, lit, max, min, shiftleft, shiftright, sum, when}
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{coalesce, col, count, floor, input_file_name, lit, max, min, shiftleft, shiftright, sum, udaf, udf, when}
 import org.apache.spark.sql.types._
+import org.roaringbitmap.RoaringBitmap
 import scala.jdk.CollectionConverters._
 
 /** A minimal snapshot table format over raw parquet — the layer
@@ -33,6 +35,16 @@ import scala.jdk.CollectionConverters._
   *    generalized to every sortable column, cf. Delta data skipping /
   *    Iceberg manifests; the Spark-level parquet row-group pruning
   *    still applies afterwards to the files that survive).
+  *  - **Merge-on-read row-level writes.** A file's manifest entry may
+  *    carry a deletion vector, `deleted`: the base64 of a serialized
+  *    RoaringBitmap of the parquet `_metadata.row_index` positions gone
+  *    from it (Iceberg v2 position deletes / Delta deletion vectors).
+  *    `merge` and `deleteWhere` never rewrite a data file: they grow
+  *    vectors, and a merge appends its rows as one new file. Every read
+  *    goes through [[readFiles]], which drops the vectored rows;
+  *    `compact` and `cluster` rewrite the live rows and fold the
+  *    vectors away. A file whose vector covers all its rows leaves the
+  *    manifest.
   *
   * Scale notes: a full file list per manifest is O(files) per commit —
   * production formats amortize with delta logs + periodic checkpoints;
@@ -249,6 +261,126 @@ object VersionedTable {
   private[sources] def manifestSchema(man: java.util.Map[String, Object]): StructType =
     DataType.fromJson(man.get("schemaJson").asInstanceOf[String]).asInstanceOf[StructType]
 
+  private[sources] def pathOf(fm: java.util.Map[String, Object]): String =
+    fm.get("path").asInstanceOf[String]
+
+  /** File entries keyed as a commit takes them: every commit that
+    * carries files forward copies their entries verbatim (deletion
+    * vectors included). */
+  private[sources] def carried(files: Seq[java.util.Map[String, Object]])
+      : Seq[(String, java.util.Map[String, Object])] =
+    files.map(fm => (pathOf(fm), fm))
+
+  // ---- deletion vectors ----
+
+  private val DeletedKey = "deleted"
+
+  private def bitmapOf(bytes: Array[Byte]): RoaringBitmap = {
+    val bm = new RoaringBitmap()
+    bm.deserialize(java.nio.ByteBuffer.wrap(bytes))
+    bm
+  }
+
+  private def bytesOf(bm: RoaringBitmap): Array[Byte] = {
+    bm.runOptimize()
+    val buf = java.nio.ByteBuffer.allocate(bm.serializedSizeInBytes())
+    bm.serialize(buf)
+    buf.array()
+  }
+
+  /** The entry's deletion vector, if it has one. */
+  private def deletedOf(fm: java.util.Map[String, Object]): Option[RoaringBitmap] =
+    Option(fm.get(DeletedKey)).map(s =>
+      bitmapOf(java.util.Base64.getDecoder.decode(s.toString)))
+
+  /** Rows of the file a reader sees: its row count less its vector. */
+  private def liveRows(fm: java.util.Map[String, Object]): Option[Long] =
+    numOf(fm.get("rows")).map(_ - deletedOf(fm).fold(0L)(_.getLongCardinality))
+
+  /** Row positions folded into one bitmap per group on the executors. */
+  private object Positions extends Aggregator[Long, RoaringBitmap, Array[Byte]] {
+    def zero: RoaringBitmap = new RoaringBitmap()
+    def reduce(b: RoaringBitmap, i: Long): RoaringBitmap = { b.add(Math.toIntExact(i)); b }
+    def merge(a: RoaringBitmap, b: RoaringBitmap): RoaringBitmap = { a.or(b); a }
+    def finish(b: RoaringBitmap): Array[Byte] = bytesOf(b)
+    def bufferEncoder: Encoder[RoaringBitmap] = Encoders.javaSerialization[RoaringBitmap]
+    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  }
+
+  /** The one reader of a table's data files: `files` are manifest
+    * entries, read under `schema`. Files without a deletion vector
+    * read as a plain parquet scan (no `_metadata` column, no filter);
+    * when any file has one, ONE filter on `_metadata.file_path` and
+    * `_metadata.row_index` drops its rows. The bitmaps live in the
+    * filter's UDF closure, keyed on the path as `_metadata.file_path`
+    * spells it (the Hadoop `Path` of the scan's `inputFiles` URI),
+    * never as literals, so the generated code does not change with
+    * the deleted positions and later reads reuse its compiled class. */
+  private[sources] def readFiles(spark: SparkSession, schema: StructType,
+      files: Seq[java.util.Map[String, Object]]): DataFrame = {
+    if (files.isEmpty) return spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val df = spark.read.schema(schema).parquet(files.map(pathOf): _*)
+    val vectors = files.flatMap(fm => deletedOf(fm).map(pathOf(fm) -> _)).toMap
+    if (vectors.isEmpty) df
+    else {
+      val byScanPath = df.inputFiles.toSeq.flatMap(p => vectors.get(normalizeFile(p))
+        .map(new Path(new java.net.URI(p)).toString -> _)).toMap
+      // positions are ints (Positions refuses a row index beyond that)
+      val gone = udf((p: String, i: Long) =>
+        i <= Int.MaxValue && byScanPath.get(p).exists(_.contains(i.toInt)))
+      df.filter(!gone(col("_metadata.file_path"), col("_metadata.row_index")))
+    }
+  }
+
+  /** When `newer` only appended to `older` — every older entry is still
+    * there whole, path AND deletion vector — the entries it added;
+    * None when a commit in between deleted or rewrote rows. */
+  private[sources] def appendedSince(older: Seq[java.util.Map[String, Object]],
+      newer: Seq[java.util.Map[String, Object]]): Option[Seq[java.util.Map[String, Object]]] = {
+    def id(fm: java.util.Map[String, Object]) = (pathOf(fm), Option(fm.get(DeletedKey)))
+    val newIds = newer.map(id).toSet
+    if (!older.forall(fm => newIds.contains(id(fm)))) None
+    else {
+      val oldPaths = older.map(pathOf).toSet
+      Some(newer.filterNot(fm => oldPaths.contains(pathOf(fm))))
+    }
+  }
+
+  /** The one row-level write probe behind [[merge]] and [[deleteWhere]]:
+    * reads `files` (the stats candidates) through [[readFiles]], keeps
+    * the rows `hits` selects, and folds their positions into ONE bitmap
+    * per file on the executors. The driver so receives at most one
+    * compressed bitmap per touched file, never one row per deleted
+    * position. Returns `files`' entries with their vectors grown by
+    * those positions; a file whose every row is gone is dropped. */
+  private def deleteRows(spark: SparkSession, schema: StructType,
+      files: Seq[java.util.Map[String, Object]], hits: DataFrame => DataFrame)
+      : Seq[(String, java.util.Map[String, Object])] = {
+    if (files.isEmpty) return Seq.empty
+    val (fileCol, rowCol) = ("__graft_file", "__graft_row")
+    val rows = readFiles(spark, schema, files)
+      .withColumn(fileCol, col("_metadata.file_path"))
+      .withColumn(rowCol, col("_metadata.row_index"))
+    val found = hits(rows).groupBy(col(fileCol))
+      .agg(udaf(Positions, Encoders.scalaLong)(col(rowCol)))
+      .collect().map(r => normalizeFile(r.getString(0)) -> bitmapOf(r.getAs[Array[Byte]](1)))
+      .toMap
+    carried(files.flatMap { fm =>
+      found.get(pathOf(fm)) match {
+        case None => Some(fm)
+        case Some(bm) =>
+          deletedOf(fm).foreach(bm.or)
+          if (numOf(fm.get("rows")).contains(bm.getLongCardinality)) None
+          else {
+            val grown = new java.util.LinkedHashMap[String, Object](fm)
+            grown.put(DeletedKey, java.util.Base64.getEncoder.encodeToString(bytesOf(bm)))
+            Some(grown: java.util.Map[String, Object])
+          }
+      }
+    })
+  }
+
   /** Commit loop: recompute the snapshot against the current head until
     * the CAS wins. `nextFiles(head)` returns (op, schema, files);
     * `extra` adds manifest fields (e.g. the streaming batch id). When
@@ -317,8 +449,7 @@ object VersionedTable {
         else throw new IllegalArgumentException(
           s"append schema mismatch (pass mergeSchema=true to evolve): " +
             s"table ${tableSchema.simpleString} vs ${df.schema.simpleString}")
-      ("append", newSchema, manifestFiles(head).map(fm =>
-        (fm.get("path").asInstanceOf[String], fm)) ++ files)
+      ("append", newSchema, carried(manifestFiles(head)) ++ files)
     }
   }
 
@@ -340,41 +471,72 @@ object VersionedTable {
 
   /** Transactional MERGE (upsert): same-key rows replaced, new keys
     * inserted — Maintenance.merge's semantics, but readers see either
-    * the old or the new snapshot, never the swap window. */
+    * the old or the new snapshot, never the swap window. Merge-on-read
+    * ([[upsertFiles]]): the replaced rows are marked in their files'
+    * deletion vectors and `updates` is appended as one new file; no
+    * existing data file is rewritten. */
   def merge(spark: SparkSession, root: String, updates: DataFrame,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
-    val dupKeys = updates.groupBy(keyCols.map(updates(_)): _*)
-      .count().filter(col("count") > 1).count()
+    val (dupKeys, bounds) = keyStats(updates, keyCols)
     require(dupKeys == 0, s"updates contain $dupKeys duplicate key(s)")
     val (base, man) = loadHead(spark, root).getOrElse(
       throw new IllegalArgumentException(s"no table at $root"))
-    val current = read(spark, root, Some(base))
     // names AND types: with only a name check, a narrower updates
     // schema (table long / updates int) would be committed as the new
-    // table schema while the union wrote the WIDER physical type —
+    // table schema while the append wrote the WIDER physical type —
     // every read of the new head would then fail on type conversion
     val tableSchema = manifestSchema(man)
     requireSameSchema(tableSchema, updates.schema, "merge updates")
-    val files = upsertFiles(spark, root, current, updates, keyCols)
+    val files = upsertFiles(spark, root, man, updates, keyCols, bounds)
     commit(spark, root, requireBase = Some(base)) { _ => ("merge", tableSchema, files) }
   }
 
-  /** The keyed-upsert write shared by [[merge]] and [[mergeBatch]]:
-    * current rows whose key is NOT updated survive via anti-join, the
-    * union is rewritten as the new file set. The callers differ only
-    * in commit policy (plain pin vs batch-id replay handling). */
-  private def upsertFiles(spark: SparkSession, root: String, current: DataFrame,
-      updates: DataFrame, keyCols: Seq[String]): Seq[(String, java.util.Map[String, Object])] = {
-    val kept = current.join(
-      updates.select(keyCols.map(updates(_)): _*), keyCols, "left_anti")
-    writeData(spark, root, kept.unionByName(updates))
+  /** One pass over `updates`: its duplicate-key count, and the stats
+    * predicate bounding its keys (per key column, its [min, max]).
+    * None when some key column is null in every row: a null key
+    * matches no row, so no file is a candidate. */
+  private def keyStats(updates: DataFrame, keyCols: Seq[String])
+      : (Long, Option[Expression]) = {
+    val aggs = sum(when(col("count") > 1, 1L).otherwise(0L)) +:
+      keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
+    val r = updates.groupBy(keyCols.map(updates(_)): _*).count()
+      .agg(aggs.head, aggs.tail: _*).head()
+    val dupKeys = if (r.isNullAt(0)) 0L else r.getLong(0)
+    val bounds = keyCols.zipWithIndex.map { case (k, j) =>
+      val dt = updates.schema(k).dataType
+      val (lo, hi) = (r.get(1 + 2 * j), r.get(2 + 2 * j))
+      if (lo == null || hi == null) None
+      else Some(And(
+        GreaterThanOrEqual(UnresolvedAttribute.quoted(k), Literal.create(lo, dt)),
+        LessThanOrEqual(UnresolvedAttribute.quoted(k), Literal.create(hi, dt))))
+    }
+    (dupKeys, if (bounds.forall(_.isDefined)) Some(bounds.flatten.reduce(And)) else None)
+  }
+
+  /** The keyed-upsert write shared by [[merge]] and [[mergeBatch]],
+    * merge-on-read: among the files whose stats `bounds` cannot refute,
+    * the rows whose key `updates` carries get their positions added to
+    * the files' deletion vectors ([[deleteRows]]); `updates` itself is
+    * written as one new file. Returns the new snapshot's file list. The
+    * callers differ only in commit policy (plain pin vs batch-id replay
+    * handling). */
+  private def upsertFiles(spark: SparkSession, root: String,
+      man: java.util.Map[String, Object], updates: DataFrame, keyCols: Seq[String],
+      bounds: Option[Expression]): Seq[(String, java.util.Map[String, Object])] = {
+    val schema = manifestSchema(man)
+    implicit val zone: java.time.ZoneId = sessionZone(spark)
+    val (candidates, spared) = manifestFiles(man)
+      .partition(fm => bounds.exists(mayMatch(_, fm, schema)))
+    val keys = updates.select(keyCols.map(updates(_)): _*)
+    val probed = deleteRows(spark, schema, candidates, _.join(keys, keyCols, "left_semi"))
+    carried(spared) ++ probed ++ writeData(spark, root, updates.coalesce(1))
   }
 
   /** Field names AND dataTypes must match; NULLABILITY is intentionally
     * ignored. Rationale: every read path of this table goes through
-    * `spark.read.schema(...)` on parquet files, and Spark file-source
-    * reads force every field nullable regardless of the declared flag —
+    * [[readFiles]]' explicit read schema on parquet files, and Spark
+    * file-source reads force every field nullable regardless of the declared flag —
     * so a nullability mismatch here can never produce a row the reader
     * rejects, while enforcing it would spuriously refuse merges of
     * DataFrames that only differ in the (unenforced) flag. */
@@ -393,40 +555,32 @@ object VersionedTable {
     val v = asOf.getOrElse(versions(spark, root).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no table at $root")))
     val man = readManifest(spark, root, v)
-    val files = manifestFiles(man).map(_.get("path").asInstanceOf[String])
-    val schema = manifestSchema(man)
-    if (files.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files: _*)
+    readFiles(spark, manifestSchema(man), manifestFiles(man))
   }
 
   /** Rows ADDED between two versions (CDC-lite). Fast path: for an
-    * append-only range the added files are read directly — O(delta),
-    * the same manifest diff MaterializedView folds on, and the pattern
-    * a downstream incremental consumer polls (commit version = the
-    * resume cursor). Fallback when files were rewritten: multiset row
-    * diff of the two snapshots (`exceptAll`) — O(both snapshots),
-    * correct but expensive; a production format answers this from a
-    * row-level change log instead (Delta CDF). Deletions are not
-    * surfaced — consumers needing them diff the other direction. */
+    * append-only range ([[appendedSince]]) the added files are read
+    * directly — O(delta), the same manifest diff MaterializedView
+    * folds on, and the pattern a downstream incremental consumer polls
+    * (commit version = the resume cursor). When a commit in the range
+    * deleted rows (a merge or delete grew a deletion vector, a compact
+    * rewrote files): multiset row diff of the two snapshots
+    * (`exceptAll`) — O(both snapshots), correct but expensive; a
+    * production format answers this from a row-level change log
+    * instead (Delta CDF). Deletions are not surfaced — consumers
+    * needing them diff the other direction. */
   def changes(spark: SparkSession, root: String, fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV, s"changes range must be ascending: $fromV > $toV")
     val newMan = readManifest(spark, root, toV)
     val schema = manifestSchema(newMan)
-    val newFiles = manifestFiles(newMan).map(_.get("path").asInstanceOf[String])
+    val newFiles = manifestFiles(newMan)
     val oldFiles = manifestFiles(readManifest(spark, root, fromV))
-      .map(_.get("path").asInstanceOf[String])
-    if (oldFiles.toSet.subsetOf(newFiles.toSet)) {
-      val added = newFiles.filterNot(oldFiles.toSet)
-      if (added.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(added: _*)
-    } else {
+    appendedSince(oldFiles, newFiles) match {
+      case Some(added) => readFiles(spark, schema, added)
       // read BOTH sides under toV's schema so an evolved column
       // diffs as null rather than failing resolution
-      val newDf = spark.read.schema(schema).parquet(newFiles: _*)
-      val oldDf = spark.read.schema(schema).parquet(oldFiles: _*)
-      newDf.exceptAll(oldDf)
+      case None => readFiles(spark, schema, newFiles)
+        .exceptAll(readFiles(spark, schema, oldFiles))
     }
   }
 
@@ -436,7 +590,10 @@ object VersionedTable {
     * update_postimage, derived by a null-safe key diff of the two
     * snapshots. `keys` must be a unique row identity over both
     * versions (the same contract merge holds the table to). Fast
-    * path: an append-only range (old files ⊆ new) short-circuits to
+    * path: an append-only range ([[appendedSince]]: every old file
+    * entry, deletion vector included, is still in the new manifest;
+    * a merge or delete in the range grows a vector and so takes the
+    * general path) short-circuits to
     * the added files tagged insert — but only after a key-overlap
     * probe (ONE left-semi join of the added files' key columns
     * against the old snapshot, early-exited by take(1)) proves the
@@ -462,32 +619,23 @@ object VersionedTable {
     val schema = manifestSchema(newMan)
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"key column '$k' is not in the version-$toV schema"))
-    val newFiles = manifestFiles(newMan).map(_.get("path").asInstanceOf[String])
+    val newFiles = manifestFiles(newMan)
     val oldFiles = manifestFiles(readManifest(spark, root, fromV))
-      .map(_.get("path").asInstanceOf[String])
     val outCols = schema.fieldNames.toSeq
-    if (oldFiles.toSet.subsetOf(newFiles.toSet)) {
-      val added = newFiles.filterNot(oldFiles.toSet)
-      if (added.isEmpty)
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          .withColumn("_change_type", lit("insert"))
-      val addedDf = spark.read.schema(schema).parquet(added: _*)
-      val keyReuse = oldFiles.nonEmpty && {
-        val oldKeys = spark.read.schema(schema).parquet(oldFiles: _*)
-          .select(keys.map(col): _*)
+    val appendFeed = appendedSince(oldFiles, newFiles).flatMap { added =>
+      val addedDf = readFiles(spark, schema, added)
+      // an appended file that re-used a live key is a logical upsert:
+      // only the general full-outer diff classifies that correctly
+      val keyReuse = added.nonEmpty && oldFiles.nonEmpty && {
+        val oldKeys = readFiles(spark, schema, oldFiles).select(keys.map(col): _*)
         addedDf.select(keys.map(col): _*)
           .join(oldKeys, keys, "left_semi").take(1).nonEmpty
       }
-      if (!keyReuse)
-        return addedDf.withColumn("_change_type", lit("insert"))
-      // fall through: an appended file re-used a live key — only the
-      // general full-outer diff classifies that correctly
+      if (keyReuse) None else Some(addedDf.withColumn("_change_type", lit("insert")))
     }
-    val oldDf = spark.read.schema(schema).parquet(oldFiles: _*)
-      .withColumn("__in_old", lit(true))
-    val newDf = spark.read.schema(schema).parquet(newFiles: _*)
-      .withColumn("__in_new", lit(true))
+    if (appendFeed.isDefined) return appendFeed.get
+    val oldDf = readFiles(spark, schema, oldFiles).withColumn("__in_old", lit(true))
+    val newDf = readFiles(spark, schema, newFiles).withColumn("__in_new", lit(true))
     val o = oldDf.toDF(outCols.map(c => s"o_$c") :+ "__in_old": _*)
     val n = newDf.toDF(outCols.map(c => s"n_$c") :+ "__in_new": _*)
     val joinCond = keys.map(k => col(s"o_$k") <=> col(s"n_$k")).reduce(_ && _)
@@ -591,12 +739,7 @@ object VersionedTable {
     implicit val zone: java.time.ZoneId = sessionZone(spark)
     val all = manifestFiles(man)
     val kept = all.filter(fm => mayMatch(expr, fm, schema))
-    val paths = kept.map(_.get("path").asInstanceOf[String])
-    val base =
-      if (paths.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(paths: _*)
-    (base.where(predicate), kept.size, all.size)
+    (readFiles(spark, schema, kept).where(predicate), kept.size, all.size)
   }
 
   // ---- file-level predicate evaluation over stats ----
@@ -849,25 +992,28 @@ object VersionedTable {
 
   // ---- maintenance / introspection ----
 
-  /** Version history as a DataFrame (version, op, files, rows). */
+  /** Version history as a DataFrame (version, op, files, rows): rows
+    * are the live rows, each file's count less its deletion vector. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     versions(spark, root).map { v =>
       val man = readManifest(spark, root, v)
       val files = manifestFiles(man)
       (v, man.get("op").asInstanceOf[String], files.size.toLong,
-        files.flatMap(fm => numOf(fm.get("rows"))).sum)
+        files.flatMap(liveRows).sum)
     }.toDF("version", "op", "n_files", "n_rows")
   }
 
-  /** Delete rows matching `predicate` as a new committed snapshot —
-    * and here file-level stats pay off on the WRITE side: files whose
-    * stats refute the predicate provably contain no matching row and
-    * are carried into the new version untouched (no read, no rewrite);
-    * only the possibly-matching files are rewritten with the negated
-    * predicate (the Delta DELETE shape). At 100 TB a delete touching
-    * one day of data rewrites that day's files, not the table.
-    * Returns (newVersion, filesRewritten, filesKept). */
+  /** Delete rows matching `predicate` as a new committed snapshot,
+    * merge-on-read: no data file is written. File-level stats pay off
+    * on the WRITE side: files whose stats refute the predicate provably
+    * contain no matching row and are carried into the new version
+    * untouched (not even read); only the possibly-matching files are
+    * probed ([[deleteRows]]), and the positions of their matching rows
+    * join the files' deletion vectors. At 100 TB a delete touching one
+    * day of data reads that day's files and writes a manifest.
+    * Returns (newVersion, filesTouched, filesKept): the stats
+    * candidates that were probed, and the files the stats refuted. */
   def deleteWhere(spark: SparkSession, root: String, predicate: String)
       : (Long, Int, Int) = {
     val base = versions(spark, root).lastOption.getOrElse(
@@ -878,19 +1024,12 @@ object VersionedTable {
     implicit val zone: java.time.ZoneId = sessionZone(spark)
     val (touched, untouched) = manifestFiles(man)
       .partition(fm => mayMatch(expr, fm, schema))
-    val rewritten =
-      if (touched.isEmpty) Seq.empty
-      else {
-        val survivors = spark.read.schema(schema)
-          .parquet(touched.map(_.get("path").asInstanceOf[String]): _*)
-          // NOT with null-extension: rows where the predicate is NULL
-          // are NOT deleted (SQL DELETE semantics)
-          .where(s"NOT coalesce(($predicate), false)")
-        writeData(spark, root, survivors)
-      }
+    // rows where the predicate is NULL are NOT deleted (SQL DELETE
+    // semantics)
+    val probed = deleteRows(spark, schema, touched,
+      _.where(s"coalesce(($predicate), false)"))
     val v = commit(spark, root, requireBase = Some(base)) { _ =>
-      ("delete", schema, untouched.map(fm =>
-        (fm.get("path").asInstanceOf[String], fm)) ++ rewritten)
+      ("delete", schema, carried(untouched) ++ probed)
     }
     (v, touched.size, untouched.size)
   }
@@ -914,11 +1053,10 @@ object VersionedTable {
     val man = readManifest(spark, root, version)
     val files = manifestFiles(man)
     val v = commit(spark, root, requireBase = Some(base)) { _ =>
-      ("restore", manifestSchema(man), files.map(fm =>
-        (fm.get("path").asInstanceOf[String], fm)))
+      ("restore", manifestSchema(man), carried(files))
     }
     val f = fs(spark, root)
-    val missing = files.map(_.get("path").asInstanceOf[String])
+    val missing = files.map(pathOf)
       .filterNot(p => f.exists(new Path(p)))
     if (missing.nonEmpty) {
       f.delete(manifestPath(root, v), false)
@@ -948,7 +1086,7 @@ object VersionedTable {
     if (vs.isEmpty) return 0L
     val keep = vs.takeRight(retainVersions)
     val referenced = keep.flatMap(v =>
-      manifestFiles(readManifest(spark, root, v)).map(_.get("path").asInstanceOf[String])).toSet
+      manifestFiles(readManifest(spark, root, v)).map(pathOf)).toSet
     vs.dropRight(retainVersions).foreach(v => f.delete(manifestPath(root, v), false))
     val dataDir = new Path(root, DataDir)
     if (!f.exists(dataDir)) return 0L
@@ -969,7 +1107,7 @@ object VersionedTable {
     if (deleted.nonEmpty) {
       val after = versions(spark, root).filter(_ > keep.last)
       val broken = after.filter(v => manifestFiles(readManifest(spark, root, v))
-        .exists(fm => deleted.contains(fm.get("path").asInstanceOf[String])))
+        .exists(fm => deleted.contains(pathOf(fm))))
       if (broken.nonEmpty)
         throw new IllegalStateException(
           s"vacuum raced a concurrent restore: version(s) ${broken.mkString(",")} " +
@@ -1078,8 +1216,7 @@ object VersionedTable {
           requireSameSchema(tableSchema, batch.schema, s"streaming batch $batchId")
           tableSchema
         }.getOrElse(batch.schema)
-        val allFiles = headOpt.map(h => manifestFiles(h._2).map(fm =>
-          (fm.get("path").asInstanceOf[String], fm))).getOrElse(Seq.empty) ++ files
+        val allFiles = headOpt.map(h => carried(manifestFiles(h._2))).getOrElse(Seq.empty) ++ files
         (op, schema, allFiles)
       }
       true
@@ -1126,27 +1263,26 @@ object VersionedTable {
         .exists(_ >= batchId)
     // key-uniqueness holds from the FIRST batch — the table-creating
     // path must not smuggle duplicates past the guard
-    def requireUniqueKeys(): Unit = {
-      val dupKeys = batch.groupBy(keyCols.map(batch(_)): _*)
-        .count().filter(col("count") > 1).count()
+    def uniqueKeyBounds(): Option[Expression] = {
+      val (dupKeys, bounds) = keyStats(batch, keyCols)
       require(dupKeys == 0, s"streaming merge batch $batchId has $dupKeys " +
         "duplicate key(s); collapse to last-write-per-key before the sink")
+      bounds
     }
     loadHead(spark, root) match {
       case None =>
-        requireUniqueKeys()
+        uniqueKeyBounds()
         appendBatch(spark, root, batch, batchId)
       case Some((base, man)) =>
         if (replayed(man)) return false
-        requireUniqueKeys()
-        val current = read(spark, root, Some(base))
+        val bounds = uniqueKeyBounds()
         // names AND types (same discipline as appendBatch): a
         // same-name/other-type batch would write files whose physical
         // types contradict the committed manifest schema, failing
         // every subsequent read of the head version
         requireSameSchema(manifestSchema(man), batch.schema,
           s"streaming merge batch $batchId")
-        val files = upsertFiles(spark, root, current, batch, keyCols)
+        val files = upsertFiles(spark, root, man, batch, keyCols, bounds)
         try {
           commit(spark, root, Map[String, Object](BatchIdKey -> Long.box(batchId)),
             requireBase = Some(base)) { headOpt =>
@@ -1174,14 +1310,17 @@ object VersionedTable {
       }
       .start()
 
-  /** Rewrite the current snapshot into ~ceil(bytes/targetBytes) files
-    * as a new committed version (transactional Maintenance.compact).
-    * Old versions remain time-travelable until vacuum. */
+  /** Rewrite the current snapshot's live rows into
+    * ~ceil(bytes/targetBytes) files as a new committed version
+    * (transactional Maintenance.compact). This is where deletion
+    * vectors fold away: the rewritten files carry none, and the
+    * vectored files they replace become unreferenced, for [[vacuum]]
+    * to reap. Old versions remain time-travelable until vacuum. */
   def compact(spark: SparkSession, root: String, targetBytes: Long): Long = {
     val f = fs(spark, root)
     val (base, head) = loadHead(spark, root).getOrElse(
       throw new IllegalArgumentException(s"no table at $root"))
-    val paths = manifestFiles(head).map(_.get("path").asInstanceOf[String])
+    val paths = manifestFiles(head).map(pathOf)
     val totalBytes = paths.map(p => f.getFileStatus(new Path(p)).getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val df = read(spark, root, Some(base))

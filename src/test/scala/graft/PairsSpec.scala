@@ -120,4 +120,50 @@ class PairsSpec extends AnyFunSuite {
     // (10,20): groups 1 and 2 (twice — two 20s in group 2) = 3
     assert(two == Set((10L, 20L, 3L), (10L, 30L, 2L), (20L, 30L, 2L)))
   }
+
+  // ---- the span builds' capped occurrence collect ----
+
+  test("CappedOcc: no buffer ever holds more than 21 occurrences, on generated hot groups") {
+    import graft.ops.Pipelines.{CappedOcc, Occ}
+    val rnd = new scala.util.Random(11)
+    val sizes = Seq(0, 1, 2, 19, 20, 21, 22, 500, 5000) ++ Seq.fill(40)(rnd.nextInt(80))
+    sizes.foreach { n =>
+      val occ = (0 until n).map(i => (i.toLong, rnd.nextInt(100).toLong))
+      // random partial groups, each folded by reduce, merged in random order
+      val parts = occ.groupBy(_ => rnd.nextInt(1 + rnd.nextInt(6))).values.toSeq
+      val partials = parts.map(_.foldLeft(CappedOcc.zero) { (b, o) =>
+        val next = CappedOcc.reduce(b, o)
+        assert(next.length <= 42, s"df=$n: reduce grew a buffer to ${next.length / 2}")
+        next
+      })
+      val merged = rnd.shuffle(partials).foldLeft(CappedOcc.zero) { (a, b) =>
+        val next = CappedOcc.merge(a, b)
+        assert(next.length <= 42, s"df=$n: merge grew a buffer to ${next.length / 2}")
+        next
+      }
+      val got = CappedOcc.finish(merged)
+      if (n <= 20) assert(got.sortBy(o => (o.d, o.p)) == occ.map(o => Occ(o._1, o._2)).sortBy(o => (o.d, o.p)))
+      else assert(got.isEmpty, s"df=$n is over the cap")
+    }
+  }
+
+  test("spanGramPairs: a hash of df >> 20 pairs nothing; df in [2, 20] pairs like the self-join") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    // hot hash "hot" in 400 docs, one of df 21, and cold hashes of df 1..20
+    val rows = (1 to 400).map(d => (d.toLong, 1L, "hot")) ++
+      (1 to 21).map(d => (d.toLong, 2L, "df21")) ++
+      (1 to 30).flatMap { h =>
+        rnd.shuffle((1 to 400).toList).take(1 + rnd.nextInt(20))
+          .map(d => (d.toLong, 3L + rnd.nextInt(50), s"c$h"))
+      }
+    val sh = rows.toDF("doc_id", "pos", "h")
+    val got = ops.Pipelines.spanGramPairs(sh)
+      .select(col("d1"), col("d2"), col("p1"), col("df")).as[(Long, Long, Long, Long)]
+      .collect().toSeq.sorted
+    val expected = rows.groupBy(_._3).values.filter(g => g.size >= 2 && g.size <= 20)
+      .flatMap(g => for (x <- g; y <- g if y._1 > x._1) yield (x._1, y._1, x._2, x._2 - y._2))
+      .toSeq.sorted
+    assert(got.nonEmpty && got == expected)
+  }
 }

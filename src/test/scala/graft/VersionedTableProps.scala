@@ -4,8 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
-import graft.sources.VersionedTable
+import graft.sources.{MaterializedView, VersionedTable}
+import graft.sources.MaterializedView.AggSpec
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The pruning soundness law: for EVERY predicate, `scan` (file-level
   * stats refutation + row filter) returns exactly `read` + the same
@@ -215,5 +217,210 @@ class VersionedTableProps extends AnyFunSuite {
     // history keeps all three ops
     assert(VersionedTable.history(spark, r).orderBy("version")
       .collect().map(_.getString(1)).toSeq == Seq("create", "overwrite", "restore"))
+  }
+
+  // ---- merge-on-read: random mixed writes against a rewrite-everything model ----
+
+  /** One committed version of the model: id -> v, ids unique. */
+  private type Snap = Map[Long, String]
+
+  /** A delete predicate as SQL and as the model's row test. */
+  private case class Pred(sql: String, hit: (Long, String) => Boolean)
+
+  private def randomPred(rnd: scala.util.Random, live: Snap): Pred =
+    rnd.nextInt(4) match {
+      case 0 =>
+        val (m, r) = (2 + rnd.nextInt(4), rnd.nextInt(2))
+        Pred(s"id % $m = $r", (id, _) => id % m == r)
+      case 1 =>
+        val x = rnd.nextInt(60).toLong
+        Pred(s"id < $x", (id, _) => id < x)
+      case 2 =>
+        val t = s"v${rnd.nextInt(3)}"
+        Pred(s"v LIKE '$t%'", (_, v) => v.startsWith(t))
+      case _ =>
+        val ids = rnd.shuffle(live.keys.toSeq).take(1 + rnd.nextInt(3))
+        if (ids.isEmpty) Pred("false", (_, _) => false)
+        else Pred(s"id IN (${ids.mkString(", ")})", (id, _) => ids.contains(id))
+    }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Snap = {
+    val rows = df.collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(rows.map(_._1).distinct.length == rows.length, "duplicate live ids")
+    rows.toMap
+  }
+
+  test("random merge/delete/append/compact/restore: every version reads as the model") {
+    import spark.implicits._
+    (1 to 30).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val r = Files.createTempDirectory(s"vtmodel$seed").toString + "/tbl"
+      var nextId = 0L
+      def fresh(n: Int): Seq[(Long, String)] = (0 until n).map { _ =>
+        nextId += 1; (nextId, s"v${rnd.nextInt(3)}i$nextId")
+      }
+      val init = fresh(10 + rnd.nextInt(30))
+      VersionedTable.create(spark, r, init.toDF("id", "v").repartitionByRange(3, col("id")))
+      val model = scala.collection.mutable.ArrayBuffer[Snap](Map.empty, init.toMap)
+      val ops = scala.collection.mutable.ArrayBuffer[String]("create")
+      (1 to 5).foreach { step =>
+        val cur = model.last
+        val op = rnd.nextInt(5)
+        val next: Snap = op match {
+          case 0 =>
+            val rows = fresh(1 + rnd.nextInt(5))
+            VersionedTable.append(spark, r, rows.toDF("id", "v"))
+            ops += "append"; cur ++ rows
+          case 1 =>
+            val upd = rnd.shuffle(cur.keys.toSeq).take(rnd.nextInt(4))
+              .map(id => (id, s"v${rnd.nextInt(3)}u$seed.$step")) ++ fresh(rnd.nextInt(3))
+            VersionedTable.merge(spark, r, upd.toDF("id", "v"), Seq("id"))
+            ops += s"merge ${upd.map(_._1).mkString(",")}"; cur ++ upd
+          case 2 =>
+            val p = randomPred(rnd, cur)
+            VersionedTable.deleteWhere(spark, r, p.sql)
+            ops += s"delete ${p.sql}"; cur.filterNot { case (id, v) => p.hit(id, v) }
+          case 3 =>
+            VersionedTable.compact(spark, r, if (rnd.nextBoolean()) 2000L else 1L << 30)
+            ops += "compact"; cur
+          case _ =>
+            val u = 1 + rnd.nextInt(model.size - 1)
+            VersionedTable.restore(spark, r, u.toLong)
+            ops += s"restore $u"; model(u)
+        }
+        model += next
+        val v = model.size - 1L
+        val trail = s"seed $seed: ${ops.mkString(" / ")}"
+        // time travel: every version still reads as the model, in one job
+        val all = (1L to v).map(u => VersionedTable.read(spark, r, Some(u))
+          .withColumn("u", lit(u))).reduce(_.unionByName(_))
+          .collect().groupBy(_.getLong(2))
+        (1L to v).foreach { u =>
+          val got = all.getOrElse(u, Array.empty).map(x => x.getLong(0) -> x.getString(1))
+          assert(got.length == model(u.toInt).size && got.toMap == model(u.toInt),
+            s"read(asOf = $u) differs from the model; $trail")
+        }
+        val (before, after) = (model(v.toInt - 1), next)
+        assert(rowsOf(VersionedTable.changes(spark, r, v - 1, v)) ==
+          after.filterNot { case (id, x) => before.get(id).contains(x) },
+          s"changes(${v - 1}, $v); $trail")
+        val feed = VersionedTable.changeFeed(spark, r, v - 1, v, Seq("id")).collect()
+          .map(x => (x.getAs[String]("_change_type"), x.getAs[Long]("id"), x.getAs[String]("v")))
+        val expected = after.keySet.union(before.keySet).toSeq.flatMap { id =>
+          (before.get(id), after.get(id)) match {
+            case (None, Some(x)) => Seq(("insert", id, x))
+            case (Some(x), None) => Seq(("delete", id, x))
+            case (Some(x), Some(y)) if x != y =>
+              Seq(("update_preimage", id, x), ("update_postimage", id, y))
+            case _ => Seq.empty
+          }
+        }
+        assert(feed.length == expected.length && feed.toSet == expected.toSet,
+          s"changeFeed(${v - 1}, $v); $trail")
+      }
+      val counts = VersionedTable.history(spark, r).orderBy("version").collect()
+        .map(_.getLong(3)).toSeq
+      assert(counts == model.tail.map(_.size.toLong), s"history n_rows; seed $seed")
+    }
+  }
+
+  /** Version v's manifest file entries, as the log stores them. */
+  private def entries(r: String, v: Long): Seq[com.fasterxml.jackson.databind.JsonNode] =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(new java.net.URI(r).getPath.stripSuffix("/") +
+        f"/_graft_log/v$v%08d.json"))
+      .get("files").elements().asScala.toSeq
+
+  private def manifestPaths(r: String, v: Long): Seq[String] =
+    entries(r, v).map(_.get("path").asText())
+
+  private def vectored(r: String, v: Long): Int = entries(r, v).count(_.has("deleted"))
+
+  test("a merge keeps the create-time files and adds exactly one") {
+    import spark.implicits._
+    val r = Files.createTempDirectory("vtmor").toString + "/tbl"
+    VersionedTable.create(spark, r,
+      (1L to 40L).map(i => (i, s"x$i")).toDF("id", "v").repartitionByRange(4, col("id")))
+    val created = manifestPaths(r, 1L)
+    val v = VersionedTable.merge(spark, r, Seq((3L, "new"), (99L, "ins")).toDF("id", "v"), Seq("id"))
+    val after = manifestPaths(r, v)
+    assert(created.forall(after.contains) && after.size == created.size + 1)
+    assert(vectored(r, v) == 1, "only the file holding id 3 gets a vector")
+    val got = VersionedTable.read(spark, r).collect().map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(got == (1L to 40L).map(i => i -> s"x$i").toMap ++ Map(3L -> "new", 99L -> "ins"))
+  }
+
+  test("refresh after a merge or a delete does not take the append-only path") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("vtmormv").toString
+    val (base, view) = (tmp + "/base", tmp + "/view")
+    VersionedTable.create(spark, base,
+      Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L)).toDF("id", "k", "x"))
+    MaterializedView.create(spark, view, base, Seq("k"),
+      Seq(AggSpec("count", "*", "n"), AggSpec("sum", "x", "sx")))
+    def state() = MaterializedView.read(spark, view).collect()
+      .map(x => x.getString(0) -> (x.getAs[Long]("n"), x.getAs[Long]("sx"))).toMap
+    VersionedTable.merge(spark, base, Seq((1L, "b", 11L)).toDF("id", "k", "x"), Seq("id"))
+    assert(MaterializedView.refresh(spark, view)._3 == "full")
+    assert(state() == Map("a" -> (1L, 20L), "b" -> (2L, 41L)))
+    VersionedTable.deleteWhere(spark, base, "id = 2")
+    assert(MaterializedView.refresh(spark, view)._3 == "full")
+    assert(state() == Map("b" -> (2L, 41L)))
+  }
+
+  test("deleting every row of a file drops the file from the manifest") {
+    import spark.implicits._
+    val r = Files.createTempDirectory("vtmordrop").toString + "/tbl"
+    VersionedTable.create(spark, r,
+      (1L to 30L).map(i => (i, s"x$i")).toDF("id", "v").repartitionByRange(3, col("id")))
+    val (v, touched, _) = VersionedTable.deleteWhere(spark, r, "id <= 10")
+    assert(touched == 1)
+    assert(manifestPaths(r, v).size == 2 && vectored(r, v) == 0)
+    assert(VersionedTable.read(spark, r).count() == 20)
+    // a partial delete keeps the file, vectored
+    val (v2, _, _) = VersionedTable.deleteWhere(spark, r, "id = 15")
+    assert(manifestPaths(r, v2).size == 2 && vectored(r, v2) == 1)
+    assert(VersionedTable.history(spark, r).orderBy("version").collect()
+      .map(_.getLong(3)).toSeq == Seq(30L, 20L, 19L))
+  }
+
+  test("vacuum after compact reaps the vectored files") {
+    import spark.implicits._
+    val r = Files.createTempDirectory("vtmorvac").toString + "/tbl"
+    VersionedTable.create(spark, r,
+      (1L to 30L).map(i => (i, s"x$i")).toDF("id", "v").repartitionByRange(3, col("id")))
+    val (v1, _, _) = VersionedTable.deleteWhere(spark, r, "id % 7 = 0")
+    val old = manifestPaths(r, v1)
+    val v2 = VersionedTable.compact(spark, r, 1L << 30)
+    assert(vectored(r, v2) == 0)
+    VersionedTable.vacuum(spark, r, retainVersions = 1, minAgeMs = 0L)
+    assert(old.forall(p => !new java.io.File(p).exists()))
+    assert(VersionedTable.read(spark, r).collect().map(_.getLong(0)).sorted.toSeq ==
+      (1L to 30L).filterNot(_ % 7 == 0))
+  }
+
+  test("a deletion vector round-trips through a file:// root") {
+    import spark.implicits._
+    val r = "file://" + Files.createTempDirectory("vtmoruri").toString + "/tbl"
+    VersionedTable.create(spark, r, (1L to 20L).map(i => (i, s"x$i")).toDF("id", "v"))
+    VersionedTable.merge(spark, r, Seq((4L, "four")).toDF("id", "v"), Seq("id"))
+    VersionedTable.deleteWhere(spark, r, "id > 17")
+    val got = VersionedTable.read(spark, r).collect().map(x => x.getLong(0) -> x.getString(1)).toMap
+    assert(got == (1L to 17L).map(i => i -> s"x$i").toMap + (4L -> "four"))
+    assert(VersionedTable.read(spark, r, Some(2L)).count() == 20)
+  }
+
+  test("a read's generated code does not depend on the deleted positions") {
+    import spark.implicits._
+    val r = Files.createTempDirectory("vtmorcg").toString + "/tbl"
+    VersionedTable.create(spark, r, (1L to 20L).map(i => (i, s"x$i")).toDF("id", "v"))
+    def code(): Seq[String] = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(VersionedTable.read(spark, r).where("id > 0")
+        .queryExecution.executedPlan).map(_._2)
+    VersionedTable.deleteWhere(spark, r, "id = 3")
+    val first = code()
+    VersionedTable.deleteWhere(spark, r, "id IN (5, 11)")
+    assert(first.nonEmpty && code() == first)
+    assert(VersionedTable.read(spark, r).count() == 17)
   }
 }
