@@ -362,14 +362,6 @@ class Naqed(spark: SparkSession, sfDir: String) {
     request(name, toScala(root.get(name)).asInstanceOf[Map[String, Any]])
   }
 
-  /** Mutation surface (naqed's `~`-prefixed keys): batch write-back.
-    * `q` maps "~<table>" to the rows to append (each a field->value
-    * map, schema-checked against the table). Writes parquet under
-    * `outDir` — OLTP-style in-place mutation is out of scope
-    * (BASELINE.json: analytical engine), so mutations are append-only
-    * batch writes, the Spark-native re-expression of naqed's mutating
-    * resolvers. Returns the written row count per table.
-    */
   /** naqed-style subscription: the SAME query tree as `request`,
     * compiled against an unbounded source bound to `root`. Filters
     * (`$`-args), field selections, resolvers and traversals all lower
@@ -482,18 +474,6 @@ class Naqed(spark: SparkSession, sfDir: String) {
         s"$arg must be \"<timeCol>:<duration>\" (e.g. \"ts:10 minutes\"), got: '$v'")
     }
 
-  def mutate(q: Map[String, Seq[Map[String, Any]]], outDir: String): Map[String, Long] =
-    q.map {
-      case (key, rows) if key.startsWith("~") =>
-        val tname = key.drop(1)
-        val df = rowsToDf(tname, table(tname).schema, rows)
-        df.write.mode("append").parquet(s"$outDir/$tname.parquet")
-        key -> rows.length.toLong
-      case (key, _) =>
-        throw new IllegalArgumentException(
-          s"mutation keys must be '~'-prefixed table names, got '$key'")
-    }
-
   /** Validate + coerce naqed mutation rows into a typed DataFrame.
     * Schema check up-front, per row: unknown fields are errors, absent
     * fields are only legal when nullable, and every present value must
@@ -523,8 +503,9 @@ class Naqed(spark: SparkSession, sfDir: String) {
     * are arbitrary resolvers, not just inserts). Each "~<table>" key
     * maps to ONE of:
     *
-    *   - `Seq(row, ...)` — INSERT (as [[mutate]], but transactional:
-    *     `VersionedTable.append`);
+    *   - `Seq(row, ...)` — INSERT: each row a field -> value map,
+    *     schema-checked against the table, committed by
+    *     `VersionedTable.append`;
     *   - `Map("$set" -> Map(field -> value), <arg filters>)` — UPDATE:
     *     the same `$`-argument convention as queries selects the rows
     *     (`$min_x`, `$max_x`, `$like_x`, `$x`), `$set` assigns typed
@@ -654,9 +635,8 @@ class Naqed(spark: SparkSession, sfDir: String) {
           case m: Map[_, _] if m.asInstanceOf[Map[String, Any]].get("$delete").contains(true) =>
             val mm = m.asInstanceOf[Map[String, Any]]
             val pred = sqlPred(argFilters(mm), mm.get("$where").map(_.toString))
-            val before = current.count()
-            VersionedTable.deleteWhere(spark, root, pred)
-            before - VersionedTable.read(spark, root).count()
+            val (_, _, _, deleted) = VersionedTable.deleteWhere(spark, root, pred)
+            deleted
 
           case m: Map[_, _] =>
             throw new IllegalArgumentException(

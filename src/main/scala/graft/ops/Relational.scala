@@ -780,7 +780,7 @@ object Relational {
     * partition-column predicate — the declared-query proof that the
     * write-side layout lever actually prunes (the filter resolves to
     * PartitionFilters: only the purchase/ directory is listed or
-    * scanned; SinksSpec asserts the same mechanism plan-level). Same
+    * scanned; SourcesSpec asserts the same mechanism plan-level). Same
     * oracle-is-the-original-table contract as the csv/json/orc
     * roundtrips. */
   val srcPartitionedRoundtrip: Q = (s, d) => {

@@ -72,13 +72,7 @@ object Sources {
         val wh = java.net.URI.create(
           spark.conf.get("spark.sql.warehouse.dir")).getPath
         val loc = java.nio.file.Paths.get(wh, tbl)
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          scala.util.Using.resource(java.nio.file.Files.walk(loc)) { st =>
-            st.iterator().asScala.toSeq
-          }.sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        if (java.nio.file.Files.exists(loc)) deleteTree(loc)
         graft.Tables(spark, sfDir, name).write
           .bucketBy(nBuckets, keyCol).sortBy(keyCol)
           .mode("overwrite").saveAsTable(tbl)
@@ -86,19 +80,25 @@ object Sources {
       spark.table(tbl)
     }
 
+  /** Delete `root` and everything under it, deepest paths first. */
+  private def deleteTree(root: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
+      st.iterator().asScala.toSeq
+    }.sortBy(-_.getNameCount)
+      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+  }
+
   // conversion dirs hold full table copies — reap them at JVM exit so
   // repeated bench/test runs don't accumulate unbounded /tmp data
   private val convDirs = java.util.Collections.synchronizedList(
     new java.util.ArrayList[java.nio.file.Path]())
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     convDirs.forEach { root =>
-      try {
-        import scala.jdk.CollectionConverters._
-        scala.util.Using.resource(java.nio.file.Files.walk(root)) { st =>
-          st.iterator().asScala.toSeq
-        }.sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Exception => () }
+      try deleteTree(root)
+      catch { case e: Exception =>
+        System.err.println(s"[sources] could not remove $root: ${graft.Harness.why(e)}")
+      }
     }))
 
   /** A base table served THROUGH a non-parquet format: written once per

@@ -110,7 +110,7 @@ object StateTables {
   def deleteWhere(spark: SparkSession, root: String,
       predicates: Seq[String]): (Int, Int) = {
     val counts = predicates.map { p =>
-      val (_, touched, kept) = VersionedTable.deleteWhere(spark, root, p)
+      val (_, touched, kept, _) = VersionedTable.deleteWhere(spark, root, p)
       (touched, kept)
     }
     (counts.map(_._1).sum, if (counts.isEmpty) 0 else counts.map(_._2).min)

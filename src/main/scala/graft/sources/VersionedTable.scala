@@ -11,15 +11,15 @@ import org.apache.spark.sql.types._
 import org.roaringbitmap.RoaringBitmap
 import scala.jdk.CollectionConverters._
 
-/** A minimal snapshot table format over raw parquet — the layer
-  * `Maintenance`'s scaladoc calls "the migration seam" (what
-  * Delta/Iceberg add over a bare directory), built from public
-  * first principles:
+/** A minimal snapshot table format over raw parquet — what
+  * Delta/Iceberg add over a bare directory, built from public first
+  * principles. It is the one table-write path: append, merge, delete,
+  * compaction and streaming sinks all commit through it.
   *
   *  - **Snapshot isolation.** Every commit writes immutable data files
   *    plus a full-snapshot manifest `_graft_log/v%08d.json`; readers
   *    resolve ONE manifest and never observe a half-written table (the
-  *    failure mode of Maintenance's directory swap).
+  *    failure mode of an in-place directory swap).
   *  - **Optimistic concurrency.** The commit point is an atomic
   *    `rename` onto the next version file; losers re-read the head and
   *    retry, so concurrent appends serialize without locks.
@@ -353,11 +353,12 @@ object VersionedTable {
     * per file on the executors. The driver so receives at most one
     * compressed bitmap per touched file, never one row per deleted
     * position. Returns `files`' entries with their vectors grown by
-    * those positions; a file whose every row is gone is dropped. */
+    * those positions (a file whose every row is gone is dropped), and
+    * how many rows the new positions remove. */
   private def deleteRows(spark: SparkSession, schema: StructType,
       files: Seq[java.util.Map[String, Object]], hits: DataFrame => DataFrame)
-      : Seq[(String, java.util.Map[String, Object])] = {
-    if (files.isEmpty) return Seq.empty
+      : (Seq[(String, java.util.Map[String, Object])], Long) = {
+    if (files.isEmpty) return (Seq.empty, 0L)
     val (fileCol, rowCol) = ("__graft_file", "__graft_row")
     val rows = readFiles(spark, schema, files)
       .withColumn(fileCol, col("_metadata.file_path"))
@@ -366,7 +367,10 @@ object VersionedTable {
       .agg(udaf(Positions, Encoders.scalaLong)(col(rowCol)))
       .collect().map(r => normalizeFile(r.getString(0)) -> bitmapOf(r.getAs[Array[Byte]](1)))
       .toMap
-    carried(files.flatMap { fm =>
+    // readFiles already dropped the vectored rows, so every found
+    // position is new; count before the old vectors are or-ed in
+    val removed = found.valuesIterator.map(_.getLongCardinality).sum
+    val entries = carried(files.flatMap { fm =>
       found.get(pathOf(fm)) match {
         case None => Some(fm)
         case Some(bm) =>
@@ -379,6 +383,7 @@ object VersionedTable {
           }
       }
     })
+    (entries, removed)
   }
 
   /** Commit loop: recompute the snapshot against the current head until
@@ -470,11 +475,11 @@ object VersionedTable {
   }
 
   /** Transactional MERGE (upsert): same-key rows replaced, new keys
-    * inserted — Maintenance.merge's semantics, but readers see either
-    * the old or the new snapshot, never the swap window. Merge-on-read
-    * ([[upsertFiles]]): the replaced rows are marked in their files'
-    * deletion vectors and `updates` is appended as one new file; no
-    * existing data file is rewritten. */
+    * inserted; readers see either the old or the new snapshot, never
+    * a half-written table. Merge-on-read ([[upsertFiles]]): the
+    * replaced rows are marked in their files' deletion vectors and
+    * `updates` is appended as one new file; no existing data file is
+    * rewritten. */
   def merge(spark: SparkSession, root: String, updates: DataFrame,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
@@ -529,7 +534,7 @@ object VersionedTable {
     val (candidates, spared) = manifestFiles(man)
       .partition(fm => bounds.exists(mayMatch(_, fm, schema)))
     val keys = updates.select(keyCols.map(updates(_)): _*)
-    val probed = deleteRows(spark, schema, candidates, _.join(keys, keyCols, "left_semi"))
+    val (probed, _) = deleteRows(spark, schema, candidates, _.join(keys, keyCols, "left_semi"))
     carried(spared) ++ probed ++ writeData(spark, root, updates.coalesce(1))
   }
 
@@ -1012,10 +1017,11 @@ object VersionedTable {
     * probed ([[deleteRows]]), and the positions of their matching rows
     * join the files' deletion vectors. At 100 TB a delete touching one
     * day of data reads that day's files and writes a manifest.
-    * Returns (newVersion, filesTouched, filesKept): the stats
-    * candidates that were probed, and the files the stats refuted. */
+    * Returns (newVersion, filesTouched, filesKept, rowsDeleted): the
+    * stats candidates that were probed, the files the stats refuted,
+    * and how many rows the commit removed. */
   def deleteWhere(spark: SparkSession, root: String, predicate: String)
-      : (Long, Int, Int) = {
+      : (Long, Int, Int, Long) = {
     val base = versions(spark, root).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no table at $root"))
     val man = readManifest(spark, root, base)
@@ -1026,12 +1032,12 @@ object VersionedTable {
       .partition(fm => mayMatch(expr, fm, schema))
     // rows where the predicate is NULL are NOT deleted (SQL DELETE
     // semantics)
-    val probed = deleteRows(spark, schema, touched,
+    val (probed, removed) = deleteRows(spark, schema, touched,
       _.where(s"coalesce(($predicate), false)"))
     val v = commit(spark, root, requireBase = Some(base)) { _ =>
       ("delete", schema, carried(untouched) ++ probed)
     }
-    (v, touched.size, untouched.size)
+    (v, touched.size, untouched.size, removed)
   }
 
   /** Roll the table back to `version`'s snapshot AS A NEW COMMIT (the
@@ -1189,17 +1195,20 @@ object VersionedTable {
 
   // ---- streaming sink ----
 
+  /** Whether `man` already records streaming batch `batchId`: its
+    * high-water mark is at or beyond it. */
+  private def replayed(man: java.util.Map[String, Object], batchId: Long): Boolean =
+    Option(man.get(BatchIdKey))
+      .collect { case n: java.lang.Number => n.longValue() }
+      .exists(_ >= batchId)
+
   /** Commit one micro-batch as a table version iff `batchId` is beyond
     * the table's recorded streaming high-water mark. Returns true when
     * committed, false when skipped as a replay — the foreachBatch body
     * of `appendStream`, exposed for direct testing. */
   def appendBatch(spark: SparkSession, root: String, batch: DataFrame,
       batchId: Long): Boolean = {
-    def replayed(man: java.util.Map[String, Object]): Boolean =
-      Option(man.get(BatchIdKey))
-        .collect { case n: java.lang.Number => n.longValue() }
-        .exists(_ >= batchId)
-    if (loadHead(spark, root).exists(h => replayed(h._2))) return false
+    if (loadHead(spark, root).exists(h => replayed(h._2, batchId))) return false
     val files = writeData(spark, root, batch)
     val extra = Map[String, Object](BatchIdKey -> Long.box(batchId))
     try {
@@ -1207,7 +1216,7 @@ object VersionedTable {
       // so a same-id race cannot double-commit; the loser's staged
       // files are unreferenced and reaped by the next vacuum
       commit(spark, root, extra) { headOpt =>
-        if (headOpt.exists(h => replayed(h._2))) throw ReplaySkip
+        if (headOpt.exists(h => replayed(h._2, batchId))) throw ReplaySkip
         val op = if (headOpt.isEmpty) "create" else "append"
         // same schema discipline as append(): never let a malformed
         // batch silently replace the table schema for historical files
@@ -1230,18 +1239,26 @@ object VersionedTable {
     * restart behind the checkpoint) is skipped, so writes are
     * idempotent — the parquet file sink's `_spark_metadata` story,
     * provided by the table format instead (and thus compatible with
-    * compaction/vacuum, which that sink's log is not; see
-    * Maintenance.compact's scaladoc). Use ONE sink checkpoint per
+    * `compact`/`vacuum`: a file sink's log enumerates its files, so a
+    * rewrite of the directory breaks it). Use ONE sink checkpoint per
     * table: the high-water mark is per-table, not per-query. */
   def appendStream(stream: DataFrame, root: String, checkpointDir: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, checkpointDir, trigger)(appendBatch(_, root, _, _))
+
+  /** The streaming query behind [[appendStream]] and [[mergeStream]]:
+    * `commitBatch(spark, batch, batchId)` is the foreachBatch body. */
+  private def sink(stream: DataFrame, checkpointDir: String,
+      trigger: org.apache.spark.sql.streaming.Trigger)(
+      commitBatch: (SparkSession, DataFrame, Long) => Boolean)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(batch.sparkSession, root, batch, id); ()
+        commitBatch(batch.sparkSession, batch, id); ()
       }
       .start()
 
@@ -1257,10 +1274,6 @@ object VersionedTable {
   def mergeBatch(spark: SparkSession, root: String, batch: DataFrame,
       keyCols: Seq[String], batchId: Long): Boolean = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
-    def replayed(man: java.util.Map[String, Object]): Boolean =
-      Option(man.get(BatchIdKey))
-        .collect { case n: java.lang.Number => n.longValue() }
-        .exists(_ >= batchId)
     // key-uniqueness holds from the FIRST batch — the table-creating
     // path must not smuggle duplicates past the guard
     def uniqueKeyBounds(): Option[Expression] = {
@@ -1274,7 +1287,7 @@ object VersionedTable {
         uniqueKeyBounds()
         appendBatch(spark, root, batch, batchId)
       case Some((base, man)) =>
-        if (replayed(man)) return false
+        if (replayed(man, batchId)) return false
         val bounds = uniqueKeyBounds()
         // names AND types (same discipline as appendBatch): a
         // same-name/other-type batch would write files whose physical
@@ -1286,7 +1299,7 @@ object VersionedTable {
         try {
           commit(spark, root, Map[String, Object](BatchIdKey -> Long.box(batchId)),
             requireBase = Some(base)) { headOpt =>
-            if (headOpt.exists(h => replayed(h._2))) throw ReplaySkip
+            if (headOpt.exists(h => replayed(h._2, batchId))) throw ReplaySkip
             ("merge", manifestSchema(man), files)
           }
           true
@@ -1302,20 +1315,17 @@ object VersionedTable {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeBatch(batch.sparkSession, root, batch, keyCols, id); ()
-      }
-      .start()
+    sink(stream, checkpointDir, trigger)(mergeBatch(_, root, _, keyCols, _))
 
   /** Rewrite the current snapshot's live rows into
-    * ~ceil(bytes/targetBytes) files as a new committed version
-    * (transactional Maintenance.compact). This is where deletion
-    * vectors fold away: the rewritten files carry none, and the
-    * vectored files they replace become unreferenced, for [[vacuum]]
-    * to reap. Old versions remain time-travelable until vacuum. */
+    * ~ceil(bytes/targetBytes) files as a new committed version, and
+    * never into more files than the snapshot's read plans partitions:
+    * compaction only ever coalesces, so a tiny `targetBytes` cannot
+    * fan a table out into one file per few bytes. This is where
+    * deletion vectors fold away: the rewritten files carry none, and
+    * the vectored files they replace become unreferenced, for
+    * [[vacuum]] to reap. Old versions remain time-travelable until
+    * vacuum. */
   def compact(spark: SparkSession, root: String, targetBytes: Long): Long = {
     val f = fs(spark, root)
     val (base, head) = loadHead(spark, root).getOrElse(
@@ -1324,9 +1334,9 @@ object VersionedTable {
     val totalBytes = paths.map(p => f.getFileStatus(new Path(p)).getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val df = read(spark, root, Some(base))
-    val scanParts = df.rdd.getNumPartitions
-    val sized = if (nOut <= scanParts) df.coalesce(nOut) else df.repartition(nOut)
-    val files = writeData(spark, root, sized)
+    // coalesce merges the read's partitions and never adds any, so
+    // nOut above the scan's partition count writes that count
+    val files = writeData(spark, root, df.coalesce(nOut))
     commit(spark, root, requireBase = Some(base)) { _ => ("compact", df.schema, files) }
   }
 }

@@ -92,7 +92,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assertMatchesFullRebuild(state, root, v3)
 
     // v4: DELETE doc3 (kills pair (3,7); doc7 stays, now unpaired)
-    val (v4, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 3")
+    val (v4, _, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 3")
     state = IncrementalDedup.advance(spark, root, v3, v4, state)
     val p4 = pairsOf(state.pairs)
     assert(!p4.exists(p => p._1 == 3L || p._2 == 3L),
@@ -160,7 +160,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     VersionedTable.merge(spark, root,
       Seq(doc(2, "en", mkText(200))).toDF("doc_id", "text", "lang", "source", "n_chars"),
       Seq("doc_id"))
-    val (v2, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 7")
+    val (v2, _, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 7")
     val (touched, kept) = IncrementalDedup.advanceStored(spark, root, v1, v2, st)
     // file pruning: the delta touches ids {100, 2, 7} — the range-
     // clustered band files NOT covering those ids must survive

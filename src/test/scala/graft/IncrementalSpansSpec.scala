@@ -98,7 +98,7 @@ class IncrementalSpansSpec extends AnyFunSuite {
     assertMatchesFullRebuild(state, root, v3)
 
     // v4: DELETE doc 3 (kills its pairs; (4,5) survives)
-    val (v4, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 3")
+    val (v4, _, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 3")
     state = IncrementalSpans.advance(spark, root, v3, v4, state)
     val s4 = pairsOf(state.spans)
     assert(s4 == Set((1L, 6L), (4L, 5L)), s"unexpected v4 spans: $s4")
@@ -138,7 +138,7 @@ class IncrementalSpansSpec extends AnyFunSuite {
 
     // v3: delete 18 of the newcomers → 3 occurrences → spans return
     // for ALL remaining triples, again without touching 101/102
-    val (v3, _, _) = VersionedTable.deleteWhere(spark, root,
+    val (v3, _, _, _) = VersionedTable.deleteWhere(spark, root,
       "doc_id >= 104")
     state = IncrementalSpans.advance(spark, root, v2, v3, state)
     assert(pairsOf(state.spans) ==
@@ -167,7 +167,7 @@ class IncrementalSpansSpec extends AnyFunSuite {
       Seq("doc_id"))
     VersionedTable.append(spark, root,
       Seq(doc(43, withSpan(43, 10))).toDF("doc_id", "text", "lang", "source", "n_chars"))
-    val (v2, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 41")
+    val (v2, _, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 41")
     val (touched, keptFiles) =
       IncrementalSpans.advanceStored(spark, root, v1, v2, stored)
     // the DELETE's min/max pruning left untouched shingle files alone

@@ -85,7 +85,7 @@ class IncrementalUrlDedupSpec extends AnyFunSuite {
     assertMatchesRebuild(state, root, v3)
 
     // v4: DELETE the key-7 keeper — doc 5 takes over
-    val (v4, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 2")
+    val (v4, _, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 2")
     state = U.advance(spark, root, v3, v4, state)
     assert(U.apply(snapshot(root, v4), state).select("doc_id")
       .collect().map(_.getLong(0)).toSet.contains(5L),

@@ -121,7 +121,7 @@ class MaterializedViewSpec extends AnyFunSuite {
     val before = VersionedTable.read(spark, root).count()
     val matching = VersionedTable.read(spark, root)
       .where("doc_id < 10").count()
-    val (_, rewritten, kept) = VersionedTable.deleteWhere(spark, root, "doc_id < 10")
+    val (_, rewritten, kept, _) = VersionedTable.deleteWhere(spark, root, "doc_id < 10")
     assert(rewritten >= 1 && kept >= 1,
       s"stats should spare some files (rewrote $rewritten, kept $kept)")
     assert(VersionedTable.read(spark, root).count() == before - matching)

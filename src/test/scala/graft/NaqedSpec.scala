@@ -318,28 +318,33 @@ class NaqedSpec extends AnyFunSuite {
   }
 
   test("mutations (~ keys) append rows through the write path") {
+    import graft.sources.VersionedTable
     val out = java.nio.file.Files.createTempDirectory("naqed_mut").toString
-    val written = naqed.mutate(Map("~region" -> Seq(
+    val src = Tables(spark, sf0001, "region")
+    val written = naqed.mutateVersioned(Map("~region" -> Seq(
       Map("r_regionkey" -> 90, "r_name" -> "ATLANTIS"),
       Map("r_regionkey" -> 91, "r_name" -> "LEMURIA"))), out)
     assert(written == Map("~region" -> 2L))
-    val back = spark.read.parquet(s"$out/region.parquet")
-    assert(back.count() == 2)
+    val back = VersionedTable.read(spark, s"$out/region")
+    assert(back.count() == src.count() + 2)
     assert(back.filter(col("r_name") === "ATLANTIS").count() == 1)
     val e = intercept[IllegalArgumentException] {
-      naqed.mutate(Map("~region" -> Seq(Map("bogus" -> 1))), out)
+      naqed.mutateVersioned(Map("~region" -> Seq(Map("bogus" -> 1))), out)
     }
     assert(e.getMessage.contains("bogus"))
     // wrongly-typed value fails up-front with the field named, not
     // opaquely at execution
     val badType = intercept[IllegalArgumentException] {
-      naqed.mutate(Map("~region" -> Seq(
+      naqed.mutateVersioned(Map("~region" -> Seq(
         Map("r_regionkey" -> "not-a-number", "r_name" -> "X"))), out)
     }
     assert(badType.getMessage.contains("r_regionkey"))
     // numeric widening is accepted (Int -> declared long)
-    assert(naqed.mutate(Map("~region" -> Seq(
+    assert(naqed.mutateVersioned(Map("~region" -> Seq(
       Map("r_regionkey" -> 92, "r_name" -> "MU"))), out) == Map("~region" -> 1L))
+    // the rejected rows committed nothing: create + two inserts
+    assert(VersionedTable.versions(spark, s"$out/region").size == 3)
+    assert(VersionedTable.read(spark, s"$out/region").count() == src.count() + 3)
   }
 
   test("multimodal traversal: documents -> embeddings") {

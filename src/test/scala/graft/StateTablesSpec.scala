@@ -106,7 +106,7 @@ class StateTablesSpec extends AnyFunSuite {
         Seq(41L -> shared(9), 42L -> shared(9)): _*))
     VersionedTable.merge(spark, root, docs(1L -> shared(10)), Seq("doc_id"))
     VersionedTable.append(spark, root, docs(43L -> shared(10)))
-    val (v2, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 41")
+    val (v2, _, _, _) = VersionedTable.deleteWhere(spark, root, "doc_id = 41")
     (v1, v2)
   }
 

@@ -674,7 +674,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows() == want1)
 
     // a new committed version resumes from the cursor: only the delta
-    val (v3, _, _) = VersionedTable.deleteWhere(spark, root, "id = 2")
+    val (v3, _, _, _) = VersionedTable.deleteWhere(spark, root, "id = 2")
     drain()
     val v3feed = VersionedTable.changeFeed(spark, root, 2L, v3, Seq("id"))
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("v"),

@@ -199,7 +199,7 @@ class VersionedTableProps extends AnyFunSuite {
         .toDF("d"))
     // pre-fix this deleted nothing (rewritten=0: days-vs-micros stats
     // comparison refuted the file)
-    val (_, rewritten, _) = VersionedTable.deleteWhere(spark, r,
+    val (_, rewritten, _, _) = VersionedTable.deleteWhere(spark, r,
       "d > timestamp'2024-03-05 00:00:00'")
     assert(rewritten == 1)
     assert(VersionedTable.read(spark, r).collect().map(_.getDate(0).toString)
@@ -278,8 +278,10 @@ class VersionedTableProps extends AnyFunSuite {
             ops += s"merge ${upd.map(_._1).mkString(",")}"; cur ++ upd
           case 2 =>
             val p = randomPred(rnd, cur)
-            VersionedTable.deleteWhere(spark, r, p.sql)
-            ops += s"delete ${p.sql}"; cur.filterNot { case (id, v) => p.hit(id, v) }
+            val (_, _, _, gone) = VersionedTable.deleteWhere(spark, r, p.sql)
+            val kept = cur.filterNot { case (id, v) => p.hit(id, v) }
+            assert(gone == cur.size - kept.size, s"seed $seed: delete ${p.sql} reported $gone")
+            ops += s"delete ${p.sql}"; kept
           case 3 =>
             VersionedTable.compact(spark, r, if (rnd.nextBoolean()) 2000L else 1L << 30)
             ops += "compact"; cur
@@ -373,12 +375,12 @@ class VersionedTableProps extends AnyFunSuite {
     val r = Files.createTempDirectory("vtmordrop").toString + "/tbl"
     VersionedTable.create(spark, r,
       (1L to 30L).map(i => (i, s"x$i")).toDF("id", "v").repartitionByRange(3, col("id")))
-    val (v, touched, _) = VersionedTable.deleteWhere(spark, r, "id <= 10")
+    val (v, touched, _, _) = VersionedTable.deleteWhere(spark, r, "id <= 10")
     assert(touched == 1)
     assert(manifestPaths(r, v).size == 2 && vectored(r, v) == 0)
     assert(VersionedTable.read(spark, r).count() == 20)
     // a partial delete keeps the file, vectored
-    val (v2, _, _) = VersionedTable.deleteWhere(spark, r, "id = 15")
+    val (v2, _, _, _) = VersionedTable.deleteWhere(spark, r, "id = 15")
     assert(manifestPaths(r, v2).size == 2 && vectored(r, v2) == 1)
     assert(VersionedTable.history(spark, r).orderBy("version").collect()
       .map(_.getLong(3)).toSeq == Seq(30L, 20L, 19L))
@@ -389,7 +391,7 @@ class VersionedTableProps extends AnyFunSuite {
     val r = Files.createTempDirectory("vtmorvac").toString + "/tbl"
     VersionedTable.create(spark, r,
       (1L to 30L).map(i => (i, s"x$i")).toDF("id", "v").repartitionByRange(3, col("id")))
-    val (v1, _, _) = VersionedTable.deleteWhere(spark, r, "id % 7 = 0")
+    val (v1, _, _, _) = VersionedTable.deleteWhere(spark, r, "id % 7 = 0")
     val old = manifestPaths(r, v1)
     val v2 = VersionedTable.compact(spark, r, 1L << 30)
     assert(vectored(r, v2) == 0)

@@ -148,7 +148,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(scanned == total, "cast-wrapped column must be conservative (no pruning)")
     // and deleteWhere with the same shape deletes every matching row
     val before = VersionedTable.read(spark, root).count()
-    val (_, _, _) = VersionedTable.deleteWhere(spark, root, pred)
+    VersionedTable.deleteWhere(spark, root, pred)
     assert(VersionedTable.read(spark, root).count() ==
       before - ev.where(pred).count())
   }
@@ -192,6 +192,22 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(hist.map(_.getString(1)).toSeq == Seq("create", "compact"))
     assert(hist(1).getLong(2) < hist(0).getLong(2)) // fewer files
     assert(VersionedTable.read(spark, root).count() == 1000)
+  }
+
+  test("compact never writes more files than the snapshot's read plans") {
+    val root = tmpRoot()
+    VersionedTable.create(spark, root, spark.range(0, 200).toDF("id").repartition(4))
+    VersionedTable.append(spark, root, spark.range(200, 300).toDF("id").repartition(2))
+    val filesBefore = VersionedTable.history(spark, root).orderBy("version")
+      .collect().last.getLong(2)
+    // a one-byte target asks for one file per byte; the rewrite still
+    // only coalesces the read's partitions
+    val v = VersionedTable.compact(spark, root, 1L)
+    val head = VersionedTable.history(spark, root).orderBy("version").collect().last
+    assert(head.getLong(0) == v && head.getString(1) == "compact")
+    assert(head.getLong(2) <= filesBefore, s"${head.getLong(2)} files after, $filesBefore before")
+    assert(VersionedTable.read(spark, root).collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 300L))
   }
 
   test("concurrent appends + compacts never lose rows (conflict detection)") {
@@ -346,7 +362,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // update 1, insert 5 (merge), then delete 3 (rewrite path)
     VersionedTable.merge(spark, root,
       Seq((1L, "A2"), (5L, "e")).toDF("id", "v"), Seq("id"))
-    val (head, _, _) = VersionedTable.deleteWhere(spark, root, "id = 3")
+    val (head, _, _, _) = VersionedTable.deleteWhere(spark, root, "id = 3")
     val feed = VersionedTable.changeFeed(spark, root, v0, head, Seq("id"))
       .collect()
       .map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("id"),
