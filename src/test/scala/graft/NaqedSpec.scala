@@ -977,4 +977,55 @@ class NaqedSpec extends AnyFunSuite {
       naqed.crawl(Map("$action" -> "mix", "$budget" -> 5000, "$out" -> "/tmp/x"))
     }
   }
+
+  test("directive verbs: bad arguments fail naqed-style, naming what is valid") {
+    // one row per verb: its valid $-keys, a numeric argument given a
+    // non-number (plus any arguments that one needs), and an argument
+    // given an unknown choice with the choices it accepts
+    case class Verb(call: Map[String, Any] => Any, keys: Seq[String],
+        number: Option[String] = None, needs: Map[String, Any] = Map.empty,
+        choice: Option[(String, Any)] = None, choices: Seq[String] = Nil)
+    val verbs = Seq(
+      "curate" -> Verb(naqed.curate(_), Seq("$fractions", "$max_stop_ratio",
+        "$min_tokens", "$test_fraction"), number = Some("$min_tokens")),
+      "audit" -> Verb(naqed.audit(_), Seq("$checks"),
+        choice = Some("$checks" -> Seq("bogus")),
+        choices = Seq("duplicates", "round_numbers", "splits")),
+      "experiment" -> Verb(naqed.experiment(_), Seq("$checks"),
+        choice = Some("$checks" -> Seq("bogus")),
+        choices = Seq("srm", "balance", "welch", "cuped", "ratio_ci")),
+      "forecast" -> Verb(naqed.forecast(_), Seq("$checks"),
+        choice = Some("$checks" -> Seq("bogus")),
+        choices = Seq("holt_winters", "poisson_rate", "cusum")),
+      "retrieval" -> Verb(naqed.retrieval(_), Seq("$checks"),
+        choice = Some("$checks" -> Seq("bogus")),
+        choices = Seq("ndcg", "mrr", "map", "rrf", "rbo")),
+      "pii" -> Verb(naqed.pii(_), Seq("$action", "$min_tokens"),
+        number = Some("$min_tokens"), needs = Map("$action" -> "excise"),
+        choice = Some("$action" -> "scrub"),
+        choices = Seq("profile", "redact", "excise")),
+      "nearDedupEmbeddings" -> Verb(naqed.nearDedupEmbeddings(_),
+        Seq("$margin", "$mass_factor", "$n_cells", "$path"),
+        number = Some("$margin"), choice = Some("$path" -> "fastest"),
+        choices = Seq("auto", "exact", "ann", "ann_adaptive")),
+      "crawl" -> Verb(naqed.crawl(_), Seq("$action", "$budget", "$max_nll",
+        "$max_stop_ratio", "$min_tokens", "$out", "$weights"),
+        number = Some("$min_tokens"), choice = Some("$action" -> "wash"),
+        choices = Seq("clean", "report", "export", "lm_gate", "mix")))
+    for ((verb, v) <- verbs) {
+      def message(q: Map[String, Any]) =
+        intercept[IllegalArgumentException](v.call(q)).getMessage
+      val unknown = message(Map("$bogus" -> 1))
+      assert(("$bogus" +: v.keys).forall(unknown.contains), s"$verb: $unknown")
+      v.number.foreach { k =>
+        val m = message(v.needs + (k -> "five"))
+        assert(m.contains(k), s"$verb: $m")
+      }
+      v.choice.foreach { arg =>
+        val m = message(Map(arg))
+        assert(v.choices.forall(m.contains), s"$verb: $m")
+      }
+    }
+  }
+
 }
