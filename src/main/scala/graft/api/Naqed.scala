@@ -652,6 +652,95 @@ class Naqed(spark: SparkSession, sfDir: String) {
     }
   }
 
+  /** The one `$`-argument decoder of the directive verbs: any key of
+    * `q` outside `known` fails analysis naqed-style, listing the valid
+    * set, and each typed reader names the argument it rejects. */
+  private final class Args(verb: String, q: Map[String, Any], known: String*) {
+    private val unknown = q.keys.filterNot(known.contains)
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown $verb arguments ${unknown.mkString(", ")}; " +
+          s"valid: ${known.sorted.mkString(", ")}")
+
+    private def bad(k: String, wants: String, got: Any) =
+      throw new IllegalArgumentException(s"$k expects $wants, got $got")
+
+    def num(k: String, dflt: Double): Double = q.get(k) match {
+      case Some(n: Number) => n.doubleValue()
+      case Some(other) => bad(k, "a number", other)
+      case None => dflt
+    }
+
+    def int(k: String, dflt: Int): Int = num(k, dflt).toInt
+
+    def positiveLong(k: String): Option[Long] = q.get(k).map {
+      case n: Number if n.longValue() > 0 => n.longValue()
+      case other => bad(k, "a positive number", other)
+    }
+
+    /** `$k` as one of `choices`, `dflt` when absent. */
+    def oneOf(k: String, choices: Seq[String], dflt: String): String =
+      q.get(k) match {
+        case Some(s: String) if choices.contains(s) => s
+        case Some(other) => throw new IllegalArgumentException(
+          s"unknown $verb ${k.stripPrefix("$")} '$other'; " +
+            s"valid: ${choices.mkString(", ")}")
+        case None => dflt
+      }
+
+    def numMap(k: String): Option[Map[String, Number]] = q.get(k).map {
+      case m: Map[_, _] => m.map {
+        case (name: String, n: Number) => name -> n
+        case (name, v) => bad(k, "Map(name -> number)", s"$name -> $v")
+      }
+      case other => bad(k, "Map(name -> number)", other)
+    }
+
+    /** Rejects `$k` unless `$action` is one of `actions`. */
+    def onlyWith(action: String, k: String, actions: String*): Unit =
+      if (q.contains(k) && !actions.contains(action))
+        throw new IllegalArgumentException(
+          s"$k only applies to $$action -> ${actions.mkString(" or ")}")
+
+    /** The `$checks` list: a non-empty selection of distinct names
+      * from `all`, or all of them when absent. */
+    def checks(all: Seq[String]): Seq[String] = q.get("$checks") match {
+      case Some(xs: Seq[_]) if xs.nonEmpty =>
+        xs.find(x => !all.contains(x)).foreach(x =>
+          throw new IllegalArgumentException(
+            s"unknown $verb check '$x'; valid: ${all.mkString(", ")}"))
+        xs.diff(xs.distinct).headOption.foreach(x =>
+          throw new IllegalArgumentException(
+            s"$verb check '$x' is repeated in $$checks"))
+        xs.map(_.toString)
+      case Some(other) => throw new IllegalArgumentException(
+        s"$$checks expects a non-empty list of check names " +
+          s"(${all.mkString(", ")}), got $other")
+      case None => all
+    }
+  }
+
+  /** The one `$checks` report: the selected checks' relations in one
+    * long-format (check, metric, value) DataFrame, so callers can
+    * union/pivot it like any other relation. Each check IS its
+    * oracle-checked operator, so the API cannot drift from the verified
+    * semantics (NaqedSpec pins value equality with the direct ops).
+    * Unknown arguments, unknown or repeated check names and an empty
+    * `$checks` fail analysis naqed-style. */
+  private def checksReport(verb: String, q: Map[String, Any],
+      table: Check*): DataFrame =
+    new Args(verb, q, "$checks").checks(table.map(_.name)).map { name =>
+      val c = table.find(_.name == name).get
+      val df = c.op(spark, sfDir)
+      val cols = df.columns.filterNot(c.key.contains)
+      val metric = c.key.fold(col("m"))(k =>
+        concat_ws("_", col("m"), concat(lit(c.prefix), col(k).cast("string"))))
+      df.select(c.key.map(col).toSeq :+ expr(s"stack(${cols.length}, " +
+          cols.map(m => s"'$m', cast(`$m` AS STRING)").mkString(", ") + ")")
+          .as(Seq("m", "value")): _*)
+        .select(lit(name).as("check"), metric.as("metric"), col("value"))
+    }.reduce(_ unionByName _)
+
   /** Curation directive (naqed resolver-with-args style): the corpus
     * pipeline (ops.Curation: quality -> exact dedup -> near dedup ->
     * rebalance -> split) driven through the same `$`-argument
@@ -659,254 +748,68 @@ class Naqed(spark: SparkSession, sfDir: String) {
     * a single-row DataFrame so the whole surface stays DataFrame-
     * valued. Unknown arguments fail analysis naqed-style. */
   def curate(q: Map[String, Any] = Map.empty): (DataFrame, DataFrame, DataFrame) = {
-    val known = Set("$min_tokens", "$max_stop_ratio", "$fractions", "$test_fraction")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown curation arguments ${unknown.mkString(", ")}; " +
-          s"valid: ${known.toSeq.sorted.mkString(", ")}")
-    def num(k: String, dflt: Double): Double = q.get(k) match {
-      case Some(n: Number) => n.doubleValue()
-      case Some(other) => throw new IllegalArgumentException(
-        s"$k expects a number, got $other")
-      case None => dflt
-    }
-    val fractions = q.get("$fractions") match {
-      case Some(m: Map[_, _]) => m.map {
-        case (k: String, v: Number) => k -> v.doubleValue()
-        case (k, v) => throw new IllegalArgumentException(
-          s"$$fractions entries must be lang -> fraction, got $k -> $v")
-      }
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$fractions expects an object, got $other")
-      case None => Map.empty[String, Double]
-    }
+    val a = new Args("curation", q,
+      "$min_tokens", "$max_stop_ratio", "$fractions", "$test_fraction")
     val (train, test, rep) = graft.ops.Curation.curate(spark, sfDir,
-      minTokens = num("$min_tokens", 5).toInt,
-      maxStopRatio = num("$max_stop_ratio", 0.9),
-      fractions = fractions,
-      testFraction = num("$test_fraction", 0.1))
+      minTokens = a.int("$min_tokens", 5),
+      maxStopRatio = a.num("$max_stop_ratio", 0.9),
+      fractions = a.numMap("$fractions").fold(Map.empty[String, Double])(
+        _.map { case (lang, f) => lang -> f.doubleValue() }),
+      testFraction = a.num("$test_fraction", 0.1))
     import spark.implicits._
     (train, test, Seq(rep).toDS().toDF())
   }
 
   /** Integrity-audit directive (round 10): the §2.33 money-movement
-    * forensics behind one `$`-argument call — `$checks` selects from
-    * {duplicates, round_numbers, splits} (default: all three), the
-    * report comes back as one long-format DataFrame
-    * (check, metric, value) so callers can union/pivot it like any
-    * other relation. Each check IS the oracle-checked operator
-    * (aggDuplicatePaymentAudit / aggRoundNumberBias /
-    * aggSplitTransactionDetect), so the API surface cannot drift from
-    * the verified semantics. Unknown arguments and unknown check
-    * names fail analysis naqed-style. */
+    * forensics as one [[checksReport]] — `$checks` selects from
+    * {duplicates, round_numbers, splits} (default: all three). */
   def audit(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$checks")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown audit arguments ${unknown.mkString(", ")}; valid: $$checks")
-    val all = Seq("duplicates", "round_numbers", "splits")
-    val checks: Seq[String] = q.get("$checks") match {
-      case Some(xs: Seq[_]) => xs.map {
-        case s: String if all.contains(s) => s
-        case other => throw new IllegalArgumentException(
-          s"unknown audit check '$other'; valid: ${all.mkString(", ")}")
-      }
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$checks expects a list of check names, got $other")
-      case None => all
-    }
-    import org.apache.spark.sql.functions.{col, lit, expr}
-    def long(name: String, df: DataFrame): DataFrame = {
-      val cols = df.columns
-      df.select(expr(s"stack(${cols.length}, " +
-          cols.map(c => s"'$c', cast(`$c` AS STRING)").mkString(", ") + ")")
-          .as(Seq("metric", "value")))
-        .select(lit(name).as("check"), col("metric"), col("value"))
-    }
-    checks.map {
-      case "duplicates" =>
-        long("duplicates", graft.ops.Relational.aggDuplicatePaymentAudit(spark, sfDir))
-      case "round_numbers" =>
-        long("round_numbers", graft.ops.Relational.aggRoundNumberBias(spark, sfDir))
-      case "splits" =>
-        long("splits", graft.ops.Relational.aggSplitTransactionDetect(spark, sfDir))
-    }.reduce(_ unionByName _)
+    import graft.ops.Relational._
+    checksReport("audit", q,
+      Check("duplicates", aggDuplicatePaymentAudit),
+      Check("round_numbers", aggRoundNumberBias),
+      Check("splits", aggSplitTransactionDetect))
   }
 
-  /** Experiment-readout directive (round 11, the [[audit]] precedent
-    * applied to the §2.36 experimentation stack): ONE long-format
-    * (check, metric, value) relation covering the full A/B readout a
-    * platform runs in order — `srm` (unit-count guardrail), `balance`
-    * (pre-period SMD), `welch` (the primary difference-of-means test),
-    * `cuped` (covariate-adjusted means + variance reduction),
-    * `ratio_ci` (delta-method CI for revenue/order at the customer
-    * unit). `$checks` selects a subset; each check IS the
-    * oracle-checked operator, so the API cannot drift from verified
-    * semantics (NaqedSpec pins value equality with the direct ops).
-    * Multi-row checks (per-arm relations) are long-formatted per row
-    * with the arm folded into the metric name. */
+  /** Experiment-readout directive (round 11): the §2.36 A/B readout a
+    * platform runs in order, as one [[checksReport]] — `srm`
+    * (unit-count guardrail), `balance` (pre-period SMD), `welch` (the
+    * primary difference-of-means test), `cuped` (covariate-adjusted
+    * means + variance reduction), `ratio_ci` (delta-method CI for
+    * revenue/order at the customer unit). The per-arm checks key their
+    * metrics on the arm (`<col>_arm<arm>`). */
   def experiment(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$checks")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown experiment arguments ${unknown.mkString(", ")}; valid: $$checks")
-    val all = Seq("srm", "balance", "welch", "cuped", "ratio_ci")
-    val checks: Seq[String] = q.get("$checks") match {
-      case Some(xs: Seq[_]) => xs.map {
-        case s: String if all.contains(s) => s
-        case other => throw new IllegalArgumentException(
-          s"unknown experiment check '$other'; valid: ${all.mkString(", ")}")
-      }
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$checks expects a list of check names, got $other")
-      case None => all
-    }
-    import org.apache.spark.sql.functions.{col, lit, expr, concat, concat_ws}
-    def long(name: String, df: DataFrame): DataFrame = {
-      val cols = df.columns
-      df.select(expr(s"stack(${cols.length}, " +
-          cols.map(c => s"'$c', cast(`$c` AS STRING)").mkString(", ") + ")")
-          .as(Seq("metric", "value")))
-        .select(lit(name).as("check"), col("metric"), col("value"))
-    }
-    // per-arm relations: fold the arm into the metric so the long
-    // format stays (check, metric, value) with unique metric keys
-    def longPerArm(name: String, df: DataFrame): DataFrame = {
-      val cols = df.columns.filterNot(_ == "arm")
-      df.select(col("arm"), expr(s"stack(${cols.length}, " +
-          cols.map(c => s"'$c', cast(`$c` AS STRING)").mkString(", ") + ")")
-          .as(Seq("m", "value")))
-        .select(lit(name).as("check"),
-          concat_ws("_", col("m"), concat(lit("arm"), col("arm"))).as("metric"),
-          col("value"))
-    }
-    checks.map {
-      case "srm" =>
-        long("srm", graft.ops.Relational.aggSrmCheck(spark, sfDir))
-      case "balance" =>
-        long("balance", graft.ops.Relational.aggCovariateBalance(spark, sfDir))
-      case "welch" =>
-        long("welch", graft.ops.Relational.aggWelchTtest(spark, sfDir))
-      case "cuped" =>
-        longPerArm("cuped", graft.ops.Relational.aggCupedAdjust(spark, sfDir))
-      case "ratio_ci" =>
-        longPerArm("ratio_ci", graft.ops.Relational.aggRatioDeltaCi(spark, sfDir))
-    }.reduce(_ unionByName _)
+    import graft.ops.Relational._
+    checksReport("experiment", q,
+      Check("srm", aggSrmCheck),
+      Check("balance", aggCovariateBalance),
+      Check("welch", aggWelchTtest),
+      Check("cuped", aggCupedAdjust, Some("arm"), "arm"),
+      Check("ratio_ci", aggRatioDeltaCi, Some("arm"), "arm"))
   }
 
-  /** Forecasting & guardrail directive (round 12): the §2.37 family
-    * behind the same `$checks` shape as [[audit]]/[[experiment]] —
-    * `$checks` selects from {holt_winters, poisson_rate, cusum}
-    * (default: all three), returned as one long-format
-    * (check, metric, value) relation. Each check IS the
-    * oracle-checked operator (tsHoltWinters / aggPoissonRateTest /
-    * tsCusumTop), so the API exposes the forecasting stack with zero
-    * drift from the verified engine. Multi-row checks fold their row
-    * key into the metric name (the longPerArm convention): the
-    * 7-step forecast keys on the horizon h, the CUSUM top-20 on the
-    * day. Unknown arguments / check names fail analysis naqed-style. */
-  def forecast(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$checks")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown forecast arguments ${unknown.mkString(", ")}; valid: $$checks")
-    val all = Seq("holt_winters", "poisson_rate", "cusum")
-    val checks: Seq[String] = q.get("$checks") match {
-      case Some(xs: Seq[_]) => xs.map {
-        case s: String if all.contains(s) => s
-        case other => throw new IllegalArgumentException(
-          s"unknown forecast check '$other'; valid: ${all.mkString(", ")}")
-      }
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$checks expects a list of check names, got $other")
-      case None => all
-    }
-    import org.apache.spark.sql.functions.{col, lit, expr, concat_ws}
-    def long(name: String, df: DataFrame): DataFrame = {
-      val cols = df.columns
-      df.select(expr(s"stack(${cols.length}, " +
-          cols.map(c => s"'$c', cast(`$c` AS STRING)").mkString(", ") + ")")
-          .as(Seq("metric", "value")))
-        .select(lit(name).as("check"), col("metric"), col("value"))
-    }
-    // multi-row relations: fold the row key into the metric so the
-    // long format stays (check, metric, value) with unique keys
-    def longKeyed(name: String, df: DataFrame, key: String): DataFrame = {
-      val cols = df.columns.filterNot(_ == key)
-      df.select(col(key), expr(s"stack(${cols.length}, " +
-          cols.map(c => s"'$c', cast(`$c` AS STRING)").mkString(", ") + ")")
-          .as(Seq("m", "value")))
-        .select(lit(name).as("check"),
-          concat_ws("_", col("m"), col(key).cast("string")).as("metric"),
-          col("value"))
-    }
-    checks.map {
-      case "holt_winters" =>
-        longKeyed("holt_winters",
-          graft.ops.TimeSeries.tsHoltWinters(spark, sfDir), "h")
-      case "poisson_rate" =>
-        long("poisson_rate",
-          graft.ops.Relational.aggPoissonRateTest(spark, sfDir))
-      case "cusum" =>
-        longKeyed("cusum", graft.ops.TimeSeries.tsCusumTop(spark, sfDir), "dt")
-    }.reduce(_ unionByName _)
-  }
+  /** Forecasting & guardrail directive (round 12): the §2.37 family as
+    * one [[checksReport]] — `$checks` selects from {holt_winters,
+    * poisson_rate, cusum}. The 7-step forecast keys its metrics on the
+    * horizon h, the CUSUM top-20 on the day. */
+  def forecast(q: Map[String, Any] = Map.empty): DataFrame =
+    checksReport("forecast", q,
+      Check("holt_winters", graft.ops.TimeSeries.tsHoltWinters, Some("h")),
+      Check("poisson_rate", graft.ops.Relational.aggPoissonRateTest),
+      Check("cusum", graft.ops.TimeSeries.tsCusumTop, Some("dt")))
 
   /** Retrieval-eval directive (round 12): the retrieval-quality stack
-    * behind the same `$checks` shape as [[audit]]/[[experiment]]/
-    * [[forecast]] — `$checks` selects from {ndcg, mrr, map, rrf, rbo}
-    * (default: all five), one long-format (check, metric, value)
-    * relation. Each check IS the oracle-checked operator
-    * (simNdcgAt10 / simMrrAt10 / simMapAt10 / simRrfFusion /
-    * simRboRankings), so the API cannot drift from verified
-    * semantics; per-probe relations key the metric on the probe id,
-    * the fused ranking on the doc. Unknown arguments / check names
-    * fail analysis naqed-style. */
+    * as one [[checksReport]] — `$checks` selects from {ndcg, mrr, map,
+    * rrf, rbo}. Per-probe relations key the metric on the probe id,
+    * the fused ranking on the doc. */
   def retrieval(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$checks")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown retrieval arguments ${unknown.mkString(", ")}; valid: $$checks")
-    val all = Seq("ndcg", "mrr", "map", "rrf", "rbo")
-    val checks: Seq[String] = q.get("$checks") match {
-      case Some(xs: Seq[_]) => xs.map {
-        case s: String if all.contains(s) => s
-        case other => throw new IllegalArgumentException(
-          s"unknown retrieval check '$other'; valid: ${all.mkString(", ")}")
-      }
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$checks expects a list of check names, got $other")
-      case None => all
-    }
-    import org.apache.spark.sql.functions.{col, lit, expr, concat_ws}
-    def longKeyed(name: String, df: DataFrame, key: String): DataFrame = {
-      val cols = df.columns.filterNot(_ == key)
-      df.select(col(key), expr(s"stack(${cols.length}, " +
-          cols.map(c => s"'$c', cast(`$c` AS STRING)").mkString(", ") + ")")
-          .as(Seq("m", "value")))
-        .select(lit(name).as("check"),
-          concat_ws("_", col("m"), col(key).cast("string")).as("metric"),
-          col("value"))
-    }
-    checks.map {
-      case "ndcg" =>
-        longKeyed("ndcg", graft.ops.TextSim.simNdcgAt10(spark, sfDir), "pid")
-      case "mrr" =>
-        longKeyed("mrr", graft.ops.TextSim.simMrrAt10(spark, sfDir), "pid")
-      case "map" =>
-        longKeyed("map", graft.ops.TextSim.simMapAt10(spark, sfDir), "pid")
-      case "rrf" =>
-        longKeyed("rrf", graft.ops.TextSim.simRrfFusion(spark, sfDir),
-          "doc_id")
-      case "rbo" =>
-        longKeyed("rbo", graft.ops.TextSim.simRboRankings(spark, sfDir),
-          "pid")
-    }.reduce(_ unionByName _)
+    import graft.ops.TextSim._
+    checksReport("retrieval", q,
+      Check("ndcg", simNdcgAt10, Some("pid")),
+      Check("mrr", simMrrAt10, Some("pid")),
+      Check("map", simMapAt10, Some("pid")),
+      Check("rrf", simRrfFusion, Some("doc_id")),
+      Check("rbo", simRboRankings, Some("pid")))
   }
 
   /** PII & corpus-cleanse directive (round 13): the §2.46 transforms
@@ -924,27 +827,10 @@ class Naqed(spark: SparkSession, sfDir: String) {
     *    pipeline_span_excised_tokens).
     * Unknown arguments/actions fail analysis naqed-style. */
   def pii(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$action", "$min_tokens")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown pii arguments ${unknown.mkString(", ")}; " +
-          "valid: $action, $min_tokens")
-    val action = q.get("$action") match {
-      case Some(s: String) if Set("profile", "redact", "excise")(s) => s
-      case Some(other) => throw new IllegalArgumentException(
-        s"unknown pii action '$other'; valid: profile, redact, excise")
-      case None => "profile"
-    }
-    val minTok = q.get("$min_tokens") match {
-      case Some(n: Number) => n.intValue()
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$min_tokens expects a number, got $other")
-      case None => 12
-    }
-    if (q.contains("$min_tokens") && action != "excise")
-      throw new IllegalArgumentException(
-        "$min_tokens only applies to $action -> excise")
+    val a = new Args("pii", q, "$action", "$min_tokens")
+    val action = a.oneOf("$action", Seq("profile", "redact", "excise"), "profile")
+    val minTok = a.int("$min_tokens", 12)
+    a.onlyWith(action, "$min_tokens", "excise")
     action match {
       case "profile" =>
         graft.ops.Curation.piiProfile(graft.Tables(spark, sfDir, "documents"))
@@ -962,47 +848,22 @@ class Naqed(spark: SparkSession, sfDir: String) {
     * switch at the measured SCALING.md crossover (exact block-grid
     * below ~50k items where it is both cheaper and recall-1.0, the
     * FIXED-nprobe ANN pipeline — the measured α-1.33 scale path —
-    * above it); `$path -> "exact"|"ann"` pins a side,
+    * above it); `$path -> "exact"|"ann"` pins a side, and
     * `$path -> "ann_adaptive"` opts into the density-adaptive IVFADC
-    * variant (recall knob; measured α 2.08 — never chosen by auto),
-    * and the legacy `$exact -> true/false` boolean maps to the same.
-    * `$mass_factor` widens adaptive probing, `$margin` widens
+    * variant (recall knob; measured α 2.08 — never chosen by auto).
+    * The retired `$exact` boolean alias of `$path` fails as an unknown
+    * argument. `$mass_factor` widens adaptive probing, `$margin` widens
     * the PQ-code prefilter band, `$n_cells` sizes the IVF grid.
     * Returns the kept corpus. Unknown arguments fail analysis
     * naqed-style. */
   def nearDedupEmbeddings(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$n_cells", "$mass_factor", "$margin", "$exact", "$path")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
-      throw new IllegalArgumentException(
-        s"unknown near-dedup arguments ${unknown.mkString(", ")}; " +
-          s"valid: ${known.toSeq.sorted.mkString(", ")}")
-    if (q.contains("$exact") && q.contains("$path"))
-      throw new IllegalArgumentException(
-        "$exact and $path are aliases; pass only one")
-    def num(k: String, dflt: Double): Double = q.get(k) match {
-      case Some(n: Number) => n.doubleValue()
-      case Some(other) => throw new IllegalArgumentException(
-        s"$k expects a number, got $other")
-      case None => dflt
-    }
-    val path = q.get("$path") match {
-      case Some(p: String)
-        if Set("auto", "exact", "ann", "ann_adaptive")(p) => p
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$path expects one of auto, exact, ann, ann_adaptive; got $other")
-      case None => q.get("$exact") match {
-        case Some(b: Boolean) => if (b) "exact" else "ann"
-        case Some(other) => throw new IllegalArgumentException(
-          s"$$exact expects a boolean, got $other")
-        case None => "auto"
-      }
-    }
+    val a = new Args("near-dedup", q, "$n_cells", "$mass_factor", "$margin", "$path")
+    val path = a.oneOf("$path", Seq("auto", "exact", "ann", "ann_adaptive"), "auto")
     graft.ops.Curation.annNearDedup(spark, sfDir, table("embeddings"),
       idCol = "vec_id",
-      nCells = num("$n_cells", 16).toInt,
-      massFactor = num("$mass_factor", 8.0),
-      margin = num("$margin", 0.05),
+      nCells = a.int("$n_cells", 16),
+      massFactor = a.num("$mass_factor", 8.0),
+      margin = a.num("$margin", 0.05),
       path = path)
   }
 
@@ -1020,58 +881,37 @@ class Naqed(spark: SparkSession, sfDir: String) {
     * training shards (ops.Export): returns the shard MANIFEST; when
     * `$out -> dir` is supplied the shards are also written as
     * hive-partitioned parquet (`$budget` tokens per shard, default
-    * 2048 — `$out`/`$budget` are export-only arguments, rejected
-    * otherwise). Unknown arguments fail analysis naqed-style. */
+    * 2048). `$action -> "lm_gate"` drops cleaned docs above `$max_nll`
+    * (default 3.5); `$action -> "mix"` draws a `$budget`-token source
+    * mixture weighted by `$weights`. An argument given with another
+    * action, and any unknown argument, fails analysis naqed-style. */
   def crawl(q: Map[String, Any] = Map.empty): DataFrame = {
-    val known = Set("$action", "$min_tokens", "$max_stop_ratio",
+    val a = new Args("crawl", q, "$action", "$min_tokens", "$max_stop_ratio",
       "$budget", "$out", "$max_nll", "$weights")
-    val unknown = q.keys.filterNot(known.contains)
-    if (unknown.nonEmpty)
+    val action = a.oneOf("$action",
+      Seq("clean", "report", "export", "lm_gate", "mix"), "clean")
+    a.onlyWith(action, "$budget", "export", "mix")
+    a.onlyWith(action, "$out", "export")
+    a.onlyWith(action, "$max_nll", "lm_gate")
+    a.onlyWith(action, "$weights", "mix")
+    val minTok = a.int("$min_tokens", 5)
+    val maxStop = a.num("$max_stop_ratio", 0.9)
+    val budget = a.positiveLong("$budget")
+    val maxNll = a.num("$max_nll", 3.5)
+    val weights = a.numMap("$weights")
+    if (weights.exists(_.isEmpty))
+      throw new IllegalArgumentException("$weights must not be empty")
+    if (action == "mix" && budget.isEmpty)
       throw new IllegalArgumentException(
-        s"unknown crawl arguments ${unknown.mkString(", ")}; " +
-          "valid: $action, $min_tokens, $max_stop_ratio, $budget, $out, " +
-          "$max_nll, $weights")
-    val action = q.get("$action") match {
-      case Some(s: String)
-        if Set("clean", "report", "export", "lm_gate", "mix")(s) => s
-      case Some(other) => throw new IllegalArgumentException(
-        s"unknown crawl action '$other'; valid: clean, report, export, " +
-          "lm_gate, mix")
-      case None => "clean"
-    }
-    if (!Set("export", "mix")(action) &&
-        (q.contains("$budget") || q.contains("$out")))
-      throw new IllegalArgumentException(
-        "$budget/$out only apply to $action -> export (or $budget to mix)")
-    if (action == "mix" && q.contains("$out"))
-      throw new IllegalArgumentException("$out only applies to $action -> export")
-    if (action != "lm_gate" && q.contains("$max_nll"))
-      throw new IllegalArgumentException(
-        "$max_nll only applies to $action -> lm_gate")
-    if (action != "mix" && q.contains("$weights"))
-      throw new IllegalArgumentException(
-        "$weights only applies to $action -> mix")
-    val minTok = q.get("$min_tokens") match {
-      case Some(n: Number) => n.intValue()
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$min_tokens expects a number, got $other")
-      case None => 5
-    }
-    val maxStop = q.get("$max_stop_ratio") match {
-      case Some(n: Number) => n.doubleValue()
-      case Some(other) => throw new IllegalArgumentException(
-        s"$$max_stop_ratio expects a number, got $other")
-      case None => 0.9
-    }
+        "$action -> mix requires $budget (total tokens)")
+    val docs = graft.Tables(spark, sfDir, "documents")
+    // pure-transform path: no report counts, no persists
+    lazy val cleaned = graft.ops.Curation.crawl(docs, "text", minTok, maxStop,
+      withReport = false)._1
     action match {
-      case "clean" =>
-        // pure-transform path: no report counts, no persists
-        graft.ops.Curation.crawl(graft.Tables(spark, sfDir, "documents"),
-          "text", minTok, maxStop, withReport = false)._1
+      case "clean" => cleaned
       case "report" =>
-        val rep = graft.ops.Curation.crawl(
-          graft.Tables(spark, sfDir, "documents"),
-          "text", minTok, maxStop)._2.get
+        val rep = graft.ops.Curation.crawl(docs, "text", minTok, maxStop)._2.get
         import spark.implicits._
         Seq(("input", rep.input),
           ("url_deduped", rep.urlDeduped),
@@ -1080,15 +920,7 @@ class Naqed(spark: SparkSession, sfDir: String) {
           ("pii_masked_docs", rep.piiMaskedDocs))
           .toDF("stage", "n_docs")
       case "export" =>
-        val budget = q.get("$budget") match {
-          case Some(n: Number) if n.longValue() > 0 => n.longValue()
-          case Some(other) => throw new IllegalArgumentException(
-            s"$$budget expects a positive number of tokens, got $other")
-          case None => 2048L
-        }
-        val cleaned = graft.ops.Curation.crawl(
-          graft.Tables(spark, sfDir, "documents"),
-          "text", minTok, maxStop, withReport = false)._1
+        val perShard = budget.getOrElse(2048L)
         q.get("$out") match {
           case Some(dir: String) =>
             // the query-facing export REFUSES an existing non-empty
@@ -1103,63 +935,30 @@ class Naqed(spark: SparkSession, sfDir: String) {
               throw new IllegalArgumentException(
                 s"$$out path already exists and is non-empty: $dir — " +
                   "refusing to overwrite; export to a fresh directory")
-            graft.ops.Export.exportShards(cleaned, dir, budget)
+            graft.ops.Export.exportShards(cleaned, dir, perShard)
           case Some(other) => throw new IllegalArgumentException(
             s"$$out expects a directory path string, got $other")
           case None =>
             graft.ops.Export.manifest(
-              graft.ops.Export.assignShards(cleaned, budget))
+              graft.ops.Export.assignShards(cleaned, perShard))
         }
       case "lm_gate" =>
-        // perplexity gate (round 16): clean, then drop docs whose
-        // mean bigram KN NLL exceeds $max_nll — the SAME train-bucket
-        // LM and doc scoring as pipeline_kneser_ney_nll (one formula,
-        // no drift; Curation.lmFilter)
-        val maxNll = q.get("$max_nll") match {
-          case Some(n: Number) => n.doubleValue()
-          case Some(other) => throw new IllegalArgumentException(
-            s"$$max_nll expects a number (mean NLL in nats), got $other")
-          case None => 3.5
-        }
-        val cleaned = graft.ops.Curation.crawl(
-          graft.Tables(spark, sfDir, "documents"),
-          "text", minTok, maxStop, withReport = false)._1
+        // perplexity gate (round 16): drop docs whose mean bigram KN
+        // NLL exceeds $max_nll — the SAME train-bucket LM and doc
+        // scoring as pipeline_kneser_ney_nll (one formula, no drift;
+        // Curation.lmFilter)
         graft.ops.Curation.lmFilter(cleaned,
-          graft.ops.Pipelines.knTrainOn(
-            graft.Tables(spark, sfDir, "documents")), maxNll)
+          graft.ops.Pipelines.knTrainOn(docs), maxNll)
       case "mix" =>
-        // weighted token-budgeted source mixture (round 16): clean,
-        // then Curation.mixByTokens — $budget (REQUIRED) total tokens,
-        // $weights an optional Map(source -> number) (default weight 1
-        // for unlisted sources); returns the per-source MANIFEST
-        val budget = q.get("$budget") match {
-          case Some(n: Number) if n.longValue() > 0 => n.longValue()
-          case Some(other) => throw new IllegalArgumentException(
-            s"$$budget expects a positive number of tokens, got $other")
-          case None => throw new IllegalArgumentException(
-            "$action -> mix requires $budget (total tokens)")
+        // weighted token-budgeted source mixture (round 16):
+        // Curation.mixByTokens over $budget total tokens, weight 1 for
+        // sources $weights does not list; returns the per-source
+        // MANIFEST
+        val weightCol = weights.getOrElse(Map.empty).foldLeft(lit(1L)) {
+          case (acc, (src, n)) =>
+            when(col("source") === src, lit(n.longValue())).otherwise(acc)
         }
-        val weightCol = q.get("$weights") match {
-          case Some(m: Map[_, _]) =>
-            if (m.isEmpty) throw new IllegalArgumentException(
-              "$weights must not be empty")
-            m.foldLeft(org.apache.spark.sql.functions.lit(1L)) {
-              case (acc, (src: String, n: Number)) =>
-                org.apache.spark.sql.functions
-                  .when(org.apache.spark.sql.functions.col("source") === src,
-                    org.apache.spark.sql.functions.lit(n.longValue()))
-                  .otherwise(acc)
-              case (_, (k, v)) => throw new IllegalArgumentException(
-                s"$$weights expects Map(source -> number), got ($k -> $v)")
-            }
-          case Some(other) => throw new IllegalArgumentException(
-            s"$$weights expects Map(source -> number), got $other")
-          case None => org.apache.spark.sql.functions.lit(1L)
-        }
-        val cleaned = graft.ops.Curation.crawl(
-          graft.Tables(spark, sfDir, "documents"),
-          "text", minTok, maxStop, withReport = false)._1
-        graft.ops.Curation.mixByTokens(cleaned, budget, weightCol)._2
+        graft.ops.Curation.mixByTokens(cleaned, budget.get, weightCol)._2
     }
   }
 
@@ -1415,6 +1214,12 @@ class Naqed(spark: SparkSession, sfDir: String) {
 }
 
 object Naqed {
+  /** One `$checks` entry: the check's name, the oracle-checked operator
+    * it runs, and — for a multi-row relation — the row key folded into
+    * each metric name as `<col>_<prefix><key>`. */
+  private final case class Check(name: String, op: graft.ops.Q,
+      key: Option[String] = None, prefix: String = "")
+
   /** FK edges: (table, relationName) -> (localKey, remoteKey). */
   val forward: Map[(String, String), (String, String)] = Map(
     ("customer", "nation") -> ("c_nationkey", "n_nationkey"),

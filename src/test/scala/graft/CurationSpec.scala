@@ -130,7 +130,8 @@ class CurationSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       annNearDedup(spark, sf0001, emb, path = "bogus")
     }
-    // API surface: $path validated, $exact/$path are exclusive aliases
+    // API surface: $path validated; the retired $exact alias of $path
+    // is now an unknown argument
     val api = new graft.api.Naqed(spark, sf0001)
     assert(ids(api.nearDedupEmbeddings(Map("$path" -> "auto"))) == auto)
     intercept[IllegalArgumentException] {

@@ -1028,4 +1028,27 @@ class NaqedSpec extends AnyFunSuite {
     }
   }
 
+  /** The four `$checks` verbs with one valid check name each. */
+  private def checkVerbs =
+    Seq[(String, Map[String, Any] => org.apache.spark.sql.DataFrame, String)](
+      ("audit", naqed.audit(_), "splits"),
+      ("experiment", naqed.experiment(_), "srm"),
+      ("forecast", naqed.forecast(_), "cusum"),
+      ("retrieval", naqed.retrieval(_), "ndcg"))
+
+  test("$checks: an empty list fails naqed-style, naming the valid checks") {
+    for ((verb, call, check) <- checkVerbs) {
+      val e = intercept[IllegalArgumentException](call(Map("$checks" -> Seq())))
+      assert(e.getMessage.contains("$checks") && e.getMessage.contains(check),
+        s"$verb: ${e.getMessage}")
+    }
+  }
+
+  test("$checks: a repeated check name fails naqed-style") {
+    for ((verb, call, check) <- checkVerbs) {
+      val e = intercept[IllegalArgumentException](
+        call(Map("$checks" -> Seq(check, check))))
+      assert(e.getMessage.contains(s"'$check'"), s"$verb: ${e.getMessage}")
+    }
+  }
 }
